@@ -9,9 +9,6 @@ already PAX-like — so they intentionally do not appear here.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
 import weakref
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -20,6 +17,7 @@ from types import SimpleNamespace
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from mutable_spark import staging
 from mutable_spark.session import apply_runtime_confs
 
 TABLE_NAMES = (
@@ -36,9 +34,9 @@ TABLE_NAMES = (
 )
 
 
-#: (session id, sf_dir, table) → DataFrame. Re-reading parquet footers and
-#: re-deriving the frame per query costs ~100 ms each on local runs; the
-#: logical plan is immutable so sharing it is free.
+#: (session id, sf_dir, table, source size and mtime_ns) → DataFrame: the
+#: logical plan is immutable, so sharing it saves ~100 ms of footer reads
+#: per query; a source rewritten in place gets a fresh frame.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 # ---------------------------------------------------------------------------
@@ -168,9 +166,8 @@ def _tune_aqe(spark: SparkSession, sf_dir: str, inflation: float = 1.0) -> None:
 # many the session has. The reference has the same ingest boundary — IMPORT
 # copies external data into its own store layout before queries run
 # (`src/mutable.cpp` IMPORT DSV) — so we do the analogous thing once per
-# source file: rewrite it as _RELAYOUT_PARTS splittable files in a local
-# cache, fingerprinted by (path, size, mtime) so a testdata refresh
-# invalidates it (the VERDICT r2 stale-cache lesson, plans/dialect_tpch.py).
+# source file: rewrite it as _RELAYOUT_PARTS splittable files, staged by
+# source identity (`staging.py`) so a testdata refresh invalidates it.
 # Pure row movement: values, types and nullability are bit-identical, and
 # every oracle-paired aggregate is partition-order-independent (decimal sums,
 # per-row folds, min/max — see operators/* docstrings), so oracle parity is
@@ -186,48 +183,30 @@ _RELAYOUT_PARTS = 8  # measured sweet spot at sf0.1 on local[32]: 32-way
 # pipelines, python workers) at a quarter of the task count. On a real
 # cluster the ingest job would target ≥128 MB splits instead.
 _RELAYOUT_MIN_ROWS = 2000  # below this a single task wins; don't relayout
-_RELAYOUT_DIR = Path(
-    os.environ.get(
-        "SPARK_GRAFT_RELAYOUT_DIR",
-        str(Path(__file__).resolve().parent.parent / ".relayout"),
-    )
-)
 
 
-def _maybe_relayout(spark: SparkSession, src: Path) -> Path:
-    """Return a path to an ``_RELAYOUT_PARTS``-way splittable copy of ``src``, or ``src``.
-
-    The copy is built at most once per (file identity, layout version):
-    concurrent builders race on an atomic directory rename and the loser
-    discards its attempt.
-    """
+def _maybe_relayout(spark: SparkSession, src: Path) -> str:
+    """Path of an ``_RELAYOUT_PARTS``-way splittable copy of ``src``, staged
+    once per source identity; ``src`` itself when not worth it or on failure."""
     try:
         import pyarrow.parquet as pq
 
         meta = pq.ParquetFile(src).metadata
-    except Exception:
-        return src  # directory dataset or unreadable footer: leave as-is
-    if meta.num_rows < _RELAYOUT_MIN_ROWS or meta.num_row_groups >= 8:
-        return src
-    st = src.stat()
-    fp = hashlib.sha256(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{_RELAYOUT_PARTS}:v1".encode()
-    ).hexdigest()[:16]
-    dest = _RELAYOUT_DIR / f"{src.stem}-{fp}.parquet"
-    if (dest / "_SUCCESS").exists():
-        return dest
-    tmp = _RELAYOUT_DIR / f".build-{src.stem}-{fp}-{os.getpid()}"
-    try:
-        (
-            spark.read.parquet(str(src))
-            .repartition(_RELAYOUT_PARTS)
-            .write.mode("overwrite")
-            .parquet(str(tmp))
+        if meta.num_rows < _RELAYOUT_MIN_ROWS or meta.num_row_groups >= 8:
+            return str(src)
+        return staging.staged(
+            f"relayout-{src.stem}",
+            [src],
+            f"relayout:{_RELAYOUT_PARTS}:v1",
+            lambda tmp: (
+                spark.read.parquet(str(src))
+                .repartition(_RELAYOUT_PARTS)
+                .write.mode("overwrite")
+                .parquet(tmp)
+            ),
         )
-        os.rename(tmp, dest)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return dest if (dest / "_SUCCESS").exists() else src
+    except Exception:  # directory dataset, unreadable footer or failed build
+        return str(src)
 
 
 #: declared shuffle blow-up of the word-shingle / rolling-gram tiers: a
@@ -259,11 +238,12 @@ def load_table(
         app = spark.sparkContext.applicationId
     except Exception:
         app = id(spark)
-    key = (app, sf_dir.rstrip("/"), name)
+    src = Path(sf_dir.rstrip("/")) / f"{name}.parquet"
+    st = src.stat() if src.exists() else None
+    key = (app, sf_dir.rstrip("/"), name, st and (st.st_size, st.st_mtime_ns))
     if key in _TABLE_CACHE:
         return _TABLE_CACHE[key]
-    path = _maybe_relayout(spark, Path(sf_dir.rstrip("/")) / f"{name}.parquet")
-    df = spark.read.parquet(str(path))
+    df = spark.read.parquet(_maybe_relayout(spark, src))
     if name == "events" and dict(df.dtypes).get("ts") in ("bigint", "long"):
         df = df.withColumn(
             "ts",
@@ -294,7 +274,7 @@ def table_backing_path(spark: SparkSession, sf_dir: str, name: str) -> str | Non
     file-zone index (`dialect/engine.py`)."""
     if name == "events":
         return None
-    return str(_maybe_relayout(spark, Path(sf_dir.rstrip("/")) / f"{name}.parquet"))
+    return _maybe_relayout(spark, Path(sf_dir.rstrip("/")) / f"{name}.parquet")
 
 
 @dataclass

@@ -19,6 +19,7 @@ Two concerns live here:
 
 from __future__ import annotations
 
+import itertools
 import os
 
 from pyspark.sql import Column
@@ -183,35 +184,6 @@ def _unrolled_dot(a: Column, b: Column, dim: int) -> Column:
     return acc
 
 
-#: (gateway id, str(a), str(b), dim) → built adaptive-dot Column.
-#: Building the unrolled tree costs ~190 py4j round-trips (~0.3-0.6 s per
-#: call site) — measured to DOMINATE the win when rebuilt per query
-#: invocation (sim_knn_join DataFrame build 0.18 → 1.87 s). Column trees
-#: here are UNRESOLVED (every call site passes F.col()-rooted
-#: expressions, whose render is canonical), immutable, and reusable
-#: across plans and sessions within a process, so one build per
-#: call-site expression per process amortizes to nothing. Do not pass
-#: DataFrame-resolved columns (df["x"]) into vec_dot from new call
-#: sites: their render drops the plan id and could collide in this
-#: cache. The key's leading component is the identity of the live py4j
-#: gateway (r16, advice item): a cached Column holds JVM object refs, so
-#: a torn-down-and-restarted gateway in a long-lived process must not be
-#: served another gateway's stale refs — a new gateway gets a fresh
-#: build, and dead-gateway entries are dropped eagerly (the cache stays
-#: bounded by the finite call sites of ONE gateway).
-_DOT_EXPR_CACHE: dict[tuple[int, str, str, int], Column] = {}
-
-
-def _dot_cache_gateway() -> int:
-    """Identity of the active py4j gateway (0 before any JVM exists —
-    Column building would fail there anyway, so collisions on 0 are
-    unreachable in practice)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    return id(sc._gateway) if sc is not None else 0
-
-
 def vec_dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Left-to-right fold dot product in DOUBLE (bit-matches list_reduce).
 
@@ -233,26 +205,18 @@ def vec_dot(a: Column, b: Column, dim: int | None = None) -> Column:
     overheads (plan/codegen size) cost more than the interpreted fold —
     dedup_multiprobe_sweep read +0.56 s with a global default. Hot sites
     pass `_DOT_UNROLL_DIM`; everything else keeps the fold."""
+    # memoized on the operands' renders (`memo_exprs`): rebuilding the
+    # unrolled tree per query costs ~190 py4j round-trips (sim_knn_join
+    # build 0.18 → 1.87 s). Call sites pass F.col()-rooted operands; a
+    # df["x"] render drops its plan id and could collide.
     if dim is None or dim <= 0:
-        # the fold build costs ~30 ms of py4j (zip_with + aggregate HOF
-        # plumbing) and e.g. dedup_multiprobe_sweep builds 7 of them per
-        # query — memoized under the same render-keyed contract as the
-        # unrolled path (every call site passes F.col()-rooted
-        # expressions; see _DOT_EXPR_CACHE note above)
-        return memo_exprs(
-            ("fold_dot", str(a), str(b)), lambda: _fold_dot(a, b)
-        )
-    gw = _dot_cache_gateway()
-    key = (gw, str(a), str(b), dim)
-    c = _DOT_EXPR_CACHE.get(key)
-    if c is None:
-        for stale in [k for k in _DOT_EXPR_CACHE if k[0] != gw]:
-            del _DOT_EXPR_CACHE[stale]
-        c = F.when(
+        return memo_exprs(("fold_dot", str(a), str(b)), lambda: _fold_dot(a, b))
+    return memo_exprs(
+        ("unrolled_dot", str(a), str(b), dim),
+        lambda: F.when(
             (F.size(a) == dim) & (F.size(b) == dim), _unrolled_dot(a, b, dim)
-        ).otherwise(_fold_dot(a, b))
-        _DOT_EXPR_CACHE[key] = c
-    return c
+        ).otherwise(_fold_dot(a, b)),
+    )
 
 
 def vec_norm(a: Column, dim: int | None = None) -> Column:
@@ -284,17 +248,28 @@ def vec_cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.try_divide(vec_dot(a, b, dim), vec_norm(a, dim) * vec_norm(b, dim))
 
 
-#: (gateway id, *site key) → frame-independent Column tree(s). The
-#: `_DOT_EXPR_CACHE` mechanism generalized (r16): at sf0.1 several bench
-#: rows spend MORE wall time in py4j Column construction than in query
-#: execution (dedup_simhash: 1.6 s of its 1.8 s build is the 64
-#: bit-vote aggregates + chunk packing; the k-gram zip_with chains cost
-#: ~0.3-0.5 s per build across six rows). Any Column built purely from
-#: F.col(fixed-name)/F.lit is unresolved and immutable, so one build
-#: per process serves every plan. Same contract as _DOT_EXPR_CACHE:
-#: never memoize DataFrame-resolved columns or data-dependent literals;
-#: keyed on the live gateway so a restarted JVM gets a fresh build.
+#: (gateway token, *site key) → frame-independent Column tree(s). Py4j
+#: Column construction can outweigh execution (dedup_simhash: 1.6 s of a
+#: 1.8 s build; the k-gram zip_with chains ~0.3-0.5 s per build); a Column
+#: built from F.col(fixed-name)/F.lit is unresolved and immutable, so one
+#: build per process serves every plan. Cached Columns hold JVM refs, so
+#: entries are keyed on a token stored on the live gateway object (never
+#: its recyclable address) and dead-gateway entries are dropped eagerly.
 _EXPR_MEMO: dict[tuple, object] = {}
+_GATEWAY_TOKENS = itertools.count(1)
+
+
+def _gateway_token() -> int:
+    """Token stored on the active py4j gateway (0 before any JVM exists)."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return 0
+    # vars(), not hasattr: a JavaGateway forwards attribute misses to the JVM
+    if "_memo_token" not in vars(sc._gateway):
+        sc._gateway._memo_token = next(_GATEWAY_TOKENS)
+    return sc._gateway._memo_token
 
 
 def memo_exprs(key: tuple, build):
@@ -304,8 +279,12 @@ def memo_exprs(key: tuple, build):
     (F.col/F.lit roots — no df["x"], no values read from data), so the
     cached object is equivalent to rebuilding it: plans are unchanged
     (pinned byte-identical in plans/r16), only the construction-side
-    py4j round-trips are saved."""
-    gw = _dot_cache_gateway()
+    py4j round-trips are saved. A key whose render names a lambda
+    variable (``namedlambdavariable``) is not unique to its lambda, so
+    it is built fresh instead."""
+    if "namedlambdavariable" in repr(key):
+        return build()
+    gw = _gateway_token()
     full = (gw, *key)
     v = _EXPR_MEMO.get(full)
     if v is None:

@@ -3436,8 +3436,8 @@ def _label_store_root() -> str:
 
 
 def _corpus_version_tag(sf_dir: str, variant: str) -> str:
-    """Content-identity tag for the corpus at ``sf_dir`` (mtime+size of
-    the embeddings parquet, the `_ensure_bindir` rule) plus the
+    """Content-identity tag for the corpus at ``sf_dir`` (realpath, size
+    and mtime of the embeddings parquet, the `staging.py` identity) plus the
     consumer's sample ``variant`` — regenerated testdata or a different
     MOD sample can never reuse stale labels."""
     import hashlib

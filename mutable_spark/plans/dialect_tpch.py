@@ -41,15 +41,14 @@ Spark text ingest.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
-import tempfile
 from pathlib import Path
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
+from mutable_spark import staging
 from mutable_spark.catalog import load_tables
 from mutable_spark.dialect.engine import Engine
 from mutable_spark.registry import query
@@ -81,52 +80,35 @@ def _engine_with_schema(spark) -> Engine:
     return eng
 
 
-# Export options that shape the DSV bytes; part of the cache fingerprint.
+# Export options that shape the DSV bytes; part of the staging recipe.
 _EXPORT_OPTS = {"sep": "|", "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss"}
 
 
-def _export_fingerprint() -> str:
-    """Content hash of everything that determines the exported DSV bytes:
-    the benchmark schema DDL, the table list, and the csv writer options.
-    Keying the /tmp cache by this hash means any schema or option edit
-    invalidates the export instead of silently feeding stale bytes to the
-    dialect_tpch_* gates (round-2 VERDICT item #2)."""
-    h = hashlib.sha256()
-    h.update((_BENCH_DIR / "schema.sql").read_bytes())
-    h.update(repr(sorted(_EXPORT_OPTS.items())).encode())
-    h.update(repr(_TABLES).encode())
-    return h.hexdigest()[:12]
-
-
 def _data_dir(spark, sf_dir: str) -> str:
-    """Export the testdata parquet tables as .tbl DSV once per scale
-    factor (process-wide cache keyed by a _SUCCESS marker inside a
-    directory fingerprinted by schema+options — see _export_fingerprint).
+    """The testdata tables exported as .tbl DSV, one directory per table,
+    staged per (source parquet, schema DDL, writer options, table list).
     Columns are cast to the declared benchmark schema during export, so
     the DSV text is the canonical 2-decimal / formatted form and the
     IMPORT parse is exact."""
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "mutable_spark_tpch",
-        sf_dir.strip("/").replace("/", "_") + "-" + _export_fingerprint(),
-    )
-    eng = _engine_with_schema(spark)
     t = load_tables(spark, sf_dir)
-    for name in _TABLES:
-        out = os.path.join(root, name.lower())
-        if os.path.exists(os.path.join(out, "_SUCCESS")):
-            continue
-        schema = eng.schemas[("tpch", name)]
-        src = getattr(t, name.lower())
-        cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        (
-            src.select(*cols)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .options(**_EXPORT_OPTS)
-            .csv(out)
-        )
-    return root
+
+    def write(tmp: str) -> None:
+        eng = _engine_with_schema(spark)
+        for name in _TABLES:
+            schema = eng.schemas[("tpch", name)]
+            cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+            (
+                getattr(t, name.lower())
+                .select(*cols)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .options(**_EXPORT_OPTS)
+                .csv(os.path.join(tmp, name.lower()))
+            )
+
+    recipe = repr(((_BENCH_DIR / "schema.sql").read_text(), _EXPORT_OPTS, _TABLES))
+    sources = [os.path.join(sf_dir, f"{name.lower()}.parquet") for name in _TABLES]
+    return staging.staged("tpch-dsv", sources, recipe, write)
 
 
 def run_script(spark, sf_dir: str, name: str):

@@ -6,13 +6,13 @@ correctness gate:
 
 - ``op_zoneindex_scan`` scans through ``ZoneIndex.read_pruned``
   (`sources/indexes.py`): a key-range-partitioned multi-file layout of
-  ``orders`` is built once (fingerprinted cache, same discipline as
-  `catalog._maybe_relayout`), the zone index selects the file subset that
-  can contain the key range from parquet footers alone, and the residual
-  filter is still applied — pruning is an I/O layer, never a correctness
-  layer, so the result is bit-identical to the oracle's full-scan filter.
-  The query asserts the prune actually dropped files; plan/file-count
-  checks live in ``tests/test_index_queries.py``.
+  ``orders`` is staged once (`staging.staged`, like every derived copy),
+  the zone index selects the file subset that can contain the key range
+  from parquet footers alone, and the residual filter is still applied —
+  pruning is an I/O layer, never a correctness layer, so the result is
+  bit-identical to the oracle's full-scan filter. The query asserts the
+  prune actually dropped files; plan/file-count checks live in
+  ``tests/test_index_queries.py``.
 
 - ``dialect_spn_planned_join`` compiles dialect SQL with a ``JoinPlanner``
   whose cardinalities come from learned SPN models over the real tables
@@ -26,14 +26,12 @@ correctness gate:
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
 from pathlib import Path
 
 import pyspark.sql.functions as F
 
-from mutable_spark.catalog import _RELAYOUT_DIR, load_tables
+from mutable_spark import staging
+from mutable_spark.catalog import load_tables
 from mutable_spark.functions import dsum, sql_dsum
 from mutable_spark.registry import query
 
@@ -44,42 +42,37 @@ _ZONE_PARTS = 16
 _LO_FRAC, _HI_FRAC = 0.15, 0.45
 
 
-def _key_range(spark, layout: Path) -> tuple[int, int]:
-    m = spark.read.parquet(str(layout)).agg(F.max("o_custkey")).collect()[0][0]
+def _key_range(spark, layout: str) -> tuple[int, int]:
+    m = spark.read.parquet(layout).agg(F.max("o_custkey")).collect()[0][0]
     return int(_LO_FRAC * m), int(_HI_FRAC * m)
 
 
-def _keyed_orders_layout(spark, sf_dir: str) -> Path:
-    """A ``repartitionByRange(o_custkey)``-partitioned copy of ``orders``
-    — the key-sorted multi-file layout a 100 TB table would already have
-    (each file covers a narrow custkey range, so zone maps prune).
-    Built at most once per source identity (size+mtime fingerprint);
-    concurrent builders race on an atomic rename."""
-    src = Path(sf_dir.rstrip("/")) / "orders.parquet"
-    st = src.stat()
-    fp = hashlib.sha256(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{_ZONE_PARTS}:zone-v1".encode()
-    ).hexdigest()[:16]
-    dest = _RELAYOUT_DIR / f"orders-zoned-{fp}"
-    if (dest / "_SUCCESS").exists():
-        return dest
-    tmp = _RELAYOUT_DIR / f".build-zoned-{fp}-{os.getpid()}"
+def _range_layout(spark, sf_dir: str, table: str, column: str) -> str:
+    """``table`` range-partitioned on ``column``, staged once per source
+    identity. A failed build degrades to the unsplit source so the scan
+    still works; the zone gates' did-it-prune assertions then fail LOUDLY —
+    an environment error the driver row should surface, not mask."""
+    src = Path(sf_dir.rstrip("/")) / f"{table}.parquet"
     try:
-        (
-            spark.read.parquet(str(src))
-            .repartitionByRange(_ZONE_PARTS, "o_custkey")
-            .write.mode("overwrite")
-            .parquet(str(tmp))
+        return staging.staged(
+            f"zoned-{table}-{column}",
+            [src],
+            f"zone:{column}:{_ZONE_PARTS}:v1",
+            lambda tmp: (
+                spark.read.parquet(str(src))
+                .repartitionByRange(_ZONE_PARTS, column)
+                .write.mode("overwrite")
+                .parquet(tmp)
+            ),
         )
-        os.rename(tmp, dest)
     except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # a failed build degrades to the unsplit source file so the scan
-    # itself still works (same fallback discipline as
-    # catalog._maybe_relayout); the zone gates' did-it-prune assertions
-    # will then fail LOUDLY — a build failure is an environment error the
-    # driver row should surface, not mask
-    return dest if (dest / "_SUCCESS").exists() else src
+        return str(src)
+
+
+def _keyed_orders_layout(spark, sf_dir: str) -> str:
+    """``orders`` range-partitioned on ``o_custkey``: the key-sorted layout
+    a 100 TB table would already have, so zone maps prune."""
+    return _range_layout(spark, sf_dir, "orders", "o_custkey")
 
 
 @query(
@@ -105,7 +98,7 @@ def op_zoneindex_scan(spark, sf_dir):
 
     layout = _keyed_orders_layout(spark, sf_dir)
     lo, hi = _key_range(spark, layout)
-    zi = ZoneIndex.build(str(layout), "o_custkey", learned=True)
+    zi = ZoneIndex.build(layout, "o_custkey", learned=True)
     pruned = zi.files_for_range(lo, hi)
     assert 0 < len(pruned) < len(zi.zones), (
         f"zone index did not prune: {len(pruned)}/{len(zi.zones)} files"
@@ -153,7 +146,7 @@ def dialect_zoneindex_scan(spark, sf_dir):
     eng = Engine(spark)
     eng.catalog.create_database("zx")
     eng.catalog.use("zx")
-    eng.create_table_from_parquet("orders", str(layout))
+    eng.create_table_from_parquet("orders", layout)
     eng.execute("CREATE INDEX ord_custkey ON orders USING rmi (o_custkey)")
     zi = eng.zone_indexes[("zx", "orders")]["o_custkey"]
     assert 0 < len(zi.files_for_range(lo, hi)) < len(zi.zones), (
@@ -354,31 +347,10 @@ def dialect_spn_like_prefix(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-def _source_sorted_docs_layout(spark, sf_dir: str) -> Path:
-    """A ``repartitionByRange(source)``-partitioned copy of ``documents``
-    — each file covers a narrow lexicographic source range, the layout a
-    domain-sharded 100 TB corpus would already have. Same build-once +
-    atomic-rename discipline as `_keyed_orders_layout`."""
-    src = Path(sf_dir.rstrip("/")) / "documents.parquet"
-    st = src.stat()
-    fp = hashlib.sha256(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{_ZONE_PARTS}:zone-str-v1".encode()
-    ).hexdigest()[:16]
-    dest = _RELAYOUT_DIR / f"docs-src-zoned-{fp}"
-    if (dest / "_SUCCESS").exists():
-        return dest
-    tmp = _RELAYOUT_DIR / f".build-src-zoned-{fp}-{os.getpid()}"
-    try:
-        (
-            spark.read.parquet(str(src))
-            .repartitionByRange(_ZONE_PARTS, "source")
-            .write.mode("overwrite")
-            .parquet(str(tmp))
-        )
-        os.rename(tmp, dest)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return dest if (dest / "_SUCCESS").exists() else src
+def _source_sorted_docs_layout(spark, sf_dir: str) -> str:
+    """``documents`` range-partitioned on ``source``: the layout a
+    domain-sharded 100 TB corpus would already have."""
+    return _range_layout(spark, sf_dir, "documents", "source")
 
 
 @query(
@@ -407,7 +379,7 @@ def dialect_zoneindex_string(spark, sf_dir):
     eng = Engine(spark)
     eng.catalog.create_database("zs")
     eng.catalog.use("zs")
-    eng.create_table_from_parquet("documents", str(layout))
+    eng.create_table_from_parquet("documents", layout)
     eng.execute("CREATE INDEX doc_source ON documents USING array (source)")
     zi = eng.zone_indexes[("zs", "documents")]["source"]
     assert 0 < len(zi.files_for_range("src10", "src15")) < len(zi.zones), (

@@ -55,7 +55,7 @@ RUNTIME_CONFS: dict[str, str] = {
         64 * 1024 * 1024
     ),
     # Scan split sizing. The default 128 MB bin + 4 MB open-cost packs the
-    # catalog's 8-way re-layout output (catalog._maybe_relayout) back into
+    # catalog's 8-way re-layout copies (staging.staged) back into
     # 1-2 scan tasks, serializing every pipeline rooted at the scan. 16/16
     # gives one task per re-layout file. On a 1000-executor cluster over
     # 100 TB the data arrives in many ≥128 MB files and these would stay at

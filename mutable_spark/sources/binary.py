@@ -35,12 +35,12 @@ fidelity end to end without ever reading the staged copy itself.
 
 from __future__ import annotations
 
-import hashlib as _hashlib
 import os as _os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mutable_spark import staging as _staging
 from mutable_spark.catalog import load_tables as _load_tables
 from mutable_spark.registry import query as _query
 
@@ -52,9 +52,6 @@ _MAGIC_HEX = MAGIC.hex().upper()
 #: systematic sample bound for the staged object set (≤ |documents|/20
 #: files — listing cost stays trivial at every test SF)
 _BIN_MOD = 20
-
-#: (session id, sf_dir) → path of the already-staged object dir
-_BIN_READY: dict[tuple, str] = {}
 
 
 def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.bin") -> DataFrame:
@@ -71,23 +68,13 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.bin") -> Data
 
 
 def _ensure_bindir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the MOD-sampled documents as binary objects once per
-    (session, sf_dir) — content-identity keyed (mtime+size) so
-    regenerated testdata never reuses a stale staged copy (the
-    jsonl/orc modules' rule). Driver-side writes are fine HERE because
-    staging is the test fixture, not the operator: in production the
-    objects already exist in the store and only the read path below
-    runs."""
-    key = (id(spark), sf_dir)
-    if key in _BIN_READY:
-        return _BIN_READY[key]
-    st = _os.stat(_os.path.join(sf_dir, "documents.parquet"))
-    ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    sfx = _hashlib.md5(ident.encode()).hexdigest()[:8]
-    path = f"/tmp/mutable_spark_bin_docs_{sfx}"
-    done = _os.path.join(path, "_STAGED")
-    if not _os.path.exists(done):
-        _os.makedirs(path, exist_ok=True)
+    """The MOD-sampled documents as binary objects, staged once per source
+    identity. Driver-side writes are fine HERE because staging is the test
+    fixture, not the operator: in production the objects already exist in
+    the store and only the read path below runs."""
+
+    def write(path: str) -> None:
+        _os.makedirs(path)
         rows = (
             _load_tables(spark, sf_dir)
             .documents.filter(
@@ -99,10 +86,13 @@ def _ensure_bindir(spark: SparkSession, sf_dir: str) -> str:
         for r in rows:
             with open(_os.path.join(path, f"doc_{r.doc_id}.bin"), "wb") as f:
                 f.write(MAGIC + r.text.encode("utf-8"))
-        with open(done, "w") as f:
-            f.write(str(len(rows)))
-    _BIN_READY[key] = path
-    return path
+
+    return _staging.staged(
+        "bin-docs",
+        [_os.path.join(sf_dir, "documents.parquet")],
+        f"binary:{_BIN_MOD}:v1",
+        write,
+    )
 
 
 @_query(

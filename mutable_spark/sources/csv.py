@@ -20,37 +20,30 @@ counterpart with the production options spelled out:
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
+from mutable_spark import staging
 from mutable_spark.catalog import load_tables
 from mutable_spark.registry import query
 from mutable_spark.sources.jsonl import DOCUMENTS_SCHEMA
 
-#: (session id, sf_dir) → path of the already-written CSV copy
-_CSV_READY: dict[tuple, str] = {}
-
 
 def _ensure_csv(spark: SparkSession, sf_dir: str) -> str:
-    key = (id(spark), sf_dir)
-    if key in _CSV_READY:
-        return _CSV_READY[key]
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    sfx = hashlib.md5(ident.encode()).hexdigest()[:8]
-    path = f"/tmp/mutable_spark_csv_docs_{sfx}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
+    """Documents as quoted CSV, staged once per source identity."""
+    return staging.staged(
+        "csv-docs",
+        [os.path.join(sf_dir, "documents.parquet")],
+        "csv:v1",
+        lambda tmp: (
             load_tables(spark, sf_dir)
             .documents.write.mode("overwrite")
             .options(header=True, quote='"', escape='"')
-            .csv(path)
-        )
-    _CSV_READY[key] = path
-    return path
+            .csv(tmp)
+        ),
+    )
 
 
 @query(

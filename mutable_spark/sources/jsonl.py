@@ -85,31 +85,21 @@ def read_jsonl(
 
 # --- registered roundtrip (r11) --------------------------------------------
 
-import hashlib as _hashlib
 import os as _os
 
+from mutable_spark import staging as _staging
 from mutable_spark.catalog import load_tables as _load_tables
 from mutable_spark.registry import query as _query
 
-#: (session id, sf_dir) → path of the already-written JSONL copy
-_JSONL_READY: dict[tuple, str] = {}
-
 
 def _ensure_jsonl(spark: SparkSession, sf_dir: str) -> str:
-    """Write documents as JSONL once per (session, sf_dir) — content-
-    identity keyed (mtime+size) so regenerated testdata never reuses a
-    stale staged copy (the ORC module's rule, `orc.py:_ensure_orc`)."""
-    key = (id(spark), sf_dir)
-    if key in _JSONL_READY:
-        return _JSONL_READY[key]
-    st = _os.stat(_os.path.join(sf_dir, "documents.parquet"))
-    ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    sfx = _hashlib.md5(ident.encode()).hexdigest()[:8]
-    path = f"/tmp/mutable_spark_jsonl_docs_{sfx}"
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        write_jsonl(_load_tables(spark, sf_dir).documents, path)
-    _JSONL_READY[key] = path
-    return path
+    """Documents as JSONL, staged once per source identity."""
+    return _staging.staged(
+        "jsonl-docs",
+        [_os.path.join(sf_dir, "documents.parquet")],
+        "jsonl:v1",
+        lambda tmp: write_jsonl(_load_tables(spark, sf_dir).documents, tmp),
+    )
 
 
 @_query(

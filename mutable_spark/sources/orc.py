@@ -14,34 +14,24 @@ argument in SCALE.md carries over unchanged.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
+from mutable_spark import staging
 from mutable_spark.catalog import load_tables
 from mutable_spark.registry import query
 
-#: (session id, sf_dir) → path of the already-written ORC copy
-_ORC_READY: dict[tuple, str] = {}
-
 
 def _ensure_orc(spark: SparkSession, sf_dir: str) -> str:
-    """Write documents as ORC once per (session, sf_dir)."""
-    key = (id(spark), sf_dir)
-    if key in _ORC_READY:
-        return _ORC_READY[key]
-    # content-identity key (mtime+size): regenerated testdata must never
-    # silently reuse a stale staged copy
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    sfx = hashlib.md5(ident.encode()).hexdigest()[:8]
-    path = f"/tmp/mutable_spark_orc_docs_{sfx}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_tables(spark, sf_dir).documents.write.mode("overwrite").orc(path)
-    _ORC_READY[key] = path
-    return path
+    """Documents as ORC, staged once per source identity."""
+    return staging.staged(
+        "orc-docs",
+        [os.path.join(sf_dir, "documents.parquet")],
+        "orc:v1",
+        lambda tmp: load_tables(spark, sf_dir).documents.write.mode("overwrite").orc(tmp),
+    )
 
 
 @query(

@@ -37,39 +37,29 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
 # dirs prune at PLANNING time from the path structure; the zone index
 # prunes at file granularity from footer stats.
 
-import hashlib  # noqa: E402
 import os  # noqa: E402
 
+from mutable_spark import staging  # noqa: E402
 from mutable_spark.catalog import load_tables  # noqa: E402
 from mutable_spark.functions import dsum, sql_dsum  # noqa: E402
 from mutable_spark.registry import query  # noqa: E402
 
-#: (session id, sf_dir) → path of the already-written date-partitioned copy
-_PART_READY: dict[tuple, str] = {}
-
 
 def _ensure_date_partitioned(spark: SparkSession, sf_dir: str) -> str:
-    """Write events date-partitioned once per (session, sf_dir) — the
-    one-time ingest re-layout a real lake already provides."""
-    key = (id(spark), sf_dir)
-    if key in _PART_READY:
-        return _PART_READY[key]
-    # key the staged copy by source content identity (mtime+size), not just
-    # the path — regenerated testdata must never silently reuse stale copies
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    sfx = hashlib.md5(ident.encode()).hexdigest()[:8]
-    path = f"/tmp/mutable_spark_part_events_{sfx}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        e = load_tables(spark, sf_dir).events
-        (
-            e.withColumn("d", F.to_date("ts"))
+    """Events date-partitioned — the ingest re-layout a real lake already
+    provides — staged once per source identity."""
+    return staging.staged(
+        "events-by-date",
+        [os.path.join(sf_dir, "events.parquet")],
+        "partition:d:v1",
+        lambda tmp: (
+            load_tables(spark, sf_dir)
+            .events.withColumn("d", F.to_date("ts"))
             .write.mode("overwrite")
             .partitionBy("d")
-            .parquet(path)
-        )
-    _PART_READY[key] = path
-    return path
+            .parquet(tmp)
+        ),
+    )
 
 
 @query(
