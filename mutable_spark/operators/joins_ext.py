@@ -22,6 +22,7 @@ from pyspark.sql import Window
 from mutable_spark.catalog import load_tables
 from mutable_spark.functions import dsum, sql_dsum
 from mutable_spark.registry import query
+from mutable_spark.session import local_frame
 
 
 @query(
@@ -146,7 +147,8 @@ def op_join_range(spark, sf_dir):
     *large* range side, bucketize: add floor(value/width) to both sides
     and equi-join on the bucket with the residual range filter."""
     li = load_tables(spark, sf_dir).lineitem
-    spark_bands = spark.createDataFrame(
+    spark_bands = local_frame(
+        spark,
         [("low", 0.0, 20000.0), ("mid", 20000.0, 60000.0), ("high", 60000.0, 1e9)],
         "band string, lo double, hi double",
     )

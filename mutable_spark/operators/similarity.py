@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from mutable_spark.catalog import load_tables
 from mutable_spark.functions import vec_cosine, vec_cosine_pre, vec_norm
 from mutable_spark.registry import query
+from mutable_spark.session import local_frame
 
 #: DuckDB twin of functions.vec_dot's fold (a·b over 1-based indexes)
 def _sql_dot(a: str, b: str) -> str:
@@ -242,7 +243,8 @@ def sim_ann_lsh(spark, sf_dir):
     candidate sets — and hence the exactly re-ranked top-10 — match the
     oracle unconditionally."""
     e = load_tables(spark, sf_dir).embeddings
-    planes = spark.createDataFrame(
+    planes = local_frame(
+        spark,
         [
             (p, d, float(_PLANES[p][d]))
             for p in range(_N_PLANES)
@@ -828,7 +830,8 @@ def sim_lsh_band_sweep(spark, sf_dir):
     distributed top-k rerank; nothing quadratic — the all-pairs exact
     baseline is the registered `sim_cosine_topk` top-10, corpus-linear."""
     e = load_tables(spark, sf_dir).embeddings
-    planes = spark.createDataFrame(
+    planes = local_frame(
+        spark,
         [
             (p, d, float(_PLANES[p][d]))
             for p in range(_N_PLANES)
@@ -2545,13 +2548,14 @@ def sim_ivfpq_nprobe_sweep(spark, sf_dir):
     )
     labels, qid = _ivf_probe_labels(e, qdf, nprobe=max(_NPROBE_SWEEP))
     lrank = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(l), i + 1) for i, l in enumerate(labels)],
             "label int, lrank int",
         )
     )
     tiers = F.broadcast(
-        spark.createDataFrame([(n,) for n in _NPROBE_SWEEP], "nprobe int")
+        local_frame(spark, [(n,) for n in _NPROBE_SWEEP], "nprobe int")
     )
     qx = ex.filter(F.col("vec_id") == qid).select(
         "s", "d", F.col("x").alias("qx")

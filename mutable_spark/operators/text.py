@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 
 from mutable_spark.catalog import SHINGLE_INFLATION, load_tables
 from mutable_spark.registry import query
+from mutable_spark.session import local_frame
 
 #: whitespace tokens of `text` (same as DuckDB string_split_regex(trim(),'\s+'))
 def _toks(col="text"):
@@ -878,8 +879,8 @@ def text_bpe_train(spark, sf_dir):
     hash-checked end to end."""
     d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
     rules, _ = _bpe_merge_rounds(d)
-    return spark.createDataFrame(
-        rules, "round long, sym_a string, sym_b string, pair_count long"
+    return local_frame(
+        spark, rules, "round long, sym_a string, sym_b string, pair_count long"
     )
 
 
@@ -1151,7 +1152,8 @@ def text_bpe_train_batched(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("freq"))
     )
     rules, _ = bpe_batched_rounds_from_vocab(words)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rules,
         "round long, sel long, sym_a string, sym_b string, pair_count long",
     )
@@ -1235,8 +1237,8 @@ def bpe_batched_rounds_from_vocab(words):
             break
         for sel, (a, b, cnt) in enumerate(chosen, start=1):
             out_rows.append((r, sel, a, b, cnt))
-        rules_df = spark.createDataFrame(
-            [(a, b) for a, b, _ in chosen], "ra string, rb string"
+        rules_df = local_frame(
+            spark, [(a, b) for a, b, _ in chosen], "ra string, rb string"
         )
         match = pairs.join(
             F.broadcast(rules_df),
@@ -1400,8 +1402,8 @@ def text_bpe_sweep(spark, sf_dir):
         curve.append((len(curve), curve[-1][1]))
     n0 = curve[0][1] or 1
     rows = [(r, n, int((10000 * n) // n0)) for r, n in curve]
-    return spark.createDataFrame(
-        rows, "round long, n_tokens long, compression_bp long"
+    return local_frame(
+        spark, rows, "round long, n_tokens long, compression_bp long"
     )
 
 

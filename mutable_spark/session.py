@@ -9,10 +9,12 @@ plans we'd ship.
 
 from __future__ import annotations
 
+import decimal
 import os
 import weakref
 
-from pyspark.sql import SparkSession
+import pyspark.sql.types as T
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-settable SQL confs applied to any session we are handed (the
 #: driver owns the session in verify runs — these are all dynamic confs).
@@ -154,3 +156,72 @@ def get_spark(app_name: str = "mutable_spark", cpus: int | None = None) -> Spark
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return apply_runtime_confs(builder.getOrCreate())
+
+
+# --- driver-built frames ----------------------------------------------------
+class DecimalRangeError(ValueError):
+    """A DECIMAL value that does not fit its field's precision."""
+
+    def __init__(self, field: T.StructField, value: decimal.Decimal):
+        self.field, self.value = field, value
+        super().__init__(
+            f"value {value} does not fit field {field.name!r} of type "
+            f"{field.dataType.simpleString()}"
+        )
+
+
+#: Quantizing context wide enough for any coefficient, so only the range
+#: check in `_decimal_column` rejects a value.
+_EXACT = decimal.Context(prec=decimal.MAX_PREC)
+
+
+def _decimal_column(values: list, field: T.StructField) -> list:
+    """Round to the field's scale half-up (the JVM's conversion of a
+    Python ``Decimal``: 1.005 → 1.01, −1.005 → −1.01) and reject values
+    whose integer part needs more than ``precision − scale`` digits."""
+    step = decimal.Decimal(1).scaleb(-field.dataType.scale)
+    bound = 10 ** (field.dataType.precision - field.dataType.scale)
+    out = []
+    for v in values:
+        if v is not None:
+            q = v.quantize(step, rounding=decimal.ROUND_HALF_UP, context=_EXACT)
+            if abs(q) >= bound:
+                raise DecimalRangeError(field, v)
+            v = q
+        out.append(v)
+    return out
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-built rows (a list of tuples in ``schema``
+    order) whose plan is a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` pickles the rows into a
+    Python-parallelized RDD: every later scan of that frame runs one
+    Python-worker task per partition (``Scan ExistingRDD``), and Catalyst
+    has no size for it. Here the rows are checked with PySpark's own type
+    verifier (the same NOT NULL and integer-range errors as the list
+    path), DECIMALs are quantized as the JVM would (a value that does not
+    fit raises `DecimalRangeError` here, not on a later read), and the
+    columns go to the JVM as one Arrow table: the scan is a
+    ``LocalTableScan`` with real statistics and no Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, field in enumerate(schema.fields):
+        values = [r[i] for r in rows]
+        if isinstance(field.dataType, T.DecimalType):
+            values = _decimal_column(values, field)
+        columns.append(pa.array(values, type=arrow_schema.field(i).type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )

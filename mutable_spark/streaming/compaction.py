@@ -42,6 +42,8 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mutable_spark.session import local_frame
+
 
 def stage_clean_stream(docs: DataFrame, eval_digests: DataFrame) -> DataFrame:
     """The ingest stages that gate admission to the staged clean corpus:
@@ -446,8 +448,8 @@ def compact_bpe_rules(
         .agg(F.sum("cnt").alias("freq"))
     )
     rules, _ = bpe_rounds_from_vocab(words)
-    return spark.createDataFrame(
-        rules, "round long, sym_a string, sym_b string, pair_count long"
+    return local_frame(
+        spark, rules, "round long, sym_a string, sym_b string, pair_count long"
     )
 
 

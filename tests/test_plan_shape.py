@@ -1138,7 +1138,8 @@ def test_bpe_encode_shuffle_hash_vocab_build(plans):
     assert "ShuffledHashJoin" in p and "BuildRight" in p
     assert "CartesianProduct" not in p
     # r15 opt: 3 exchanges with the ≤1M-word driver-local trainer (the
-    # vocab build side is a LocalRelation, so its shuffle onto w no
+    # vocab build side is a driver-built Python-RDD frame — `Scan
+    # ExistingRDD`, from `_bpe_syms_df` — so its shuffle onto w no
     # longer reuses the training loop's window partitioning — that
     # exchange carries only the gated vocabulary, bounded by the fast
     # path's own contract; the doc-stream exchange and the doc_id
