@@ -9,13 +9,19 @@ already PAX-like — so they intentionally do not appear here.
 
 from __future__ import annotations
 
+import math
+import os
 import weakref
 from dataclasses import dataclass, field
 from pathlib import Path
 from types import SimpleNamespace
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from mutable_spark import staging
 from mutable_spark.session import apply_runtime_confs
@@ -166,10 +172,14 @@ def _tune_aqe(spark: SparkSession, sf_dir: str, inflation: float = 1.0) -> None:
 # many the session has. The reference has the same ingest boundary — IMPORT
 # copies external data into its own store layout before queries run
 # (`src/mutable.cpp` IMPORT DSV) — so we do the analogous thing once per
-# source file: rewrite it as _RELAYOUT_PARTS splittable files, staged by
+# source file: copy it into _RELAYOUT_PARTS splittable files, staged by
 # source identity (`staging.py`) so a testdata refresh invalidates it.
-# Pure row movement: values, types and nullability are bit-identical, and
-# every oracle-paired aggregate is partition-order-independent (decimal sums,
+# The copy is made on the driver with pyarrow and submits no Spark job: the
+# source streams through in _RELAYOUT_PARTS contiguous row ranges, one in
+# memory at a time, each written as one part file in the source's own Arrow
+# schema. Pure row movement: values and types are the source's (a copy whose
+# parquet schema differs from the source's is discarded), and every
+# oracle-paired aggregate is partition-order-independent (decimal sums,
 # per-row folds, min/max — see operators/* docstrings), so oracle parity is
 # unaffected by row placement. On a 1000-executor cluster this step is the
 # ingest job that already exists (data lands in many ≥128 MB files) and
@@ -185,28 +195,84 @@ _RELAYOUT_PARTS = 8  # measured sweet spot at sf0.1 on local[32]: 32-way
 _RELAYOUT_MIN_ROWS = 2000  # below this a single task wins; don't relayout
 
 
-def _maybe_relayout(spark: SparkSession, src: Path) -> str:
+def _maybe_relayout(src: Path) -> str:
     """Path of an ``_RELAYOUT_PARTS``-way splittable copy of ``src``, staged
     once per source identity; ``src`` itself when not worth it or on failure."""
     try:
-        import pyarrow.parquet as pq
-
-        meta = pq.ParquetFile(src).metadata
+        source = pq.ParquetFile(src)
+        meta = source.metadata
         if meta.num_rows < _RELAYOUT_MIN_ROWS or meta.num_row_groups >= 8:
             return str(src)
-        return staging.staged(
-            f"relayout-{src.stem}",
-            [src],
-            f"relayout:{_RELAYOUT_PARTS}:v1",
-            lambda tmp: (
-                spark.read.parquet(str(src))
-                .repartition(_RELAYOUT_PARTS)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            ),
-        )
+        int96 = any(c.physical_type == "INT96" for c in meta.schema)
+
+        def write(tmp: str) -> None:
+            os.makedirs(tmp)
+            slices = source.iter_batches(batch_size=math.ceil(meta.num_rows / _RELAYOUT_PARTS))
+            for i, batch in enumerate(slices):
+                part = os.path.join(tmp, f"part-{i:05d}.parquet")
+                pq.write_table(
+                    pa.Table.from_batches([batch], source.schema_arrow),
+                    part,
+                    use_deprecated_int96_timestamps=int96,
+                )
+                if i == 0 and not pq.read_metadata(part).schema.equals(meta.schema):
+                    raise TypeError(f"relayout of {src} would change its parquet schema")
+
+        return staging.staged(f"relayout-{src.stem}", [src], f"relayout:{_RELAYOUT_PARTS}:arrow", write)
     except Exception:  # directory dataset, unreadable footer or failed build
         return str(src)
+
+
+#: Arrow types whose Spark parquet read type is PySpark's Arrow mapping
+_SCALAR_TYPES = (
+    pa.types.is_boolean,
+    pa.types.is_signed_integer,
+    pa.types.is_floating,
+    pa.types.is_decimal128,
+    pa.types.is_string,
+    pa.types.is_large_string,
+    pa.types.is_binary,
+    pa.types.is_large_binary,
+    pa.types.is_date32,
+    pa.types.is_timestamp,
+)
+
+
+def _spark_type(at: pa.DataType) -> T.DataType:
+    """Spark's parquet read type for the footer's Arrow type ``at``; raises
+    for types whose Spark mapping this does not vouch for."""
+    if pa.types.is_timestamp(at) and at.unit == "ns":
+        return T.LongType()  # spark.sql.legacy.parquet.nanosAsLong
+    if pa.types.is_list(at):
+        return T.ArrayType(_spark_type(at.value_type), True)
+    for scalar in _SCALAR_TYPES:
+        if scalar(at):
+            return from_arrow_type(at, prefer_timestamp_ntz=True)
+    raise TypeError(f"no footer mapping for {at}")
+
+
+def footer_schema(path) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, taken from the footer
+    of ``path`` (a parquet file, or the first part file of a directory)
+    without a Spark job. ``None`` — infer instead — for a footer holding a
+    type the mapping does not cover: physical INT96, unsigned ints, maps,
+    structs, a Spark-written schema. Tz-less timestamps map to
+    TIMESTAMP_NTZ, as Spark infers them by default
+    (``spark.sql.parquet.inferTimestampNTZ.enabled``)."""
+    try:
+        p = Path(path)
+        if p.is_dir():
+            p = min(f for f in p.iterdir() if f.suffix == ".parquet" and f.name[0] not in "._")
+        meta = pq.read_metadata(p)
+        if b"org.apache.spark.sql.parquet.row.metadata" in (meta.metadata or {}):
+            return None
+        if any(c.physical_type == "INT96" for c in meta.schema):
+            return None
+        return T.StructType(
+            [T.StructField(f.name, _spark_type(f.type), True) for f in meta.schema.to_arrow_schema()]
+        )
+    except (OSError, TypeError, ValueError, pa.ArrowException):
+        return None
 
 
 #: declared shuffle blow-up of the word-shingle / rolling-gram tiers: a
@@ -243,7 +309,9 @@ def load_table(
     key = (app, sf_dir.rstrip("/"), name, st and (st.st_size, st.st_mtime_ns))
     if key in _TABLE_CACHE:
         return _TABLE_CACHE[key]
-    df = spark.read.parquet(_maybe_relayout(spark, src))
+    path = _maybe_relayout(src)
+    schema = footer_schema(path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") in ("bigint", "long"):
         df = df.withColumn(
             "ts",
@@ -274,7 +342,7 @@ def table_backing_path(spark: SparkSession, sf_dir: str, name: str) -> str | Non
     file-zone index (`dialect/engine.py`)."""
     if name == "events":
         return None
-    return _maybe_relayout(spark, Path(sf_dir.rstrip("/")) / f"{name}.parquet")
+    return _maybe_relayout(Path(sf_dir.rstrip("/")) / f"{name}.parquet")
 
 
 @dataclass

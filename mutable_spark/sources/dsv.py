@@ -73,7 +73,8 @@ def materialize_import(
             f"import:{key_parts}",
             lambda tmp: df.write.mode("overwrite").parquet(tmp),
         )
-        return spark.read.parquet(dest)
+        # the store holds ``df``, so its schema needs no inference job
+        return spark.read.schema(df.schema).parquet(dest)
     except Exception:
         return df
 

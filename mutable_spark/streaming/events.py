@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from mutable_spark.catalog import footer_schema
 from mutable_spark.functions import dsum
 from mutable_spark.session import apply_runtime_confs
 from mutable_spark.streaming.staging import _ensure_link, _stage_dir
@@ -44,7 +45,7 @@ def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with the same timestamp
-    normalization as the batch catalog (`catalog.load_table`): a batch
+    normalization as the batch catalog (`catalog.load_table`): a footer
     schema probe decides whether the file stores INT64 nanos (read as long,
     divide to µs) or a plain timestamp[us] (read as TIMESTAMP_NTZ
     directly). Streaming and batch must agree on this guard or every
@@ -56,10 +57,10 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_dir("mutable_spark_stream", src)
     link = stage / "events.parquet"
     _ensure_link(link, src)
-    # Probe the footer through the same reader the batch path uses, so the
+    # Probe the footer through the same helper the batch path uses, so the
     # two can never disagree on the raw dtype.
-    raw_ts_dtype = dict(spark.read.parquet(str(src)).dtypes).get("ts")
-    is_nanos = raw_ts_dtype in ("bigint", "long")
+    schema = footer_schema(src) or spark.read.parquet(str(src)).schema
+    is_nanos = isinstance(schema["ts"].dataType, T.LongType)
     ts_type = T.LongType() if is_nanos else T.TimestampNTZType()
     raw = spark.readStream.schema(_events_raw_schema(ts_type)).parquet(str(stage))
     # NOTE: watermarks require TIMESTAMP (an instant), not TIMESTAMP_NTZ —

@@ -29,6 +29,14 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def root(tmp_path, monkeypatch):
+    """An empty staging root (`mutable_spark/staging.py`) for one test."""
+    r = tmp_path / "staged"
+    monkeypatch.setenv("SPARK_GRAFT_RELAYOUT_DIR", str(r))
+    return r
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

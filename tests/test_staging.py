@@ -21,13 +21,6 @@ from tests.conftest import SF_DIR
 registry.load_all()
 
 
-@pytest.fixture
-def root(tmp_path, monkeypatch):
-    r = tmp_path / "staged"
-    monkeypatch.setenv("SPARK_GRAFT_RELAYOUT_DIR", str(r))
-    return r
-
-
 def _counting_write(calls: list):
     def write(tmp):
         calls.append(tmp)
@@ -120,16 +113,16 @@ def test_failed_relayout_and_import_fall_back_to_source(spark, root, tmp_path, m
     from mutable_spark.sources import dsv
     import pyspark.sql.functions as F
 
-    # one row group, enough rows to relayout; a session whose read fails
+    # one row group, enough rows to relayout; the copy's write fails
     src = tmp_path / "lineitem.parquet"
     shutil.copy(Path(SF_DIR) / "lineitem.parquet", src)
 
-    class NoRead:
-        @property
-        def read(self):
-            raise RuntimeError("read failed")
+    def no_write(*args, **kwargs):
+        raise RuntimeError("write failed")
 
-    assert catalog._maybe_relayout(NoRead(), src) == str(src)
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", no_write)
+        assert catalog._maybe_relayout(src) == str(src)
     assert _copies(root) == []
 
     # an IMPORT whose frame fails mid-write: the CSV-backed frame comes back
