@@ -406,19 +406,21 @@ class Compiler:
             dups = frozenset(
                 c for c in attrs if base.columns.count(c) > 1
             )
-            # dedupe positionally for the physical frame (toDF renames by
-            # position, so duplicate names never need name-resolution); any
+            # rename positionally in one toDF (duplicate names never need
+            # name-resolution): the first occurrence of a name becomes
+            # alias___attr, later ones a placeholder dropped below; any
             # *access* to a duplicated attr raises in _resolve / star
             # expansion
-            uniq = base.toDF(*[f"__b{i}" for i in range(len(base.columns))])
-            seen: set[str] = set()
-            cols = []
+            names, extra = [], []
             for i, c in enumerate(base.columns):
-                if c in seen:
-                    continue
-                seen.add(c)
-                cols.append(F.col(f"__b{i}").alias(f"{alias}{SEP}{c}"))
-            renamed = uniq.select(*cols)
+                if f"{alias}{SEP}{c}" in names:
+                    extra.append(f"__b{i}")
+                    names.append(extra[-1])
+                else:
+                    names.append(f"{alias}{SEP}{c}")
+            renamed = base.toDF(*names)
+            if extra:
+                renamed = renamed.drop(*extra)
             sources.append(Source(alias, renamed, attrs, dups, table=ref.name))
         if not sources:
             # SELECT without FROM: single-row frame (the reference allows

@@ -152,6 +152,17 @@ def get_spark(app_name: str = "mutable_spark", cpus: int | None = None) -> Spark
             "spark.sql.codegen.cache.maxEntries",
             os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192"),
         )
+        # No per-call call-site capture (static conf; PySpark also caches
+        # it per process at the first wrapped call). With it on, every
+        # Column method and F.col captures the Python stack and makes ~6
+        # extra py4j round trips (active session, conf read, origin set
+        # and clear): a dialect UPDATE cost ~590 round trips, ~140
+        # without. What is lost: Spark errors no longer carry the
+        # "== DataFrame ==" Python call-site fragment; the error class,
+        # SQLSTATE and message are unchanged. For the dialect that call
+        # site pointed into compiler.py, never at the user's SQL. A
+        # session not built here keeps PySpark's default.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
