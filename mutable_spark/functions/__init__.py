@@ -20,7 +20,6 @@ Two concerns live here:
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import Column
 import pyspark.sql.functions as F
@@ -155,8 +154,8 @@ def sql_split_sum(expr: str, s: int) -> str:
 # --- vector math over array<float/double> columns ------------------------
 
 #: unroll width for `vec_dot`'s codegen fast path — the corpus' embedding
-#: dimension (64 at every SF; TESTDATA). 0 disables unrolling (pure fold).
-_DOT_UNROLL_DIM = int(os.environ.get("MUTABLE_SPARK_DOT_UNROLL_DIM", "64"))
+#: dimension (64 at every SF; TESTDATA)
+_DOT_UNROLL_DIM = 64
 
 
 def _fold_dot(a: Column, b: Column) -> Column:
@@ -278,10 +277,10 @@ def memo_exprs(key: tuple, build):
     ``build`` must construct Column trees from FIXED column names only
     (F.col/F.lit roots — no df["x"], no values read from data), so the
     cached object is equivalent to rebuilding it: plans are unchanged
-    (pinned byte-identical in plans/r16), only the construction-side
-    py4j round-trips are saved. A key whose render names a lambda
-    variable (``namedlambdavariable``) is not unique to its lambda, so
-    it is built fresh instead."""
+    (pinned byte-identical in the plans/r16 captures, in git at 87f8177),
+    only the construction-side py4j round-trips are saved. A key whose
+    render names a lambda variable (``namedlambdavariable``) is not
+    unique to its lambda, so it is built fresh instead."""
     if "namedlambdavariable" in repr(key):
         return build()
     gw = _gateway_token()

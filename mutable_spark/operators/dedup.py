@@ -1129,7 +1129,7 @@ def _simhash_sig_exprs():
     most of `dedup_simhash`'s wall time at sf0.1 (build 1.6 s vs
     exec 0.55 s, r16 cProfile) — paid identically by every simhash
     consumer. One build per process serves all of them; plans are
-    byte-identical (plans/r16)."""
+    byte-identical (the plans/r16 captures, in git at 87f8177)."""
 
     def build():
         aggs = [
@@ -2303,7 +2303,7 @@ _register_blocking_certification_oracle()
 #: stored quantizer was the one remaining data-scaling term — at fixed k,
 #: per-cell population grows linearly with the corpus and within-cell
 #: pair expansion quadratically — and the repo's own A/B
-#: (scripts/ab_ksweep.py, SCALE.md "k ~ √N demonstrated") showed the
+#: (scripts/ab_ksweep.py at 87f8177, SCALE.md "k ~ √N demonstrated") showed the
 #: re-trained k=√N cells strictly dominate (the A/B read 9910 vs
 #: 9856 bp at 0.55× the pair-join wall; the r14 self-contained sweep
 #: pins the shipped derived point at 9974 vs 9841 bp true full-corpus
@@ -2710,7 +2710,7 @@ def multiprobe_cosine_pairs(
     # checkpointed staged frame behind ea/eb) scan as ExistingRDD with
     # UNKNOWN stats, so the planner fell back to SortMergeJoin — full
     # sorts of the multi-million-row candidate stream on each join key
-    # (plans/r15/dedup_embedding_multiprobe_before.txt: 3 SMJs + their
+    # (plans/r15/dedup_embedding_multiprobe_before.txt at 87f8177: 3 SMJs + their
     # Sorts). Broadcast would be the 100 TB killer (every side here is
     # corpus-sized); shuffled-hash keeps the exchange and drops the
     # sorts: per-partition hash build of the hinted side, the same
@@ -2826,7 +2826,7 @@ def dedup_embedding_multiprobe(spark, sf_dir):
     (`_probe_depth` rule, P = min(k, ceil(sqrt(2k)))). The fixed-k stored quantizer this replaces was
     the repo's one remaining data-scaling term (per-cell population
     linear in the corpus → quadratic within-cell pair expansion); the
-    A/B behind the switch (scripts/ab_ksweep.py, SCALE.md) measured the
+    A/B behind the switch (scripts/ab_ksweep.py at 87f8177, SCALE.md) measured the
     re-trained quantizer at HIGHER recall and a cheaper pair join
     (A/B: 9910 vs 9856 bp at 0.55× the wall; shipped derived point:
     9974 vs 9841 bp true full-corpus recall, 23% vs 40% fan-out), with
@@ -2959,7 +2959,7 @@ def dedup_multiprobe_sweep(spark, sf_dir):
         ps.join(F.broadcast(true_thr), F.col("p_thr") <= F.col("p"), "left")
         .groupBy("p")
         .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_hits"))
-        .crossJoin(F.broadcast(n_exact))
+        .crossJoin(n_exact)
         .select(
             "p",
             "n_hits",
@@ -3171,7 +3171,7 @@ def sim_growing_cluster_sweep(spark, sf_dir):
                 F.col("embedding").alias("x"),
                 vec_norm(F.col("embedding")).alias("nx"),
             )
-            .join(F.broadcast(cen), "g")
+            .join(cen, "g")
             .agg(
                 F.min(
                     vec_cosine_pre(
@@ -3197,7 +3197,7 @@ def sim_growing_cluster_sweep(spark, sf_dir):
             )
         )
         sep = (
-            vmin.crossJoin(F.broadcast(tmax))
+            vmin.crossJoin(tmax)
             .select(
                 (
                     F.col("t") * (2 * F.col("v") * F.col("v") - 1)
@@ -3226,8 +3226,8 @@ def sim_growing_cluster_sweep(spark, sf_dir):
                 .cast("long")
                 .alias("n_hits")
             )
-            .crossJoin(F.broadcast(n_exact))
-            .crossJoin(F.broadcast(sep))
+            .crossJoin(n_exact)
+            .crossJoin(sep)
             .select(
                 F.lit(n).cast("long").alias("n"),
                 F.lit(k).cast("long").alias("k"),
@@ -3379,7 +3379,7 @@ def retrained_cells(e, k: int, rounds: int = 2):
     round being the registered rk=1 nearest-derived-centroid assignment
     (`refreshed_cells`' machinery) over the previous round's labels.
     This is the k-means behind SCALE.md's "k ~ √N demonstrated" A/B
-    (scripts/ab_ksweep.py): at k=√N the per-cell population — and with
+    (scripts/ab_ksweep.py at 87f8177): at k=√N the per-cell population — and with
     it the multiprobe pair fan-out — stays bounded as the corpus grows,
     where the stored fixed-k assignment's grows linearly. Building
     block for moving the multiprobe production tier onto re-trained √N
@@ -3955,8 +3955,8 @@ def dedup_reassign_certification(spark, sf_dir):
         " ELSE {n} * 10000 div n_exact END AS BIGINT)"
     )
     return (
-        exact.crossJoin(F.broadcast(stored))
-        .crossJoin(F.broadcast(refreshed))
+        exact.crossJoin(stored)
+        .crossJoin(refreshed)
         .select(
             F.col("n_exact").cast("long").alias("n_exact"),
             F.col("n_stored").cast("long").alias("n_stored"),

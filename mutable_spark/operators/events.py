@@ -833,7 +833,7 @@ def events_pagerank(spark, sf_dir):
         .distinct()
     ).cache()
     n = nodes.agg(F.count(F.lit(1)).alias("n"))
-    r = nodes.crossJoin(F.broadcast(n)).select(
+    r = nodes.crossJoin(n).select(
         "t", F.expr(f"CAST({S} div n AS BIGINT)").alias("rq")
     )
     base = f"(({100 - D} * {S} div 100))"
@@ -845,7 +845,7 @@ def events_pagerank(spark, sf_dir):
             .agg(F.sum("part").cast("long").alias("contrib"))
         )
         r = (
-            nodes.crossJoin(F.broadcast(n))
+            nodes.crossJoin(n)
             .join(c, nodes["t"] == c["v"], "left")
             .select(
                 "t",

@@ -154,7 +154,7 @@ def op_join_range(spark, sf_dir):
     )
     return (
         li.join(
-            F.broadcast(spark_bands),
+            spark_bands,
             (F.col("l_extendedprice") >= F.col("lo"))
             & (F.col("l_extendedprice") < F.col("hi")),
         )

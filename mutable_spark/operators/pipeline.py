@@ -1518,7 +1518,7 @@ def pipeline_mix_temperature(spark, sf_dir):
         / F.col("sq").cast("double")
         / F.col("n").cast("double"),
     )
-    r = s.crossJoin(F.broadcast(tot)).select(
+    r = s.crossJoin(tot).select(
         "source", "n", rate.alias("rate")
     )
     kept = d.join(F.broadcast(r), "source").filter(
@@ -1585,7 +1585,7 @@ def pipeline_length_buckets(spark, sf_dir):
     g = t.agg(F.max("n_tok").alias("gmax"))
     cnt = F.count(F.lit(1))
     return (
-        b.crossJoin(F.broadcast(g))
+        b.crossJoin(g)
         .groupBy("bucket")
         .agg(
             cnt.alias("n_docs"),
@@ -2367,7 +2367,7 @@ def _dsir_selection_frame(tok_base):
     mx = scored.agg(F.max("score").alias("max_score"))
     u = _hash52(F.concat(F.lit("dsir:"), F.col("doc_id").cast("string")))
     return (
-        scored.crossJoin(F.broadcast(mx))
+        scored.crossJoin(mx)
         .select(
             "doc_id",
             "source",
@@ -2439,7 +2439,7 @@ def _dsir_scored(tok_base, buckets: int):
     )
     w = (
         rcnt.join(tcnt, "b", "left")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "b",
             F.expr(
@@ -2554,7 +2554,7 @@ def pipeline_dsir_sweep(spark, sf_dir):
             < F.col("score") * F.lit(_DSIR_SCALE)
         ).cast("long")
         out.append(
-            s.crossJoin(F.broadcast(mx)).agg(
+            s.crossJoin(mx).agg(
                 F.lit(b).cast("long").alias("buckets"),
                 F.count(F.lit(1)).cast("long").alias("n_pool"),
                 F.sum(sel).cast("long").alias("n_selected"),

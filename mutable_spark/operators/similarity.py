@@ -71,7 +71,7 @@ def sim_cosine_topk(spark, sf_dir):
         .select(F.col("embedding").alias("qv"), F.col("vec_id").alias("qid"))
     )
     return (
-        e.crossJoin(F.broadcast(q))
+        e.crossJoin(q)
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "vec_id",
@@ -266,7 +266,7 @@ def sim_ann_lsh(spark, sf_dir):
     ).cast("long")
     sig = (
         e.select("vec_id", F.posexplode("embedding").alias("dim", "x"))
-        .join(F.broadcast(planes), "dim")
+        .join(planes, "dim")
         .groupBy("vec_id", "plane")
         .agg(F.sum(scaled_term).alias("dot"))
         .groupBy("vec_id")
@@ -323,7 +323,7 @@ def sim_ann_lsh(spark, sf_dir):
     )
     return (
         cand_ids.join(e, "vec_id")
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select(
             "vec_id", "label", vec_cosine(F.col("embedding"), F.col("qv")).alias("cos")
         )
@@ -391,7 +391,7 @@ def _ivf_probe_labels(e, q, nprobe: int = 3):
         .select("label", F.col("arr.c").alias("centroid"))
     )
     probe_rows = (
-        cvec.crossJoin(F.broadcast(q))
+        cvec.crossJoin(q)
         .select("label", vec_cosine(F.col("centroid"), F.col("qv")).alias("cos"))
         .orderBy(F.col("cos").desc(), "label")
         .limit(nprobe)
@@ -431,7 +431,7 @@ def sim_ivf_topk(spark, sf_dir):
     return (
         e.filter(F.col("label").isin(probe_labels))
         .filter(F.col("vec_id") != F.lit(int(qid)))
-        .crossJoin(F.broadcast(q.select("qv")))
+        .crossJoin(q.select("qv"))
         .select(
             "vec_id", "label", vec_cosine(F.col("embedding"), F.col("qv")).alias("cos")
         )
@@ -781,7 +781,7 @@ def sim_ann_recall(spark, sf_dir):
         F.count(F.lit(1)).alias("n_hits")
     )
     nex = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    return nex.crossJoin(F.broadcast(hits)).select(
+    return nex.crossJoin(hits).select(
         F.lit(10).cast("long").alias("k"),
         F.col("n_exact").cast("long").alias("n_exact"),
         F.col("n_hits").cast("long").alias("n_hits"),
@@ -844,7 +844,7 @@ def sim_lsh_band_sweep(spark, sf_dir):
     ).cast("long")
     pb = (
         e.select("vec_id", F.posexplode("embedding").alias("dim", "x"))
-        .join(F.broadcast(planes), "dim")
+        .join(planes, "dim")
         .groupBy("vec_id", "plane")
         .agg(F.sum(scaled_term).alias("dot"))
         .select(
@@ -873,7 +873,7 @@ def sim_lsh_band_sweep(spark, sf_dir):
                 .alias("val")
             )
         )
-        qc = ch.join(F.broadcast(q), F.col("vec_id") == F.col("qid")).select(
+        qc = ch.join(q, F.col("vec_id") == F.col("qid")).select(
             F.col("pos").alias("qpos"), F.col("val").alias("qval")
         )
         cand = (
@@ -884,7 +884,7 @@ def sim_lsh_band_sweep(spark, sf_dir):
             )
             .select("vec_id")
             .distinct()
-            .crossJoin(F.broadcast(q))
+            .crossJoin(q)
             .filter(F.col("vec_id") != F.col("qid"))
         )
         n_cand = cand.agg(F.count(F.lit(1)).alias("n_cand"))
@@ -902,7 +902,7 @@ def sim_lsh_band_sweep(spark, sf_dir):
             F.count(F.lit(1)).alias("n_hits")
         )
         row = (
-            n_cand.crossJoin(F.broadcast(n_hits))
+            n_cand.crossJoin(n_hits)
             .select(
                 F.lit(b).cast("long").alias("bits_per_band"),
                 F.col("n_cand").cast("long").alias("n_cand"),
@@ -911,7 +911,7 @@ def sim_lsh_band_sweep(spark, sf_dir):
         )
         rows = row if rows is None else rows.unionByName(row)
     return (
-        rows.crossJoin(F.broadcast(n_exact))
+        rows.crossJoin(n_exact)
         .select(
             "bits_per_band",
             "n_cand",
@@ -1166,7 +1166,7 @@ def sim_quantized_rerank(spark, sf_dir):
         lambda acc, x: acc + x,
     )
     coarse = (
-        c.crossJoin(F.broadcast(q))
+        c.crossJoin(q)
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "vec_id",
@@ -1892,7 +1892,7 @@ def sim_pq_search(spark, sf_dir):
         ).cast("long")
     )
     served = (
-        ex.join(F.broadcast(shortlist), "vec_id")
+        ex.join(shortlist, "vec_id")
         .join(F.broadcast(qx), ["s", "d"])
         .groupBy("vec_id")
         .agg(exact_term.alias("dist_q"))
@@ -2168,7 +2168,7 @@ def sim_matryoshka_search(spark, sf_dir):
         F.col("ev"), F.col("qv"), F.col("cn"), F.col("qn")
     )
     served = (
-        full.join(F.broadcast(shortlist), "vec_id")
+        full.join(shortlist, "vec_id")
         .crossJoin(F.broadcast(q.select("qv", "qn")))
         .select("vec_id", cos_q.alias("cos_q"))
         .orderBy(F.col("cos_q").desc(), "vec_id")
@@ -2371,7 +2371,7 @@ def sim_ivfpq_search(spark, sf_dir):
         ).cast("long")
     )
     served = (
-        ex.join(F.broadcast(shortlist), "vec_id")
+        ex.join(shortlist, "vec_id")
         .join(F.broadcast(qx), ["s", "d"])
         .groupBy("vec_id")
         .agg(exact_term.alias("dist_q"))
@@ -2397,7 +2397,7 @@ def sim_ivfpq_search(spark, sf_dir):
         .limit(10)
         .select("vec_id", F.lit(1).alias("one"))
     )
-    return served.join(F.broadcast(exact_top), "vec_id", "left").select(
+    return served.join(exact_top, "vec_id", "left").select(
         "rnk",
         "vec_id",
         "dist_q",
@@ -2547,16 +2547,12 @@ def sim_ivfpq_nprobe_sweep(spark, sf_dir):
         .select(F.col("embedding").alias("qv"), F.col("vec_id").alias("qid"))
     )
     labels, qid = _ivf_probe_labels(e, qdf, nprobe=max(_NPROBE_SWEEP))
-    lrank = F.broadcast(
-        local_frame(
-            spark,
-            [(int(l), i + 1) for i, l in enumerate(labels)],
-            "label int, lrank int",
-        )
+    lrank = local_frame(
+        spark,
+        [(int(l), i + 1) for i, l in enumerate(labels)],
+        "label int, lrank int",
     )
-    tiers = F.broadcast(
-        local_frame(spark, [(n,) for n in _NPROBE_SWEEP], "nprobe int")
-    )
+    tiers = local_frame(spark, [(n,) for n in _NPROBE_SWEEP], "nprobe int")
     qx = ex.filter(F.col("vec_id") == qid).select(
         "s", "d", F.col("x").alias("qx")
     )
@@ -2628,7 +2624,7 @@ def sim_ivfpq_nprobe_sweep(spark, sf_dir):
     )
     hits = F.sum(F.coalesce(F.col("one"), F.lit(0))).cast("long")
     return (
-        served.join(F.broadcast(exact_top), "vec_id", "left")
+        served.join(exact_top, "vec_id", "left")
         .groupBy("nprobe")
         .agg(hits.alias("n_hits"))
         .select(
@@ -2691,12 +2687,12 @@ def sim_ivf_balance(spark, sf_dir):
         F.max("n").cast("long").alias("max_cell"),
     )
     b = (
-        s.crossJoin(F.broadcast(t.select("n_vecs")))
+        s.crossJoin(t.select("n_vecs"))
         .select(F.expr("(n * 1000000) div n_vecs").alias("b"))
         .agg(F.sum(F.expr("b * b")).cast("long").alias("sb2"))
     )
     return (
-        t.crossJoin(F.broadcast(b))
+        t.crossJoin(b)
         .select(
             "n_vecs",
             "n_cells",

@@ -1688,7 +1688,7 @@ def text_tfidf_terms(spark, sf_dir):
 
     scored = (
         tf.join(dfreq, "tok")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .withColumn(
             "score_q",
             F.expr(f"tf * ((n_docs * {_TFIDF_SCALE}) div df)"),
@@ -1939,7 +1939,7 @@ def text_bm25_rank(spark, sf_dir):
             for i in range(len(_BM25_TERMS))
         ],
     )
-    scored = base.crossJoin(F.broadcast(stats))
+    scored = base.crossJoin(stats)
     score = None
     for i in range(len(_BM25_TERMS)):
         term = F.when(F.col(f"tf{i}") == 0, F.lit(0).cast("long")).otherwise(
@@ -2092,7 +2092,7 @@ def text_quality_centroid(spark, sf_dir):
             for k in range(_NF)
         ).alias("wsm"),
     )
-    scored = base.crossJoin(F.broadcast(w))
+    scored = base.crossJoin(w)
     wx = sum(F.col(f"w{k}") * F.col(f"f{k}") for k in range(_NF))
     pred = F.when(
         F.lit(2) * F.col("np") * F.col("nm") * wx

@@ -172,7 +172,7 @@ def op_expr_string(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     return (
         t.nation.join(
-            F.broadcast(t.region),
+            t.region,
             t.nation.n_regionkey == t.region.r_regionkey,
         )
         .filter(F.col("n_name").like("%A%") & ~F.col("r_name").like("_SIA%"))
@@ -288,7 +288,7 @@ def op_join_nary(spark, sf_dir):
             t.orders, t.lineitem.l_orderkey == t.orders.o_orderkey
         )
         .join(t.customer, t.orders.o_custkey == t.customer.c_custkey)
-        .join(F.broadcast(t.nation), t.customer.c_nationkey == t.nation.n_nationkey)
+        .join(t.nation, t.customer.c_nationkey == t.nation.n_nationkey)
         .withColumn("dp_c", dp_c)
         .groupBy("n_name")
         .agg(
@@ -308,12 +308,12 @@ def op_join_nary(spark, sf_dir):
 def op_cross_product(spark, sf_dir):
     """Cartesian product (comma-FROM with no predicate; the reference's
     PEall enumerates these, `src/IR/PlanEnumerator.cpp:33-63`). Explicit
-    crossJoin — only ever sane when at least one side is tiny, hence the
-    broadcast."""
+    crossJoin — only ever sane when at least one side is tiny, as the
+    5-row region is: Catalyst broadcasts it by its exact size."""
     t = load_tables(spark, sf_dir)
     a = t.region.alias("a")
     b = t.region.alias("b")
-    return a.crossJoin(F.broadcast(b)).select(
+    return a.crossJoin(b).select(
         F.col("a.r_name").alias("r1"), F.col("b.r_name").alias("r2")
     )
 

@@ -332,9 +332,9 @@ def tpch_q5(spark, sf_dir):
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .join(
-            F.broadcast(t.region.filter(F.col("r_name") == "ASIA")),
+            t.region.filter(F.col("r_name") == "ASIA"),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .withColumn("dp_c", _dp_c())
@@ -378,7 +378,7 @@ def tpch_q10(spark, sf_dir):
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .withColumn("dp_c", _dp_c())
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name", "c_mktsegment")
         .agg(split_sum("dp_c", 4).alias("revenue"))

@@ -148,10 +148,7 @@ def get_spark(app_name: str = "mutable_spark", cpus: int | None = None) -> Spark
         # tune: any long-lived driver serving a multi-query workload
         # wants the cache sized to its distinct codegen units; memory
         # cost is bounded (generated classes are KBs — tens of MB total).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         # No per-call call-site capture (static conf; PySpark also caches
         # it per process at the first wrapped call). With it on, every
         # Column method and F.col captures the Python stack and makes ~6

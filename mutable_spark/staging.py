@@ -28,14 +28,20 @@ def source_files(paths) -> list[Path]:
     return out
 
 
-def staged(name: str, sources, recipe: str, write) -> str:
-    """The copy ``write(tmp_path)`` builds from ``sources`` under ``recipe``;
-    ``write`` runs only when that copy does not exist yet."""
+def fingerprint(sources, recipe: str) -> str:
+    """Hash of ``recipe`` and the realpath, size and ``mtime_ns`` of every
+    file behind ``sources``: it changes when any source is rewritten."""
     h = hashlib.sha256(recipe.encode())
     for f in source_files(sources):
         st = f.stat()
         h.update(f"\0{os.path.realpath(f)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    fp = h.hexdigest()[:16]
+    return h.hexdigest()[:16]
+
+
+def staged(name: str, sources, recipe: str, write) -> str:
+    """The copy ``write(tmp_path)`` builds from ``sources`` under ``recipe``;
+    ``write`` runs only when that copy does not exist yet."""
+    fp = fingerprint(sources, recipe)
     dest = Path(os.environ.get("SPARK_GRAFT_RELAYOUT_DIR", _DEFAULT_ROOT)) / f"{name}-{fp}"
     with _LOCKS.setdefault(str(dest), threading.Lock()):
         if not dest.exists():

@@ -986,7 +986,8 @@ def test_multiprobe_tier_broadcast_assign_no_cartesian(plans, spark):
     consumer joins are pinned SHUFFLE_HASH: a checkpoint scan has no
     stats, and the planner's fallback was SortMergeJoin — full sorts of
     the multi-million-row candidate stream
-    (plans/r15/dedup_embedding_multiprobe_{before,after}.txt).
+    (plans/r15/dedup_embedding_multiprobe_{before,after}.txt, in git at
+    87f8177).
 
     r16 (opt round 2): the two VERIFY joins are bytes-gated
     (`_gate_verify_side`) — the tier knows the corpus row count (it

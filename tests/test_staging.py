@@ -210,6 +210,24 @@ def test_staged_source_copy_follows_rewritten_source(spark, sf_copy, kind):
     assert count(spark, after) == n
 
 
+def test_bucketed_join_follows_rewritten_orders(spark, sf_copy):
+    import duckdb
+
+    from tests.conftest import TABLES
+    from tests.oracle_harness import compare
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_copy}/{t}.parquet'")
+    try:
+        assert compare("op_join_bucketed", spark, con, str(sf_copy))[0]
+        _halve(sf_copy / "orders.parquet")
+        ok, msg = compare("op_join_bucketed", spark, con, str(sf_copy))
+        assert ok, msg
+    finally:
+        con.close()
+
+
 def test_tpch_dsv_export_follows_rewritten_testdata(spark, sf_copy):
     from mutable_spark.plans.dialect_tpch import _data_dir
 
