@@ -54,23 +54,19 @@ _TABLE_CACHE: dict[tuple, DataFrame] = {}
 # query (tpch_q3 0.67→0.51 s off, sessionize 0.42→0.18 s, legacy-21 total
 # 11.36→9.89 s) while the data is far too small for any re-plan to change
 # the answer. So the catalog makes the cost-based call the optimizer
-# can't: inputs below _AQE_BYTES_THRESHOLD plan WITHOUT the barriers;
-# above it (the 100 TB design point) AQE stays on — exactly the regime
-# where a wrong join strategy or a skewed key costs minutes, not
-# milliseconds. The session default (session.RUNTIME_CONFS) remains ON,
-# so paths that never load catalog tables keep the scale posture.
+# can't, from the corpus alone: a directory whose ``*.parquet`` files sum
+# below _AQE_BYTES_THRESHOLD plans WITHOUT the barriers and with narrow
+# shuffles; at or above it (the 100 TB design point), or when its layout
+# is empty or unreadable, AQE stays on with the session's own shuffle
+# width — exactly the regime where a wrong join strategy or a skewed key
+# costs minutes, not milliseconds. No caller hint enters the decision, so
+# every query over one corpus sees one posture. The session default
+# (session.RUNTIME_CONFS) remains ON, so paths that never load catalog
+# tables keep the scale posture.
 # ---------------------------------------------------------------------------
 
 _AQE_BYTES_THRESHOLD = 256 * 1024 * 1024
-#: (path, dir-mtime) → bytes; the mtime in the key invalidates the entry
-#: when testdata is regenerated in place (r11 ADVICE — the staging
-#: modules' fingerprint discipline applied here too). File GROWTH without
-#: a directory entry change keeps the old classification for the process
-#: lifetime; acceptable — testdata refreshes rewrite files (new inodes
-#: touch the dir), and the failure mode is a conservative posture, not a
-#: wrong answer.
-_DIR_BYTES_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
-#: session → (sf_dir, resolved posture) the AQE gate last applied (avoids
+#: session → sf_dir whose posture the gate last applied (avoids a glob and
 #: a py4j conf.set roundtrip per load_table call); weak keys so entries
 #: die with their session instead of colliding on a reused address.
 #: CONTRACT: confs are session-global and Spark reads them at EXECUTION
@@ -80,50 +76,9 @@ _DIR_BYTES_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
 #: one sf_dir per session; a caller mixing sizes inherits the scale-safe
 #: direction only when the LAST dir is the big one — mixed-size sessions
 #: should pin spark.sql.adaptive.enabled=true themselves.
-_AQE_APPLIED: "weakref.WeakKeyDictionary[SparkSession, tuple]" = (
+_AQE_APPLIED: "weakref.WeakKeyDictionary[SparkSession, str]" = (
     weakref.WeakKeyDictionary()
 )
-
-
-def _dir_input_bytes(sf_dir: str, inflation: float = 1.0) -> int:
-    """Estimated peak shuffle bytes for queries over ``sf_dir``: the raw
-    parquet bytes, plus (inflation−1)× the DOCUMENTS table's share when an
-    op family declares a shingle/gram blow-up — only the text corpus
-    explodes under those tiers, so inflating the whole directory would
-    misclassify dirs whose bulk is lineitem/events (and flip the measured
-    small-SF posture for no shuffle that actually exists)."""
-    path = sf_dir.rstrip("/")
-    p = Path(path)
-    try:
-        mtime = p.stat().st_mtime
-    except OSError:
-        mtime = -1.0
-    key = (path, mtime)
-    if key not in _DIR_BYTES_CACHE:
-        # one live entry per directory: a regenerated sf_dir gets a new
-        # mtime key, so purge the stale ones (keeps the cache bounded in
-        # long-lived processes that rewrite testdata, e.g. planted-corpus
-        # tests)
-        for k in [k for k in _DIR_BYTES_CACHE if k[0] == path]:
-            del _DIR_BYTES_CACHE[k]
-        try:
-            sizes = {
-                f.name: f.stat().st_size
-                for f in p.glob("*.parquet")
-                if f.is_file()
-            }
-        except OSError:
-            sizes = {}
-        total = sum(sizes.values())
-        # unknown/empty layouts count as huge: default to the AQE-on
-        # scale posture when we can't see the inputs
-        _DIR_BYTES_CACHE[key] = (
-            (total or (1 << 60)),
-            sizes.get("documents.parquet", 0),
-        )
-    total, docs = _DIR_BYTES_CACHE[key]
-    return total + int(docs * max(inflation - 1.0, 0.0))
-
 
 #: shuffle width for below-threshold inputs. Same-session A/B at sf0.1
 #: (min-of-3 per arm, both sweeps): 32 → 8 partitions takes the classic
@@ -136,21 +91,21 @@ def _dir_input_bytes(sf_dir: str, inflation: float = 1.0) -> int:
 _SMALL_SHUFFLE_PARTITIONS = "8"
 
 
-def _tune_aqe(spark: SparkSession, sf_dir: str, inflation: float = 1.0) -> None:
-    """Apply the size posture for ``sf_dir``. ``inflation`` is the op
-    family's declared blow-up of shuffle bytes over input bytes
-    (explode-heavy shingle/gram tiers inflate ~10-20×; r11 verdict nit:
-    a ~100-250 MiB corpus under such an op builds multi-GiB shuffles
-    that NEED AQE's skew splitting and the wide shuffle default, so the
-    gate compares inflated bytes against the threshold)."""
+def _tune_aqe(spark: SparkSession, sf_dir: str) -> None:
+    """Apply the size posture for ``sf_dir``, a function of its parquet
+    bytes alone; the bytes are summed only when the session last applied
+    another directory's posture."""
     key = sf_dir.rstrip("/")
-    big = _dir_input_bytes(key, inflation) >= _AQE_BYTES_THRESHOLD
-    memo = (key, big)
     try:
-        if _AQE_APPLIED.get(spark) == memo:
+        if _AQE_APPLIED.get(spark) == key:
             return
     except TypeError:
         pass  # non-weakref-able session stub (tests): fall through and set
+    try:
+        total = sum(f.stat().st_size for f in Path(key).glob("*.parquet") if f.is_file())
+    except OSError:
+        total = 0
+    big = not total or total >= _AQE_BYTES_THRESHOLD
     try:
         if not hasattr(spark, "_msq_default_shuffle"):
             spark._msq_default_shuffle = spark.conf.get(
@@ -161,7 +116,7 @@ def _tune_aqe(spark: SparkSession, sf_dir: str, inflation: float = 1.0) -> None:
             "spark.sql.shuffle.partitions",
             spark._msq_default_shuffle if big else _SMALL_SHUFFLE_PARTITIONS,
         )
-        _AQE_APPLIED[spark] = memo
+        _AQE_APPLIED[spark] = key
     except Exception:
         pass
 
@@ -275,29 +230,16 @@ def footer_schema(path) -> T.StructType | None:
         return None
 
 
-#: declared shuffle blow-up of the word-shingle / rolling-gram tiers: a
-#: document of n tokens explodes into ~n 3-gram shingle rows (each
-#: carrying a hash) or ~n k-gram rows — measured 10-20× the input bytes
-#: once per-row overhead is counted. Op families built on those tiers
-#: pass this to ``load_tables`` so the AQE gate sizes against SHUFFLE
-#: bytes, not input bytes (r11 verdict nit #1).
-SHINGLE_INFLATION = 16.0
-
-
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, inflation: float = 1.0
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table with engine type normalization.
 
     - ``events.ts`` arrives as INT64 TIMESTAMP(NANOS) (Spark can't read it
       natively; `spark.sql.legacy.parquet.nanosAsLong` is set by
       ``apply_runtime_confs``). Convert nanos → TIMESTAMP_NTZ via exact
       integer division, matching DuckDB's ns→µs truncation.
-    - ``inflation`` forwards the op family's shuffle blow-up hint to the
-      AQE size gate (see ``SHINGLE_INFLATION``).
     """
     apply_runtime_confs(spark)
-    _tune_aqe(spark, sf_dir, inflation)
+    _tune_aqe(spark, sf_dir)
     # applicationId (not id(spark)): a stopped session's address can be
     # reused by a new one, which would serve dead plans from the cache
     try:
@@ -321,16 +263,9 @@ def load_table(
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, inflation: float = 1.0
-) -> SimpleNamespace:
+def load_tables(spark: SparkSession, sf_dir: str) -> SimpleNamespace:
     """All testdata tables as attributes: ``t.lineitem``, ``t.orders``, …"""
-    return SimpleNamespace(
-        **{
-            name: load_table(spark, sf_dir, name, inflation)
-            for name in TABLE_NAMES
-        }
-    )
+    return SimpleNamespace(**{name: load_table(spark, sf_dir, name) for name in TABLE_NAMES})
 
 
 def table_backing_path(spark: SparkSession, sf_dir: str, name: str) -> str | None:

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from mutable_spark.catalog import SHINGLE_INFLATION, load_tables
+from mutable_spark.catalog import load_tables
 from mutable_spark.functions import memo_exprs
 from mutable_spark.registry import query
 
@@ -264,7 +264,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     min(|A|,|B|) / max(|A|,|B|) ≥ t, so no qualifying pair is dropped.
     Still O(n²) after pruning — this is the correctness baseline; at scale
     run ``dedup_minhash_lsh`` (identical verified output, linear-ish cost)."""
-    g = _shingle_df(load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents)
+    g = _shingle_df(load_tables(spark, sf_dir).documents)
     a = g.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = g.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
@@ -395,7 +395,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     Above the cap the intended consumer is components, not the pair list
     — see ``tests/test_dedup_scale.py::test_minhash_degenerate_corpus_bounded``
     and COVERAGE.md."""
-    g = _hashed_shingle_df(load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents).cache()
+    g = _hashed_shingle_df(load_tables(spark, sf_dir).documents).cache()
     return minhash_lsh_pairs(g)
 
 
@@ -552,7 +552,7 @@ def dedup_duplicate_classes(spark, sf_dir):
     The unique fixpoint (min id reachable from each node) is engine
     independent, so the DuckDB oracle computes the same classes with a
     recursive CTE over the identical exact-verified pair list."""
-    g = _hashed_shingle_df(load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents).cache()
+    g = _hashed_shingle_df(load_tables(spark, sf_dir).documents).cache()
     pairs = (
         minhash_lsh_pairs(g).select("doc_a", "doc_b").localCheckpoint(eager=True)
     )
@@ -1118,7 +1118,7 @@ def dedup_simhash(spark, sf_dir):
     vote with their frequency (the standard weighted SimHash)."""
     # no cache: with hamming computed inside the bucket rows (below) the
     # whole plan is one linear pipeline — every subframe is read once
-    sig = _simhash_sig_df(load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents)
+    sig = _simhash_sig_df(load_tables(spark, sf_dir).documents)
     return simhash_pairs(sig)
 
 
@@ -1335,7 +1335,7 @@ def dedup_verbatim_ngrams(spark, sf_dir):
     contract; a 100 TB run feeds the star spanning set to components
     instead). The oracle mirrors the identical arithmetic, so the span
     evidence is hash-checked bit-for-bit."""
-    e = verbatim_gram_rows(load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents)
+    e = verbatim_gram_rows(load_tables(spark, sf_dir).documents)
     grouped = (
         e.groupBy("h")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id"))).alias("ms"))
@@ -1496,7 +1496,7 @@ def dedup_duplicate_spans(spark, sf_dir):
     bucket-quadratic, which is why real 100 TB scrubbing runs span
     removal, not pair enumeration. Oracle mirrors the identical
     arithmetic (same token hashes, same run rule), hash-checked."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     return duplicate_span_frame(d)
 
 
@@ -1575,7 +1575,7 @@ def dedup_scrub_spans(spark, sf_dir):
     is bounded by single-document size. Oracle: NOT EXISTS against the
     same materialized span CTE + string_agg ORDER BY pos — the
     scrubbed text itself is hash-checked, not just the counts."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     return _apply_span_scrub(d, duplicate_span_frame(d))
 
 
@@ -1665,7 +1665,7 @@ def dedup_scrub_spans_canonical(spark, sf_dir):
     text end to end."""
     from pyspark.sql import Window
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     g = positional_gram_frame(d)
     who = Window.partitionBy("h").orderBy("doc_id", "pos")
     dup = (
@@ -1732,7 +1732,7 @@ def dedup_span_k_sweep(spark, sf_dir):
     |_SPAN_K_SWEEP| independent linear passes, embarrassingly parallel
     across a cluster. Oracle stacks the per-k CTE chains over ONE
     shared token-hash CTE."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     outs = []
     for k in _SPAN_K_SWEEP:
         spans = duplicate_span_frame(d, k)
@@ -1786,7 +1786,7 @@ def dedup_threshold_histogram(spark, sf_dir):
     Scale shape: everything up to `minhash_lsh_pairs` is the shared LSH
     tier (its shuffles and caps documented at `dedup_minhash_lsh`); the
     histogram adds one partial-agg groupBy on a ≤10-value key."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     g = _hashed_shingle_df(d).cache()
     pairs = minhash_lsh_pairs(g)
     bucket = F.least(F.lit(9), F.floor(F.col("jac") * 10)).cast("long")
@@ -1858,7 +1858,7 @@ def dedup_containment(spark, sf_dir):
     of >cap shingles is not seen (mirrored by the oracle, which applies
     the identical cap) — `dedup_containment_certification` measures that
     floor as a driver-checked recall number."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     return containment_pairs(d)
 
 
@@ -2008,7 +2008,7 @@ def dedup_tier_certification(spark, sf_dir):
     Shape: the tier's cost plus the sampled baseline's; the final
     comparison is a full-outer join on the pair key and a 1-row count
     aggregate."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents.filter(
+    d = load_tables(spark, sf_dir).documents.filter(
         F.col("doc_id") % _CERT_MOD == 0
     )
     g = _hashed_shingle_df(d).cache()
@@ -2080,7 +2080,7 @@ def dedup_simhash_certification(spark, sf_dir):
     tier reads it through 4 chunk buckets, the baseline through a
     theta self-join), a full-outer join on the pair key, a 1-row
     count aggregate."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents.filter(
+    d = load_tables(spark, sf_dir).documents.filter(
         F.col("doc_id") % _CERT_MOD == 0
     )
     sig = _simhash_sig_df(d).cache()
@@ -2164,7 +2164,7 @@ def dedup_containment_certification(spark, sf_dir):
     theta-join bounded by the sample); a full-outer join on the pair
     key; a 1-row count aggregate. Vacuous samples certify through the
     0-denominator guards."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents.filter(
+    d = load_tables(spark, sf_dir).documents.filter(
         F.col("doc_id") % _CERT_MOD == 0
     )
     g = _hashed_shingle_df(d).cache()

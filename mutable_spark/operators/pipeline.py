@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from mutable_spark.catalog import SHINGLE_INFLATION, load_tables
+from mutable_spark.catalog import load_tables
 from mutable_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _NORMALIZE_SQL,
@@ -108,7 +108,7 @@ def pipeline_clean_corpus(spark, sf_dir, pair_source: str = "lsh"):
     unbounded at 100 TB, so no forced broadcast."""
     from pyspark.sql import Window
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     toks = _tokens()
     quality = quality_expr()
 
@@ -254,7 +254,7 @@ def pipeline_decontaminate(spark, sf_dir):
     catches verbatim and trailing-marker-mutated copies; the fuzzy tier
     for paraphrased contamination is the MinHash machinery
     (``dedup_minhash_lsh`` with the eval set as one side)."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     digest = F.md5(_normalize(F.col("text")))
     evalset = (
         d.filter(F.col("doc_id") % _EVAL_MOD == 0)
@@ -317,7 +317,7 @@ def pipeline_decontaminate_fuzzy(spark, sf_dir):
     near-identical items and any one of them attests contamination).
     Testdata stays far under the cap
     (`tests/test_dedup_scale.py::test_testdata_classes_under_cap`)."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     is_eval = F.pmod(F.col("doc_id"), F.lit(_EVAL_MOD)) == 0
     contaminated = fuzzy_contaminated_ids(d, is_eval)
     # broadcast the contamination list (bounded by the eval side — the
@@ -827,7 +827,7 @@ def pipeline_contamination_stats(spark, sf_dir):
     sort-merge join anywhere."""
     import mutable_spark.operators.dedup as D
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     is_eval = F.pmod(F.col("doc_id"), F.lit(_EVAL_MOD)) == 0
     g = D._hashed_shingle_df(d).cache()
     ev = g.filter(is_eval).select("doc_id", F.explode("shh").alias("h"))
@@ -917,7 +917,7 @@ def pipeline_dedup_keep_best(spark, sf_dir):
     import mutable_spark.operators.dedup as D
     from pyspark.sql import Window
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     g = D._hashed_shingle_df(d).cache()
     pairs = (
         D.minhash_lsh_pairs(g)
@@ -1088,7 +1088,7 @@ def pipeline_bpe_budget_sample(spark, sf_dir):
 
     from mutable_spark.operators.text import _bpe_merge_rounds, _toks
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     _, syms = _bpe_merge_rounds(d)
     wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
     dw = d.select(
@@ -1199,7 +1199,7 @@ def pipeline_end_to_end(spark, sf_dir):
     documents never consume a source's token quota."""
     from pyspark.sql import Window
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     digest = F.md5(_normalize(F.col("text")))
 
     qualified = (
@@ -1625,7 +1625,7 @@ def pipeline_dedup_stats(spark, sf_dir):
     verbatim), then a second partial-agg groupBy on the class-size key,
     whose cardinality is bounded by the largest duplicate class — tiny
     at any corpus size. Nothing else moves."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     classes = (
         d.select(F.md5(_normalize(F.col("text"))).alias("g"))
         .groupBy("g")
@@ -1668,7 +1668,7 @@ def pipeline_split_leakage_safe(spark, sf_dir):
 
     Oracle: the classes recursive CTE shared with
     ``dedup_duplicate_classes`` + the identical md5-prefix arithmetic."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     import mutable_spark.operators.dedup as D
 
     g = D._hashed_shingle_df(d).cache()
@@ -2787,7 +2787,7 @@ def pipeline_pack_bpe(spark, sf_dir):
     the oracle matches bit-for-bit."""
     from mutable_spark.operators.text import _bpe_merge_rounds, _toks
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     _, syms = _bpe_merge_rounds(d)
     wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
     dw = d.select("doc_id", F.explode(_toks()).alias("w")).filter(

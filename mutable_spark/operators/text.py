@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from mutable_spark.catalog import SHINGLE_INFLATION, load_tables
+from mutable_spark.catalog import load_tables
 from mutable_spark.registry import query
 from mutable_spark.session import local_frame
 
@@ -803,7 +803,7 @@ def text_bpe_pairs(spark, sf_dir):
     through the already-aggregated freq. Two partial-agg shuffles
     (word counts, pair counts) and a top-k finish
     (TakeOrderedAndProject) — no global sort, no joins."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     return bpe_pair_counts_frame(d).orderBy(
         F.col("total_count").desc(), "pair"
     ).limit(50)
@@ -877,7 +877,7 @@ def text_bpe_train(spark, sf_dir):
     DuckDB oracle chains one fragment per round (the `_sql_assign_round`
     pattern) with the argmax as 1-row CTEs, so the learned rules are
     hash-checked end to end."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     rules, _ = _bpe_merge_rounds(d)
     return local_frame(
         spark, rules, "round long, sym_a string, sym_b string, pair_count long"
@@ -1144,7 +1144,7 @@ def text_bpe_train_batched(spark, sf_dir):
     collect instead of a 1-row collect). The DuckDB oracle chains the
     SAME greedy-disjoint selection as ``_BPE_BATCH`` dependent 1-row
     CTEs per round, so every accepted rule is hash-checked."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     words = (
         d.select(F.explode(_toks()).alias("w"))
         .filter(F.length("w") >= 1)
@@ -1394,7 +1394,7 @@ def text_bpe_sweep(spark, sf_dir):
     (Spark `div`, DuckDB `//`) — no float crosses the compare. Oracle:
     the same chained round fragments, one SUM per s_r CTE."""
     curve = []
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     _bpe_merge_rounds(d, curve=curve)
     # a merge-less round leaves the symbolization (and the oracle's
     # s_{r+1} CTE) unchanged — pad to the oracle's fixed row count
@@ -1427,7 +1427,7 @@ def text_bpe_fertility(spark, sf_dir):
     both engines, no float crosses the compare. Corpus size enters
     only the encode join (the `text_bpe_encode` plan contract: vocab
     side ShuffledHashJoin, plan-pinned there)."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     _, syms = _bpe_merge_rounds(d)
     wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
     dw = d.select(
@@ -1481,7 +1481,7 @@ def text_bpe_encode(spark, sf_dir):
     vocabulary frame. The oracle chains the same per-round fragments as
     `text_bpe_train` and joins the final symbolization back to the
     document word stream — counts hash-checked end to end."""
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     _, syms = _bpe_merge_rounds(d)
     wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
     dw = d.select("doc_id", F.explode(_toks()).alias("w")).filter(
@@ -1771,7 +1771,7 @@ def text_boilerplate_grams(spark, sf_dir):
     output is one row per document with ≥ k tokens."""
     import mutable_spark.operators.dedup as D
 
-    d = load_tables(spark, sf_dir, inflation=SHINGLE_INFLATION).documents
+    d = load_tables(spark, sf_dir).documents
     # cached: the gram tier (token md5s + k-1 zip_withs + distinct +
     # explode) has TWO consumers — the df dictionary and the join-back —
     # and recomputing it doubled the dominant map work (measured

@@ -18,6 +18,7 @@ BigDecimal per row — measured 0.79 s → 0.66 s on Q1 at sf0.1.
 
 from __future__ import annotations
 
+import threading
 import weakref
 
 import pyspark.sql.functions as F
@@ -83,21 +84,25 @@ _SQL_CH_C = f"({_SQL_DP_C} * (100 + {_SQL_T}))"
 #: different sf_dir yields a different cached frame → different id() →
 #: re-registration happens.
 _VIEWS_BOUND: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+#: held from binding the views through analysing the query, so a thread
+#: binding another sf_dir's frames cannot slip in between the two
+_BIND_LOCK = threading.Lock()
 
 
 def _q(spark, sf_dir, tables, sql):
     t = load_tables(spark, sf_dir)
-    try:
-        bound = _VIEWS_BOUND.setdefault(spark, {})
-    except TypeError:  # non-weakref-able session stub (tests)
-        bound = {}
-    for tbl in tables:
-        df = getattr(t, tbl)
-        name = f"msq_{tbl}"
-        if bound.get(name) != id(df):
-            df.createOrReplaceTempView(name)
-            bound[name] = id(df)
-    return spark.sql(sql)
+    with _BIND_LOCK:
+        try:
+            bound = _VIEWS_BOUND.setdefault(spark, {})
+        except TypeError:  # non-weakref-able session stub (tests)
+            bound = {}
+        for tbl in tables:
+            df = getattr(t, tbl)
+            name = f"msq_{tbl}"
+            if bound.get(name) != id(df):
+                df.createOrReplaceTempView(name)
+                bound[name] = id(df)
+        return spark.sql(sql)
 
 
 def _s_cents(c: str) -> str:

@@ -67,20 +67,33 @@ from mutable_spark.functions import dsum, sql_dsum  # noqa: E402
 from mutable_spark.registry import query  # noqa: E402
 
 
+_BUCKETS = 8
+
+
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
-    """Write orders+lineitem bucketed by orderkey once per session and
-    source files; return the table-name suffix. The suffix is the sources'
-    identity (realpath, size, ``mtime_ns``) and the session's
-    ``applicationId``, so a rewritten source gets fresh tables. The write
-    is the one-time ingest cost the co-located read-path amortizes —
+    """Register orders+lineitem bucketed and sorted by orderkey in this
+    session; return the table-name suffix, the sources' identity. The files
+    are written once per source identity by ``staging.staged``, outside the
+    warehouse; a session only registers them, without a Spark job. The
+    write is the one-time ingest cost the co-located read-path amortizes —
     exactly the reference's IMPORT-before-query boundary."""
     base = Path(sf_dir.rstrip("/"))
-    sources = [base / "orders.parquet", base / "lineitem.parquet"]
-    sfx = staging.fingerprint(sources, spark.sparkContext.applicationId)
-    if not spark.catalog.tableExists(f"msq_bkt_lineitem_{sfx}"):  # written last
-        t = load_tables(spark, sf_dir)
-        write_bucketed(t.orders, f"msq_bkt_orders_{sfx}", "o_orderkey")
-        write_bucketed(t.lineitem, f"msq_bkt_lineitem_{sfx}", "l_orderkey")
+    sfx = staging.fingerprint([base / "orders.parquet", base / "lineitem.parquet"], "bucketed")
+    t = load_tables(spark, sf_dir)
+    for table, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        df = getattr(t, table)
+
+        def write(tmp: str) -> None:
+            build = f"msq_bkt_build_{table}"
+            spark.sql(f"DROP TABLE IF EXISTS {build}")
+            df.write.bucketBy(_BUCKETS, key).sortBy(key).option("path", tmp).saveAsTable(build)
+            spark.sql(f"DROP TABLE {build}")  # external: the files stay
+
+        dest = staging.staged(f"bucketed-{table}", [base / f"{table}.parquet"], f"bucketBy:{_BUCKETS}:{key}", write)
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS msq_bkt_{table}_{sfx} ({df.schema.toDDL()}) USING parquet"
+            f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {_BUCKETS} BUCKETS LOCATION '{dest}'"
+        )
     return sfx
 
 

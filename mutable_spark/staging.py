@@ -1,9 +1,10 @@
 """Build-once staging of derived on-disk copies: relayouts, IMPORT stores,
-format round-trip fixtures. A copy lives under ``SPARK_GRAFT_RELAYOUT_DIR``
-(default ``.relayout/``), which is safe to delete, keyed by its source
-files' realpath, size and ``mtime_ns`` plus the caller's recipe. It is built
-in a private ``.build-*`` directory and published by an atomic rename, so an
-existing copy is complete and a failed build leaves nothing behind."""
+format round-trip fixtures, bucketed tables and stream source directories.
+A copy lives under ``SPARK_GRAFT_RELAYOUT_DIR`` (default ``.relayout/``),
+which is safe to delete, keyed by its source files' realpath, size and
+``mtime_ns`` plus the caller's recipe. It is built in a private
+``.build-*`` directory and published by an atomic rename, so an existing
+copy is complete and a failed build leaves nothing behind."""
 
 from __future__ import annotations
 
@@ -57,3 +58,15 @@ def staged(name: str, sources, recipe: str, write) -> str:
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
     return str(dest)
+
+
+def linked(name: str, src: Path) -> str:
+    """A directory holding one symlink to ``src``, staged by its identity:
+    Spark's file stream source reads a directory, and a testdata directory
+    holds every table."""
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        os.symlink(src.resolve(strict=True), os.path.join(tmp, src.name))
+
+    return staged(name, [src], "link", write)

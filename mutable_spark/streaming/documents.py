@@ -31,23 +31,21 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mutable_spark import staging
 from mutable_spark.catalog import footer_schema
 from mutable_spark.session import apply_runtime_confs
-from mutable_spark.streaming.staging import _ensure_link, _stage_dir
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents parquet. Same staging trick as
-    `stream_events`: FileStreamSource needs a directory, so a symlink-only
-    dir holds just documents.parquet; the schema comes from the batch
+    `stream_events`: FileStreamSource needs a directory, so a staged dir
+    holds one symlink to documents.parquet; the schema comes from the batch
     catalog's footer probe so stream and batch can never disagree on dtypes."""
     apply_runtime_confs(spark)
     src = Path(sf_dir.rstrip("/")) / "documents.parquet"
-    stage = _stage_dir("mutable_spark_stream_docs", src)
-    link = stage / "documents.parquet"
-    _ensure_link(link, src)
+    stage = staging.linked("stream-docs", src)
     schema = footer_schema(src) or spark.read.parquet(str(src)).schema
-    return spark.readStream.schema(schema).parquet(str(stage))
+    return spark.readStream.schema(schema).parquet(stage)
 
 
 def _digest(col="text"):

@@ -22,10 +22,10 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from mutable_spark import staging
 from mutable_spark.catalog import footer_schema
 from mutable_spark.functions import dsum
 from mutable_spark.session import apply_runtime_confs
-from mutable_spark.streaming.staging import _ensure_link, _stage_dir
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     """Raw file schema for the streaming source; ``ts`` is LongType for
@@ -51,18 +51,14 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly). Streaming and batch must agree on this guard or every
     watermark/window is silently 1000x off."""
     apply_runtime_confs(spark)
-    # FileStreamSource requires a *directory*; the testdata dir mixes all
-    # tables, so stage a symlink-only dir (no copy) holding just events.
     src = Path(sf_dir.rstrip("/")) / "events.parquet"
-    stage = _stage_dir("mutable_spark_stream", src)
-    link = stage / "events.parquet"
-    _ensure_link(link, src)
+    stage = staging.linked("stream-events", src)
     # Probe the footer through the same helper the batch path uses, so the
     # two can never disagree on the raw dtype.
     schema = footer_schema(src) or spark.read.parquet(str(src)).schema
     is_nanos = isinstance(schema["ts"].dataType, T.LongType)
     ts_type = T.LongType() if is_nanos else T.TimestampNTZType()
-    raw = spark.readStream.schema(_events_raw_schema(ts_type)).parquet(str(stage))
+    raw = spark.readStream.schema(_events_raw_schema(ts_type)).parquet(stage)
     # NOTE: watermarks require TIMESTAMP (an instant), not TIMESTAMP_NTZ —
     # with the session timezone pinned to UTC (RUNTIME_CONFS) the collected
     # wall-clock values are identical to the batch twin's NTZ values.

@@ -8,6 +8,8 @@ import pytest
 from mutable_spark.session import get_spark
 
 SF_DIR = os.environ.get("MS_TEST_SF_DIR", "/root/testdata/sf0.001")
+#: the directory holding every testdata scale: sf0.001, sf0.01 and sf0.1
+TESTDATA = os.path.dirname(SF_DIR.rstrip("/"))
 
 TABLES = (
     "region",

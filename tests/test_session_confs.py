@@ -3,10 +3,18 @@
 second session sharing the context (``spark.newSession()``) must get its
 own application — the old applicationId-keyed memo silently skipped it."""
 
+from contextlib import contextmanager
+
+from pyspark.sql.conf import RuntimeConfig
+
+from mutable_spark import catalog as C, registry
+from mutable_spark.catalog import load_tables
 from mutable_spark.session import RUNTIME_CONFS, apply_runtime_confs
+from tests.conftest import TESTDATA
 
 # a conf that is runtime-settable and session-scoped
 _PROBE = "spark.sql.codegen.maxFields"
+_SF = f"{TESTDATA}/sf0.01"
 
 
 def test_new_session_sharing_context_gets_runtime_confs(spark):
@@ -35,92 +43,66 @@ def test_memo_is_per_session_object(spark):
     assert sib in S._CONFS_APPLIED
 
 
-def test_size_aware_aqe_gate(spark):
+@contextmanager
+def _big_corpus(spark, monkeypatch, sf_dir):
+    """``sf_dir``'s posture under a 1-byte threshold: a simulated big
+    deployment. The small-input posture is re-applied on exit."""
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(C, "_AQE_BYTES_THRESHOLD", 1)
+            C._AQE_APPLIED.pop(spark, None)
+            C._tune_aqe(spark, sf_dir)
+            yield
+    finally:
+        C._AQE_APPLIED.pop(spark, None)
+        C._tune_aqe(spark, sf_dir)
+
+
+def test_size_aware_aqe_gate(spark, monkeypatch):
     """catalog._tune_aqe (r11): inputs below the threshold plan without
     AQE's per-stage barriers; at/above it (the 100 TB posture) AQE is on."""
-    from mutable_spark import catalog as C
-
-    C.load_tables(spark, "/root/testdata/sf0.01")
+    load_tables(spark, _SF)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    with _big_corpus(spark, monkeypatch, _SF):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
 
-    # simulate a big deployment: pretend the dir holds 1 TiB (cache keys
-    # are (path, dir-mtime) since r12 — seed via the real key)
-    fake = "/root/testdata/sf0.01"
-    ckey = next(k for k in C._DIR_BYTES_CACHE if k[0] == fake.rstrip("/"))
-    old = C._DIR_BYTES_CACHE[ckey]
-    try:
-        C._DIR_BYTES_CACHE[ckey] = (1 << 40, 0)
-        C._AQE_APPLIED.pop(spark, None)
-        C._tune_aqe(spark, fake)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    finally:
-        C._DIR_BYTES_CACHE[ckey] = old
-        C._AQE_APPLIED.pop(spark, None)
-        C._tune_aqe(spark, fake)  # restore the small-input decision
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
 
-
-def test_aqe_gate_explode_inflation(spark):
-    """r11 verdict nit #1: op families whose tiers explode the DOCUMENTS
-    table declare an inflation factor; the gate sizes against the
-    inflated documents share. A mid-size corpus (sub-threshold raw, but
-    multi-GiB once shingled) plans WITH AQE + wide shuffles; the tiny
-    testdata stays in the small posture even when hinted; and inflation
-    never flips dirs whose bulk is non-document tables."""
-    from mutable_spark import catalog as C
-
-    key = "/root/testdata/sf0.01"
-    # hinted tiny corpus: posture unchanged (documents ≪ threshold/16)
-    C._AQE_APPLIED.pop(spark, None)
-    C._tune_aqe(spark, key, inflation=C.SHINGLE_INFLATION)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    ckey = next(k for k in C._DIR_BYTES_CACHE if k[0] == key)
-    old = C._DIR_BYTES_CACHE[ckey]
-    try:
-        # 100 MiB corpus, 90% documents: raw stays under the 256 MiB
-        # threshold, the 16x shingle hint crosses it
-        C._DIR_BYTES_CACHE[ckey] = (100 << 20, 90 << 20)
-        assert C._dir_input_bytes(key) < C._AQE_BYTES_THRESHOLD
-        assert (
-            C._dir_input_bytes(key, C.SHINGLE_INFLATION)
-            >= C._AQE_BYTES_THRESHOLD
-        )
-        C._AQE_APPLIED.pop(spark, None)
-        C._tune_aqe(spark, key, inflation=C.SHINGLE_INFLATION)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        # same 100 MiB with NO document share: hint is a no-op
-        C._DIR_BYTES_CACHE[ckey] = (100 << 20, 0)
-        C._AQE_APPLIED.pop(spark, None)
-        C._tune_aqe(spark, key, inflation=C.SHINGLE_INFLATION)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    finally:
-        C._DIR_BYTES_CACHE[ckey] = old
-        C._AQE_APPLIED.pop(spark, None)
-        C._tune_aqe(spark, key)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-
-
-def test_size_aware_shuffle_width(spark):
+def test_size_aware_shuffle_width(spark, monkeypatch):
     """Below the input threshold the gate narrows shuffles to 8
     partitions; at scale the session default (AQE-coalesced) returns."""
-    from mutable_spark import catalog as C
-
-    C.load_tables(spark, "/root/testdata/sf0.01")
+    load_tables(spark, _SF)
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-
-    key = "/root/testdata/sf0.01"
-    ckey = next(k for k in C._DIR_BYTES_CACHE if k[0] == key)
-    old = C._DIR_BYTES_CACHE[ckey]
-    try:
-        C._DIR_BYTES_CACHE[ckey] = (1 << 40, 0)
-        C._AQE_APPLIED.pop(spark, None)
-        C._tune_aqe(spark, key)
+    with _big_corpus(spark, monkeypatch, _SF):
         assert (
             spark.conf.get("spark.sql.shuffle.partitions")
             == spark._msq_default_shuffle
         )
-    finally:
-        C._DIR_BYTES_CACHE[ckey] = old
-        C._AQE_APPLIED.pop(spark, None)
-        C._tune_aqe(spark, key)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_posture_is_a_function_of_the_corpus(spark, monkeypatch):
+    """The gate reads the corpus directory and nothing else: once a corpus
+    is loaded, building any op family over it sets no conf, and every
+    testdata corpus gets the small-input posture."""
+    registry.load_all()
+    sf = f"{TESTDATA}/sf0.001"
+    load_tables(spark, sf)
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def counting_set(self, key, value):
+        calls.append(key)
+        return real_set(self, key, value)
+
+    with monkeypatch.context() as m:
+        m.setattr(RuntimeConfig, "set", counting_set)
+        # a TPC-H query, a shingle-tier dedup and BPE training
+        for name in ("tpch_q1", "dedup_minhash_lsh", "text_bpe_train"):
+            registry.QUERIES[name](spark, sf)
+    assert calls == []
+
+    for d in (sf, _SF, f"{TESTDATA}/sf0.1"):
+        load_tables(spark, d)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false", d
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8", d

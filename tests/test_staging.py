@@ -228,6 +228,32 @@ def test_bucketed_join_follows_rewritten_orders(spark, sf_copy):
         con.close()
 
 
+def test_bucketed_join_leaves_no_warehouse_directory(spark, sf_copy):
+    from urllib.parse import urlparse
+
+    warehouse = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    before = set(warehouse.glob("msq_bkt_*"))
+    registry.QUERIES["op_join_bucketed"](spark, str(sf_copy)).collect()
+    assert set(warehouse.glob("msq_bkt_*")) == before
+
+
+@pytest.mark.parametrize("table", ["events", "documents"])
+def test_stream_stage_follows_rewritten_source(spark, root, sf_copy, table):
+    from mutable_spark.streaming.documents import stream_documents
+    from mutable_spark.streaming.events import stream_events
+
+    stream = {"events": stream_events, "documents": stream_documents}[table]
+    src = sf_copy / f"{table}.parquet"
+    stream(spark, str(sf_copy))
+    (first,) = _copies(root)
+    assert os.listdir(root / first) == [src.name]
+    n = _halve(src)
+    stream(spark, str(sf_copy))
+    (second,) = set(_copies(root)) - {first}
+    assert os.listdir(root / second) == [src.name]
+    assert spark.read.parquet(str(root / second)).count() == n
+
+
 def test_tpch_dsv_export_follows_rewritten_testdata(spark, sf_copy):
     from mutable_spark.plans.dialect_tpch import _data_dir
 
