@@ -25,6 +25,7 @@ from mutable_spark.dialect.compiler import Compiler
 from mutable_spark.dialect.parser import parse
 from mutable_spark.dialect.sema import SemaError
 from mutable_spark.session import DecimalRangeError, local_frame
+from mutable_spark.sources.dsv import import_dsv, truncate_chars
 
 
 def _spark_type(c: A.ColumnDef) -> T.DataType:
@@ -120,21 +121,6 @@ class Engine:
         #: *observable* value is the unpadded string — plain Spark strings
         #: capped at n reproduce the contract.
         self.char_limits: dict[tuple[str, str], dict[str, int]] = {}
-
-    def _apply_char_limits(self, table: str, df: DataFrame) -> DataFrame:
-        """Truncate CHAR(n)/VARCHAR(n) columns to their declared length
-        at ingest (the reference's fixed-width storage contract)."""
-        import pyspark.sql.functions as F
-
-        limits = self.char_limits.get((self.catalog.current, table))
-        if not limits:
-            return df
-        return df.select(
-            *[
-                F.substring(F.col(c), 1, limits[c]).alias(c) if c in limits else F.col(c)
-                for c in df.columns
-            ]
-        )
 
     # -- bulk registration of existing DataFrames (testdata interop) -----
     def register(self, name: str, df: DataFrame) -> None:
@@ -232,39 +218,22 @@ class Engine:
                     f"value {e.value} out of range for attribute "
                     f"{e.field.name!r} of type {e.field.dataType.simpleString()}"
                 ) from None
-            new = self._apply_char_limits(stmt.table, new)
+            new = truncate_chars(new, self.char_limits.get((self.catalog.current, stmt.table)) or {})
             db[stmt.table] = db[stmt.table].unionByName(new)
             self._invalidate_backing(stmt.table)
             return None
         if isinstance(stmt, A.ImportDSVStmt):
-            from mutable_spark.sources.dsv import import_dsv, materialize_import
-
             db = self.catalog._db()
             if stmt.table not in db:
                 raise SemaError(f"table {stmt.table!r} does not exist")
             schema = self.schemas.get((self.catalog.current, stmt.table))
             if schema is None:
                 schema = db[stmt.table].schema
-            imported = import_dsv(self.spark, stmt, schema)
-            imported = self._apply_char_limits(stmt.table, imported)
             # IMPORT-to-store: parse DSV once, serve queries from the
             # engine's columnar layout — the reference's IMPORT semantics
             # (`src/mutable.cpp:263-292` copies into the Store).
-            key = repr(
-                (
-                    schema.json(),
-                    stmt.delimiter,
-                    stmt.quote,
-                    stmt.escape,
-                    stmt.has_header,
-                    stmt.skip_header,
-                    stmt.rows,
-                    sorted(
-                        (self.char_limits.get((self.catalog.current, stmt.table)) or {}).items()
-                    ),
-                )
-            )
-            imported = materialize_import(self.spark, imported, stmt.path, key)
+            limits = self.char_limits.get((self.catalog.current, stmt.table)) or {}
+            imported = import_dsv(self.spark, stmt, schema, limits)
             db[stmt.table] = db[stmt.table].unionByName(imported)
             self._invalidate_backing(stmt.table)
             return None

@@ -7,8 +7,8 @@ The reference runs these as literal SQL scripts
 `benchmark/tpc-h/q1.yml`): IMPORT the ``.tbl`` DSV files, then the query
 text with ``d'…'`` date literals. This module does the same against the
 driver testdata: each table is exported once per scale factor from the
-parquet testdata to ``.tbl`` DSV (so the IMPORT path — schema-declared CSV
-scan, `sources/dsv.py` — is genuinely exercised), then the script in
+parquet testdata to ``.tbl`` DSV (so the IMPORT path — schema-declared DSV
+parse into a staged store, `sources/dsv.py` — is genuinely exercised), then the script in
 ``benchmark/tpc-h/q{N}.sql`` runs through `dialect.Engine` statement by
 statement.
 
@@ -34,9 +34,13 @@ casts the parquet DOUBLEs once, in Spark, and the DuckDB oracles replicate
 that cast — double→2-decimal rounding is unambiguous in both engines
 (no double is exactly halfway between two 2-decimal values), and all
 downstream decimal arithmetic is exact, so results are bit-identical
-under any aggregation order. At 100 TB the IMPORT is a schema-declared
-distributed CSV scan (splittable, no inference) — same plan shape as any
-Spark text ingest.
+under any aggregation order. The export is canonical DSV (no quotes,
+ISO timestamps, exact 2-decimal money), so at testdata scale each IMPORT
+is parsed on the driver with Arrow into a staged parquet store and starts
+no Spark job (`sources/dsv.py`). At 100 TB the sources are past the Arrow
+ceiling and the IMPORT is a schema-declared distributed CSV scan
+(splittable, no inference) writing the store in one job — the same plan
+shape as any Spark text ingest.
 """
 
 from __future__ import annotations

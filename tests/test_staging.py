@@ -110,6 +110,7 @@ def test_failed_write_leaves_nothing(root, tmp_path):
 
 def test_failed_relayout_and_import_fall_back_to_source(spark, root, tmp_path, monkeypatch):
     from mutable_spark import catalog
+    from mutable_spark.dialect import parse
     from mutable_spark.sources import dsv
     import pyspark.sql.functions as F
 
@@ -125,14 +126,24 @@ def test_failed_relayout_and_import_fall_back_to_source(spark, root, tmp_path, m
         assert catalog._maybe_relayout(src) == str(src)
     assert _copies(root) == []
 
-    # an IMPORT whose frame fails mid-write: the CSV-backed frame comes back
-    monkeypatch.setattr(dsv, "_MATERIALIZE_MIN_BYTES", 1)
-    dsv_file = tmp_path / "t.tbl"
-    dsv_file.write_text("1|a\n2|b\n")
-    df = spark.range(100).select(
+    # an IMPORT whose store write fails, on either parse path: the
+    # CSV-backed frame comes back
+    from mutable_spark.dialect.engine import Engine
+
+    eng = Engine(spark)
+    for stmt in ("CREATE DATABASE d", "USE d", "CREATE TABLE t (k INT(4), v CHAR(4))"):
+        eng.execute(stmt)
+    boom = spark.range(100).select(
         F.when(F.col("id") > 50, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("x")
     )
-    assert dsv.materialize_import(spark, df, str(dsv_file), "k") is df
+    monkeypatch.setattr(dsv, "read_dsv", lambda *args, **kwargs: boom)
+    for name, text in (("arrow.tbl", "1|a\n2|b\n"), ("spark.tbl", '1|"a"\n')):
+        dsv_file = tmp_path / name
+        dsv_file.write_text(text)
+        stmt = parse(f'IMPORT INTO t DSV "{dsv_file}" DELIMITER "|"')
+        with monkeypatch.context() as m:
+            m.setattr(pq, "write_table", no_write)
+            assert dsv.import_dsv(spark, stmt, eng.schemas[("d", "t")], {}) is boom
     assert _copies(root) == []
 
 
@@ -267,29 +278,26 @@ def test_tpch_dsv_export_follows_rewritten_testdata(spark, sf_copy):
 
 # -- IMPORT staging -----------------------------------------------------------
 
-def test_import_stages_one_parquet_store(spark, root, monkeypatch):
+def test_import_stages_one_parquet_store(spark, root):
     from mutable_spark.plans.dialect_tpch import _data_dir, _engine_with_schema
-    from mutable_spark.sources import dsv
+    from mutable_spark.sources.dsv import read_dsv
 
     orders = os.path.join(_data_dir(spark, SF_DIR), "orders")
+    assert sum(f.stat().st_size for f in Path(orders).iterdir()) < 1 << 20
 
     def imported():
         eng = _engine_with_schema(spark)
         eng.execute(f'IMPORT INTO Orders DSV "{orders}" DELIMITER "|"')
-        return eng.execute("SELECT * FROM Orders")
+        return eng, eng.execute("SELECT * FROM Orders")
 
-    csv_backed = imported()
-    assert all(".csv" in f for f in csv_backed.inputFiles())
-    assert not [c for c in _copies(root) if c.startswith("import-orders-")]
-
-    monkeypatch.setattr(dsv, "_MATERIALIZE_MIN_BYTES", 1)
-    first, second = imported(), imported()
+    (eng, first), (_, second) = imported(), imported()
     stores = [c for c in _copies(root) if c.startswith("import-orders-")]
     assert len(stores) == 1
     for df in (first, second):
         files = df.inputFiles()
         assert files and all(f.endswith(".parquet") and stores[0] in f for f in files)
-    assert sorted(first.collect()) == sorted(csv_backed.collect())
+    parsed = read_dsv(spark, orders, eng.schemas[("tpch", "Orders")], delimiter="|")
+    assert sorted(first.collect()) == sorted(parsed.collect())
 
 
 # -- one staging root ---------------------------------------------------------

@@ -14,7 +14,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from mutable_spark import catalog
-from mutable_spark.sources import dsv
+from mutable_spark.sources.dsv import read_dsv
 from tests.conftest import SF_DIR, TABLES
 
 
@@ -110,14 +110,26 @@ def test_relayout_splits_rows_unchanged(spark, root, monkeypatch, name):
     assert _same_rows(loaded, direct)
 
 
-def test_import_store_is_read_back_without_inference(spark, root, tmp_path, monkeypatch):
-    monkeypatch.setattr(dsv, "_MATERIALIZE_MIN_BYTES", 1)
-    src = tmp_path / "t.tbl"
-    src.write_text("1|a\n")
-    df = spark.range(50).selectExpr("id", "cast(id as string) as s")
-    before = _jobs(spark)
-    out = dsv.materialize_import(spark, df, str(src), "k")
-    assert _jobs(spark) == before + 1  # the store's write, no inference job
-    assert out is not df and all(f.endswith(".parquet") for f in out.inputFiles())
-    assert out.schema == spark.read.parquet(out.inputFiles()[0]).schema
-    assert _same_rows(out, df)
+def test_import_submits_no_job(spark, root):
+    from mutable_spark.plans.dialect_tpch import _data_dir, _engine_with_schema
+
+    data = _data_dir(spark, SF_DIR)  # the DSV export runs its own jobs
+
+    def imported():
+        eng = _engine_with_schema(spark)
+        before = _jobs(spark)
+        for table in ("Orders", "Lineitem"):
+            eng.execute(f'IMPORT INTO {table} DSV "{data}/{table.lower()}" DELIMITER "|"')
+        assert _jobs(spark) == before, "IMPORT ran Spark jobs"
+        return eng
+
+    cold = imported()
+    assert len([p for p in root.iterdir() if p.name.startswith("import-")]) == 2
+    warm = imported()  # served from the staged stores
+    for table in ("Orders", "Lineitem"):
+        schema = cold.schemas[("tpch", table)]
+        parsed = read_dsv(spark, f"{data}/{table.lower()}", schema, delimiter="|")
+        query = f"SELECT * FROM {table}"
+        for eng in (cold, warm):
+            assert eng.execute(query).schema == parsed.schema
+            assert _same_rows(eng.execute(query), parsed)
