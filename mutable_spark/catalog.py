@@ -1,10 +1,11 @@
-"""Table loading + type normalization for the driver testdata.
+"""Table loading + type normalization for the driver testdata: named
+DataFrames with normalized column types. Physical-layout concerns
+(Row/PAX/Column stores, `src/storage/*Store.cpp`) have no semantic content
+on Spark — parquet is already PAX-like — so they intentionally do not
+appear here.
 
-Mirrors the reference's catalog role (`include/mutable/catalog/Schema.hpp:869`
-Database→Table→Attribute) at the granularity Spark needs: named DataFrames
-with normalized column types. Physical-layout concerns (Row/PAX/Column stores,
-`src/storage/*Store.cpp`) have no semantic content on Spark — parquet is
-already PAX-like — so they intentionally do not appear here.
+The dialect's catalog — the reference's `include/mutable/catalog/Schema.hpp:869`
+Database of `:387` Tables — is `dialect.engine.Catalog`.
 """
 
 from __future__ import annotations
@@ -12,7 +13,6 @@ from __future__ import annotations
 import math
 import os
 import weakref
-from dataclasses import dataclass, field
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -278,71 +278,3 @@ def table_backing_path(spark: SparkSession, sf_dir: str, name: str) -> str | Non
     if name == "events":
         return None
     return _maybe_relayout(Path(sf_dir.rstrip("/")) / f"{name}.parquet")
-
-
-@dataclass
-class Catalog:
-    """Minimal multi-database catalog in the reference's shape
-    (`Schema.hpp:869` Database / `Schema.hpp:387` Table): names → DataFrames,
-    plus declared constraints that Spark does not enforce (the reference
-    parses but does not enforce CHECK either, `src/mutable.cpp:238-256`)."""
-
-    spark: SparkSession
-    databases: dict[str, dict[str, DataFrame]] = field(default_factory=dict)
-    #: per-database index metadata: db → index name → (table, attribute).
-    #: Indexes are catalog objects with full existence/typing sema
-    #: (`Sema.cpp:1611` CreateIndexStmt) but no physical structure — Spark
-    #: has no secondary indexes; parquet min/max + predicate pushdown play
-    #: that role (SURVEY §2.2).
-    indexes: dict[str, dict[str, tuple[str, str]]] = field(default_factory=dict)
-    current: str | None = None
-
-    def create_database(self, name: str) -> None:
-        if name in self.databases:
-            raise ValueError(f"database {name!r} already exists")
-        self.databases[name] = {}
-        self.indexes[name] = {}
-
-    def drop_database(self, name: str) -> None:
-        if name not in self.databases:
-            raise ValueError(f"database {name!r} does not exist")
-        del self.databases[name]
-        self.indexes.pop(name, None)
-        if self.current == name:
-            self.current = None
-
-    def use(self, name: str) -> None:
-        if name not in self.databases:
-            raise ValueError(f"database {name!r} does not exist")
-        self.current = name
-
-    def _db(self) -> dict[str, DataFrame]:
-        if self.current is None:
-            raise ValueError("no database selected")
-        return self.databases[self.current]
-
-    def create_table(self, name: str, df: DataFrame) -> None:
-        db = self._db()
-        if name in db:
-            raise ValueError(f"table {name!r} already exists")
-        db[name] = df
-
-    def drop_table(self, name: str) -> None:
-        db = self._db()
-        if name not in db:
-            raise ValueError(f"table {name!r} does not exist")
-        del db[name]
-        idx = self.indexes.setdefault(self.current, {})
-        for iname in [i for i, (t, _) in idx.items() if t == name]:
-            del idx[iname]
-
-    def db_indexes(self) -> dict[str, tuple[str, str]]:
-        if self.current is None:
-            raise ValueError("no database selected")
-        return self.indexes.setdefault(self.current, {})
-
-    def table(self, name: str) -> DataFrame:
-        db = self._db()
-        if name not in db:
-            raise ValueError(f"table {name!r} does not exist")
-        return db[name]

@@ -11,11 +11,17 @@ copy-on-write over the catalog's DataFrames (see `_execute_update`).
 Rows built on the driver (the empty CREATE TABLE frame, INSERT VALUES,
 the CHECK probe) become JVM local relations through
 `session.local_frame`, so reading them back never starts a Python worker.
+
+The engine's catalog (`Catalog`, db → name → `Table`) is the reference's
+`Schema.hpp:869` Database of `Schema.hpp:387` Tables: each `Table` owns
+its rows, declared schema, CHAR limits, backing parquet path and
+file-zone indexes, so dropping a table or database drops all of them.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.types as T
@@ -84,8 +90,105 @@ def _pyvalue(node: A.Node | str, dtype: T.DataType):
     return v
 
 
+@dataclass
+class Table:
+    """One dialect table (`Schema.hpp:387`) and the state that belongs to it.
+
+    ``schema`` is the declared schema INSERT and IMPORT write to.
+    ``char_limits`` holds the CHAR(n)/VARCHAR(n) lengths: the reference
+    stores CHAR(n) in exactly n bytes (NUL-padded, `Type.hpp:310-318`),
+    so over-length strings are truncated at ingest; the padding NULs end
+    the string on read, so the observable value is the unpadded string.
+    ``path`` is the parquet directory the rows are read from, when known:
+    a backed table is what makes CREATE INDEX build a real file-zone
+    index. ``zones`` maps a column to that index; the compiler's scan
+    path prunes with it (the reference's physical optimizer replaces
+    Filter∘Scan with IndexScan the same way,
+    `src/backend/WasmOperator.hpp:397-405`)."""
+
+    df: DataFrame
+    schema: T.StructType
+    char_limits: dict[str, int] = field(default_factory=dict)
+    path: str | None = None
+    zones: dict[str, object] = field(default_factory=dict)
+
+    def write(self, df: DataFrame) -> None:
+        """Replace the rows. They no longer equal the backing parquet
+        files, so the path and the file-zone indexes go with them and the
+        pruned-scan swap can never serve stale data (the CREATE INDEX
+        metadata stays, as the reference keeps the index object)."""
+        self.df = df
+        self.path = None
+        self.zones = {}
+
+
+@dataclass
+class Catalog:
+    """Databases of tables (`Schema.hpp:869` Database), plus declared
+    constraints that Spark does not enforce (the reference parses but
+    does not enforce CHECK either, `src/mutable.cpp:238-256`)."""
+
+    databases: dict[str, dict[str, Table]] = field(default_factory=dict)
+    #: per-database index metadata: db → index name → (table, attribute).
+    #: Indexes are catalog objects with full existence/typing sema
+    #: (`Sema.cpp:1611` CreateIndexStmt); their physical side is the
+    #: indexed table's `Table.zones`, when it is parquet-backed.
+    indexes: dict[str, dict[str, tuple[str, str]]] = field(default_factory=dict)
+    current: str | None = None
+
+    def create_database(self, name: str) -> None:
+        if name in self.databases:
+            raise SemaError(f"database {name!r} already exists")
+        self.databases[name] = {}
+        self.indexes[name] = {}
+
+    def drop_database(self, name: str) -> None:
+        if name not in self.databases:
+            raise SemaError(f"database {name!r} does not exist")
+        del self.databases[name]
+        del self.indexes[name]
+
+    def use(self, name: str) -> None:
+        if name not in self.databases:
+            raise SemaError(f"database {name!r} does not exist")
+        self.current = name
+
+    def _db(self) -> dict[str, Table]:
+        """`Sema.cpp` RequireContext: every statement that names a table
+        first requires a database in use."""
+        if self.current is None:
+            raise SemaError("no database selected")
+        return self.databases[self.current]
+
+    def create_table(self, name: str, table: Table) -> None:
+        db = self._db()
+        if name in db:
+            raise SemaError(f"table {name!r} already exists")
+        db[name] = table
+
+    def drop_table(self, name: str) -> None:
+        del self._db()[name]
+        idx = self.db_indexes()
+        for iname in [i for i, (t, _) in idx.items() if t == name]:
+            del idx[iname]
+
+    def db_indexes(self) -> dict[str, tuple[str, str]]:
+        self._db()
+        return self.indexes[self.current]
+
+    def record(self, name: str) -> Table:
+        db = self._db()
+        if name not in db:
+            raise SemaError(f"table {name!r} does not exist")
+        return db[name]
+
+    def table(self, name: str) -> DataFrame:
+        return self.record(name).df
+
+
 class Engine:
-    """A mutable-dialect session on Spark: databases of named DataFrames.
+    """A mutable-dialect session on Spark: a `Catalog` of databases of
+    `Table` records, each serving its rows as a DataFrame.
 
     >>> eng = Engine(spark)
     >>> eng.execute("CREATE DATABASE d"); eng.execute("USE d")
@@ -96,38 +199,19 @@ class Engine:
 
     def __init__(self, spark: SparkSession, planner=None):
         self.spark = spark
-        from mutable_spark.catalog import Catalog
-
         #: optional JoinPlanner (plans/planner.py). The estimator chain
         #: mirrors the reference's: injected cardinality JSON when given
         #: (`--use-cardinality-file`), else learned SPN estimates
         #: (`plans/index_queries.spn_planner`), else Catalyst's own stats.
         self.planner = planner
-        self.catalog = Catalog(spark)
-        self.schemas: dict[tuple[str, str], T.StructType] = {}
-        #: parquet directory backing a table, when known ((db, table) →
-        #: path). A backed table is what makes CREATE INDEX build a real
-        #: file-zone index instead of catalog metadata only.
-        self.table_paths: dict[tuple[str, str], str] = {}
-        #: (db, table) → {column: ZoneIndex} — built by CREATE INDEX over
-        #: parquet-backed tables; the compiler's scan path prunes with
-        #: these (the reference's physical optimizer replaces Filter∘Scan
-        #: with IndexScan the same way, `src/backend/WasmOperator.hpp:397-405`)
-        self.zone_indexes: dict[tuple[str, str], dict[str, object]] = {}
-        #: CHAR(n)/VARCHAR(n) declared lengths per (db, table): the
-        #: reference stores CHAR(n) in exactly n bytes (NUL-padded,
-        #: `Type.hpp:310-318`), so over-length strings are truncated at
-        #: ingest; the padding NULs terminate the string on read, so the
-        #: *observable* value is the unpadded string — plain Spark strings
-        #: capped at n reproduce the contract.
-        self.char_limits: dict[tuple[str, str], dict[str, int]] = {}
+        self.catalog = Catalog()
 
     # -- bulk registration of existing DataFrames (testdata interop) -----
     def register(self, name: str, df: DataFrame) -> None:
         if self.catalog.current is None:
             self.catalog.create_database("default")
             self.catalog.use("default")
-        self.catalog.create_table(name, df)
+        self.catalog.create_table(name, Table(df, df.schema))
 
     def create_table_from_parquet(self, name: str, path: str) -> None:
         """Register a table served directly from a parquet directory — the
@@ -136,36 +220,22 @@ class Engine:
         real file-zone index over the layout (see ``_execute_create_index``)
         and the compiler prune the scan through it."""
         self.register(name, self.spark.read.parquet(path))
-        self.table_paths[(self.catalog.current, name)] = path
+        self.catalog.record(name).path = path
 
-    def sql(self, text: str) -> DataFrame | None:
-        return self.execute(text)
-
-    def _invalidate_backing(self, table: str) -> None:
-        """A mutated table no longer equals its backing parquet files:
-        drop the path registration and any file-zone indexes so the
-        compiler's pruned-scan swap can never serve stale data (the
-        CREATE INDEX catalog metadata itself stays — the reference keeps
-        the index object too; only the physical file map is gone)."""
-        self.table_paths.pop((self.catalog.current, table), None)
-        self.zone_indexes.pop((self.catalog.current, table), None)
-
-    def _zone_indexes_in_use(self) -> dict[str, dict[str, object]]:
-        db = self.catalog.current
-        return {
-            table: cols
-            for (dbname, table), cols in self.zone_indexes.items()
-            if dbname == db and cols
-        }
+    def _compiler(self) -> Compiler:
+        """A SELECT compiler over the current database's tables and the
+        file-zone indexes of its parquet-backed ones."""
+        db = self.catalog._db()
+        return Compiler(
+            {name: t.df for name, t in db.items()},
+            self.planner,
+            zone_indexes={name: t.zones for name, t in db.items()},
+        )
 
     def execute(self, text: str) -> DataFrame | None:
         stmt = parse(text)
         if isinstance(stmt, A.SelectStmt):
-            return Compiler(
-                self.catalog._db(),
-                self.planner,
-                zone_indexes=self._zone_indexes_in_use(),
-            ).compile_select(stmt)
+            return self._compiler().compile_select(stmt)
         if isinstance(stmt, A.CreateDatabaseStmt):
             self.catalog.create_database(stmt.name)
             return None
@@ -179,14 +249,13 @@ class Engine:
                 for c in stmt.columns
             ]
             schema = T.StructType(fields)
-            df = local_frame(self.spark, [], schema)
-            self.catalog.create_table(stmt.name, df)
-            self.schemas[(self.catalog.current, stmt.name)] = schema
-            self.char_limits[(self.catalog.current, stmt.name)] = {
+            limits = {
                 c.name: c.params[0]
                 for c in stmt.columns
                 if c.type_name in ("CHAR", "VARCHAR") and c.params
             }
+            df = local_frame(self.spark, [], schema)
+            self.catalog.create_table(stmt.name, Table(df, schema, limits))
             return None
         if isinstance(stmt, A.DropStmt):
             self._execute_drop(stmt)
@@ -195,47 +264,33 @@ class Engine:
             self._execute_create_index(stmt)
             return None
         if isinstance(stmt, A.InsertStmt):
-            db = self.catalog._db()
-            if stmt.table not in db:
-                raise SemaError(f"table {stmt.table!r} does not exist")
-            schema = self.schemas.get((self.catalog.current, stmt.table))
-            if schema is None:
-                schema = db[stmt.table].schema
+            t = self.catalog.record(stmt.table)
             rows = []
             for r in stmt.rows:
-                if len(r) != len(schema.fields):
+                if len(r) != len(t.schema.fields):
                     raise SemaError(
                         f"INSERT row has {len(r)} values, table has "
-                        f"{len(schema.fields)} attributes"
+                        f"{len(t.schema.fields)} attributes"
                     )
                 rows.append(
-                    tuple(_pyvalue(v, f.dataType) for v, f in zip(r, schema.fields))
+                    tuple(_pyvalue(v, f.dataType) for v, f in zip(r, t.schema.fields))
                 )
             try:
-                new = local_frame(self.spark, rows, schema)
+                new = local_frame(self.spark, rows, t.schema)
             except DecimalRangeError as e:
                 raise SemaError(
                     f"value {e.value} out of range for attribute "
                     f"{e.field.name!r} of type {e.field.dataType.simpleString()}"
                 ) from None
-            new = truncate_chars(new, self.char_limits.get((self.catalog.current, stmt.table)) or {})
-            db[stmt.table] = db[stmt.table].unionByName(new)
-            self._invalidate_backing(stmt.table)
+            t.write(t.df.unionByName(truncate_chars(new, t.char_limits)))
             return None
         if isinstance(stmt, A.ImportDSVStmt):
-            db = self.catalog._db()
-            if stmt.table not in db:
-                raise SemaError(f"table {stmt.table!r} does not exist")
-            schema = self.schemas.get((self.catalog.current, stmt.table))
-            if schema is None:
-                schema = db[stmt.table].schema
+            t = self.catalog.record(stmt.table)
             # IMPORT-to-store: parse DSV once, serve queries from the
             # engine's columnar layout — the reference's IMPORT semantics
             # (`src/mutable.cpp:263-292` copies into the Store).
-            limits = self.char_limits.get((self.catalog.current, stmt.table)) or {}
-            imported = import_dsv(self.spark, stmt, schema, limits)
-            db[stmt.table] = db[stmt.table].unionByName(imported)
-            self._invalidate_backing(stmt.table)
+            imported = import_dsv(self.spark, stmt, t.schema, t.char_limits)
+            t.write(t.df.unionByName(imported))
             return None
         if isinstance(stmt, A.UpdateStmt):
             return self._execute_update(stmt)
@@ -266,16 +321,13 @@ class Engine:
         """Compile expressions row-wise against ``table`` by routing them
         through the SELECT compiler (full sema: name resolution, typing,
         subqueries) with every original column carried alongside."""
-        db = self.catalog._db()
-        df = db[table]
         sel = A.SelectStmt()
         sel.items = [
-            A.SelectItem(expr=A.Designator(None, c), alias=c) for c in df.columns
+            A.SelectItem(expr=A.Designator(None, c), alias=c)
+            for c in self.catalog.table(table).columns
         ] + [A.SelectItem(expr=e, alias=alias) for alias, e in exprs]
         sel.from_ = [A.TableRef(name=table, subquery=None, alias=None)]
-        return Compiler(
-            db, self.planner, self._zone_indexes_in_use()
-        ).compile_select(sel)
+        return self._compiler().compile_select(sel)
 
     @staticmethod
     def _type_category(dt: T.DataType) -> str:
@@ -298,32 +350,23 @@ class Engine:
     def _execute_delete(self, stmt: A.DeleteStmt) -> None:
         import pyspark.sql.functions as F
 
-        db = self.catalog._db()
-        if stmt.table not in db:
-            raise SemaError(f"table {stmt.table!r} does not exist")
+        t = self.catalog.record(stmt.table)
         if stmt.where is None:
-            db[stmt.table] = db[stmt.table].limit(0)
-            self._invalidate_backing(stmt.table)
+            t.write(t.df.limit(0))
             return None
         self._reject_aggregates(stmt.where, "WHERE clause")
         out = self._compile_row_exprs(stmt.table, [("__pred", stmt.where)])
         if not isinstance(out.schema["__pred"].dataType, T.BooleanType):
             raise SemaError("WHERE clause must be of type BOOL")
         # DELETE removes rows where the predicate is TRUE; NULL keeps
-        db[stmt.table] = out.filter(
-            ~F.coalesce(F.col("__pred"), F.lit(False))
-        ).drop("__pred")
-        self._invalidate_backing(stmt.table)
+        t.write(out.filter(~F.coalesce(F.col("__pred"), F.lit(False))).drop("__pred"))
         return None
 
     def _execute_update(self, stmt: A.UpdateStmt) -> None:
         import pyspark.sql.functions as F
 
-        db = self.catalog._db()
-        if stmt.table not in db:
-            raise SemaError(f"table {stmt.table!r} does not exist")
-        df = db[stmt.table]
-        types = {f.name: f.dataType for f in df.schema.fields}
+        t = self.catalog.record(stmt.table)
+        types = {f.name: f.dataType for f in t.df.schema.fields}
         seen: set[str] = set()
         for name, e in stmt.assignments:
             if name not in types:
@@ -358,9 +401,9 @@ class Engine:
                     f"attribute {name!r} of type {types[name].simpleString()}"
                 )
         assigned = {n for n, _ in stmt.assignments}
-        limits = self.char_limits.get((self.catalog.current, stmt.table)) or {}
+        limits = t.char_limits
         new_cols = []
-        for c in df.columns:
+        for c in t.df.columns:
             if c in assigned:
                 v = F.col(f"__set__{c}").cast(types[c])
                 if c in limits:  # CHAR(n)/VARCHAR(n) truncation at write
@@ -368,8 +411,7 @@ class Engine:
                 new_cols.append(F.when(pred, v).otherwise(F.col(c)).alias(c))
             else:
                 new_cols.append(F.col(c))
-        db[stmt.table] = out.select(*new_cols)
-        self._invalidate_backing(stmt.table)
+        t.write(out.select(*new_cols))
         return None
 
     # -- DDL sema + execution (`Sema.cpp:1431-1788` Drop*/CreateIndex) ----
@@ -379,7 +421,7 @@ class Engine:
         most one REFERENCES per attribute, referenced table/attribute must
         exist with the SAME type, CHECK conditions must type to boolean
         (resolved against the table's own attributes)."""
-        db = self._db_in_use()
+        db = self.catalog._db()
         if stmt.name in db:
             raise SemaError(
                 f"table {stmt.name!r} already exists in database "
@@ -403,11 +445,7 @@ class Engine:
             for rtable, rattr in c.references:
                 if rtable not in db:
                     raise SemaError(f"invalid reference, table {rtable!r} not found")
-                rschema = self.schemas.get((self.catalog.current, rtable))
-                rfields = {
-                    f.name: f.dataType
-                    for f in (rschema or db[rtable].schema).fields
-                }
+                rfields = {f.name: f.dataType for f in db[rtable].schema.fields}
                 if rattr not in rfields:
                     raise SemaError(
                         f"invalid reference, attribute {rattr!r} not found "
@@ -441,14 +479,6 @@ class Engine:
                         f"CHECK condition on attribute {cname!r} is not boolean"
                     )
 
-    def _db_in_use(self):
-        """`Sema.cpp` RequireContext: every DDL visitor first requires a
-        database in use; surface that as the sema error it is."""
-        try:
-            return self.catalog._db()
-        except ValueError as e:
-            raise SemaError(str(e)) from None
-
     def _execute_drop(self, stmt: A.DropStmt) -> None:
         if stmt.kind == "DATABASE":
             name = stmt.names[0]
@@ -457,23 +487,14 @@ class Engine:
             # in_use_if_exists expects the error)
             if self.catalog.current == name:
                 raise SemaError(f"database {name!r} is in use")
-            if name not in self.catalog.databases:
-                if stmt.if_exists:
-                    return  # warn-and-skip
-                raise SemaError(f"database {name!r} does not exist")
+            if stmt.if_exists and name not in self.catalog.databases:
+                return  # warn-and-skip
             self.catalog.drop_database(name)
-            # purge parquet-backing state keyed by the dropped db: a
-            # recreated database+table must never serve the old files
-            # through the pruned-scan swap (same invariant as
-            # _invalidate_backing, at database granularity)
-            for d in (self.table_paths, self.zone_indexes, self.schemas, self.char_limits):
-                for key in [k for k in d if k[0] == name]:
-                    del d[key]
             return
         # TABLE / INDEX: validate ALL names first, then drop (the reference
         # builds the full name list and only emits the command when every
         # name resolved, `Sema.cpp:1571-1579,1780-1788`)
-        db = self._db_in_use()
+        db = self.catalog._db()
         idx = self.catalog.db_indexes()
         pool = db if stmt.kind == "TABLE" else idx
         found = []
@@ -488,28 +509,23 @@ class Engine:
         for name in found:
             if stmt.kind == "TABLE":
                 self.catalog.drop_table(name)
-                self.schemas.pop((self.catalog.current, name), None)
-                self.char_limits.pop((self.catalog.current, name), None)
-                self.table_paths.pop((self.catalog.current, name), None)
-                self.zone_indexes.pop((self.catalog.current, name), None)
             else:
                 table, attr = idx[name]
                 del idx[name]
                 # drop the zone index only when no other named index
                 # still covers the same (table, column)
                 if not any(v == (table, attr) for v in idx.values()):
-                    cols = self.zone_indexes.get((self.catalog.current, table))
-                    if cols is not None:
-                        cols.pop(attr, None)
+                    db[table].zones.pop(attr, None)
 
     def _execute_create_index(self, stmt: A.CreateIndexStmt) -> None:
         """Sema order mirrors `Sema.cpp:1611-1703`: db-in-use → UNIQUE
         unsupported → anonymous unsupported → duplicate name (IF NOT EXISTS
         downgrades to skip) → table exists → method ∈ {DEFAULT, array, rmi}
-        → single key field → key field is an existing attribute. The index
-        itself is catalog metadata only (SURVEY §2.2): Spark's scan path
-        covers point/range access via parquet stats + pushdown."""
-        db = self._db_in_use()
+        → single key field → key field is an existing attribute. On an
+        in-memory table the index is catalog metadata only (SURVEY §2.2):
+        Spark's scan path covers point/range access via parquet stats +
+        pushdown. On a parquet-backed one it also builds a file-zone index."""
+        db = self.catalog._db()
         if stmt.has_unique:
             raise SemaError("keyword UNIQUE not supported")
         if stmt.name is None:
@@ -531,23 +547,21 @@ class Engine:
             raise SemaError(f"index method {stmt.method!r} not supported")
         if len(stmt.key_fields) > 1:
             raise SemaError("more than one key field for indexes not supported")
-        field = stmt.key_fields[0]
-        if not isinstance(field, A.Designator):
+        key = stmt.key_fields[0]
+        if not isinstance(key, A.Designator):
             raise SemaError("non-attribute key fields for indexes not supported")
-        if field.attr not in db[stmt.table].columns:
+        t = db[stmt.table]
+        if key.attr not in t.df.columns:
             raise SemaError(
-                f"attribute {field.attr!r} does not exist in table {stmt.table!r}"
+                f"attribute {key.attr!r} does not exist in table {stmt.table!r}"
             )
-        idx[stmt.name] = (stmt.table, field.attr)
+        idx[stmt.name] = (stmt.table, key.attr)
         # Parquet-backed table: build a real file-zone index over the
         # layout from footer metadata alone (reference: CREATE INDEX
         # bulkloads an ArrayIndex/RMI, `DatabaseCommand.cpp` CreateIndex;
         # on Spark the index's job is file pruning — sources/indexes.py).
         # `rmi` → learned file map; DEFAULT/`array` → sorted-array map.
-        path = self.table_paths.get((self.catalog.current, stmt.table))
-        if path is not None:
+        if t.path is not None:
             from mutable_spark.sources.indexes import ZoneIndex
 
-            self.zone_indexes.setdefault((self.catalog.current, stmt.table), {})[
-                field.attr
-            ] = ZoneIndex.build(path, field.attr, learned=stmt.method == "rmi")
+            t.zones[key.attr] = ZoneIndex.build(t.path, key.attr, learned=stmt.method == "rmi")

@@ -71,11 +71,6 @@ def davg(col: Column | str) -> Column:
     return dsum(c) / F.count(c)
 
 
-def dsum_expr(col: Column) -> Column:
-    """SUM of an already-exact decimal expression, surfaced as DOUBLE."""
-    return F.sum(col).cast("double")
-
-
 # --- split-accumulator exact decimal sums --------------------------------
 # Spark's decimal SUM buffer (precision 28 after the +10 promotion) exceeds
 # the compact-long threshold (18), so every row update runs BigDecimal

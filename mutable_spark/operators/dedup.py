@@ -2624,9 +2624,14 @@ def _conf_bytes(spark, key: str) -> int:
 
 def _gate_verify_side(side, spark, n_rows: int | None):
     """Bytes-gated join posture for a pair-verify embedding build side
-    (r16, guide §3.1): the corpus frame behind the verify joins scans as
-    a stats-less checkpoint (ExistingRDD), so Catalyst cannot make the
-    broadcast-vs-shuffle call itself — it sees UNKNOWN and the r15 pin
+    (r16, guide §3.1): the corpus frame behind the verify joins is
+    `_staged_with_labels`' checkpoint. The checkpoint is not stats-less:
+    on Spark 4.1.2 `localCheckpoint`, lazy or eager, keeps its plan's
+    size estimate (769,106 B for the embeddings scan and for its lazy and
+    eager checkpoints alike). But the staged plan is a join, and Catalyst estimates
+    it at 8.3 GB and its verify projection at 6.9 GB against 2,000 rows
+    at sf0.1, far over the 64 MiB threshold. So Catalyst cannot make the
+    broadcast-vs-shuffle call itself, and the r15 pin
     forced shuffled-hash, which shuffles the MULTI-MILLION-row candidate
     pair stream once per verify side (the r15 verdict's #1 residual:
     the 1.86M-pair stream shuffled 3× at sf0.1). When the caller KNOWS
@@ -2706,19 +2711,22 @@ def multiprobe_cosine_pairs(
     b = assign.select(
         F.col("vec_id").alias("vec_b"), F.col("cell").alias("cell_b")
     )
-    # SHUFFLE_HASH pins (r15 opt round): the checkpointed assign (and the
-    # checkpointed staged frame behind ea/eb) scan as ExistingRDD with
-    # UNKNOWN stats, so the planner fell back to SortMergeJoin — full
-    # sorts of the multi-million-row candidate stream on each join key
+    # SHUFFLE_HASH pins (r15 opt round): unpinned, the planner chose
+    # SortMergeJoin — full sorts of the multi-million-row candidate
+    # stream on each join key
     # (plans/r15/dedup_embedding_multiprobe_before.txt at 87f8177: 3 SMJs + their
-    # Sorts). Broadcast would be the 100 TB killer (every side here is
+    # Sorts). The checkpoints are not stats-less (on Spark 4.1.2 a
+    # localCheckpoint keeps its plan's size estimate); the estimates
+    # mislead: the staged frame behind ea/eb is a checkpointed join that
+    # Catalyst sizes at 8.3 GB against 2,000 rows at sf0.1 (see
+    # `_gate_verify_side`). Broadcast would be the 100 TB killer (every side here is
     # corpus-sized); shuffled-hash keeps the exchange and drops the
     # sorts: per-partition hash build of the hinted side, the same
     # posture as `_staged_with_labels`. At sf0.1 the sorts are small and
     # the same-session A/B reads a wash (min-of-5: 4.57 SMJ vs 4.48 SHJ,
     # identical 14884-pair output); the pin is for the plan contract —
-    # join strategy chosen by the documented rule, not by the absent
-    # stats of a checkpoint scan — and for the sort cost at real scale.
+    # join strategy chosen by the documented rule, not by a checkpoint's
+    # inflated estimate — and for the sort cost at real scale.
     cand = (
         a.join(
             b if bounded else b.hint("shuffle_hash"),
@@ -3817,9 +3825,9 @@ def pipeline_decontaminate_semantic(spark, sf_dir):
         vec_norm(F.col("embedding")).alias("nb"),
     )
     # r16: the verify sides are bytes-gated exactly like the pair tier's
-    # (`_gate_verify_side`) — the staged checkpoint has no stats, so
-    # without the gate the train×eval candidate stream was shuffled once
-    # per side
+    # (`_gate_verify_side`) — the staged checkpoint's estimate is a join's
+    # gross over-estimate, so without the gate the train×eval candidate
+    # stream was shuffled once per side
     contaminated = (
         cand.join(_gate_verify_side(ea, spark, n), "vec_a")
         .join(_gate_verify_side(eb, spark, n), "vec_b")

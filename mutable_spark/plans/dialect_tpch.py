@@ -99,7 +99,7 @@ def _data_dir(spark, sf_dir: str) -> str:
     def write(tmp: str) -> None:
         eng = _engine_with_schema(spark)
         for name in _TABLES:
-            schema = eng.schemas[("tpch", name)]
+            schema = eng.catalog.record(name).schema
             cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
             (
                 getattr(t, name.lower())

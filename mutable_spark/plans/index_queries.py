@@ -148,7 +148,7 @@ def dialect_zoneindex_scan(spark, sf_dir):
     eng.catalog.use("zx")
     eng.create_table_from_parquet("orders", layout)
     eng.execute("CREATE INDEX ord_custkey ON orders USING rmi (o_custkey)")
-    zi = eng.zone_indexes[("zx", "orders")]["o_custkey"]
+    zi = eng.catalog.record("orders").zones["o_custkey"]
     assert 0 < len(zi.files_for_range(lo, hi)) < len(zi.zones), (
         "zone index did not prune"
     )
@@ -381,7 +381,7 @@ def dialect_zoneindex_string(spark, sf_dir):
     eng.catalog.use("zs")
     eng.create_table_from_parquet("documents", layout)
     eng.execute("CREATE INDEX doc_source ON documents USING array (source)")
-    zi = eng.zone_indexes[("zs", "documents")]["source"]
+    zi = eng.catalog.record("documents").zones["source"]
     assert 0 < len(zi.files_for_range("src10", "src15")) < len(zi.zones), (
         "string zone index did not prune"
     )

@@ -90,7 +90,8 @@ def learn_spns(eng) -> list[str]:
     from mutable_spark.plans.spn import SpnTableModel, spn_base_cardinalities
 
     msgs, models = [], {}
-    for name, df in sorted(eng.catalog._db().items()):
+    for name, t in sorted(eng.catalog._db().items()):
+        df = t.df
         cols = [
             f.name
             for f in df.schema.fields
@@ -256,12 +257,10 @@ def main(argv: list[str] | None = None) -> int:
 
             for t in TABLE_NAMES:
                 if t not in eng.catalog._db():
-                    eng.catalog.create_table(t, load_table(spark, sf_dir, t))
+                    eng.register(t, load_table(spark, sf_dir, t))
                     # parquet-backed registration: CREATE INDEX on a loaded
                     # table builds a real file-zone index over the layout
-                    p = table_backing_path(spark, sf_dir, t)
-                    if p is not None:
-                        eng.table_paths[(eng.catalog.current, t)] = p
+                    eng.catalog.record(t).path = table_backing_path(spark, sf_dir, t)
             print(f"loaded {len(TABLE_NAMES)} tables from {sf_dir}")
             return True
         if line.startswith("."):

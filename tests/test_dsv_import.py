@@ -79,14 +79,14 @@ def _spark_parse(spark, eng: Engine, text: str):
     df = read_dsv(
         spark,
         stmt.path,
-        eng.schemas[("d", "t")],
+        eng.catalog.record("t").schema,
         delimiter=stmt.delimiter,
         quote=stmt.quote,
         escape=stmt.escape,
         header=stmt.has_header or stmt.skip_header,
         rows=stmt.rows,
     )
-    return truncate_chars(df, eng.char_limits[("d", "t")])
+    return truncate_chars(df, eng.catalog.record("t").char_limits)
 
 
 def _import(spark, columns: str, path, options: str):

@@ -171,15 +171,15 @@ def test_create_index_builds_zone_layout(spark):
     index; DROP INDEX removes it; a second index on the same column keeps
     the zone index alive until the last name is dropped."""
     eng, _ = _zoned_engine(spark)
-    assert eng.zone_indexes == {}
+    orders = eng.catalog.record("orders")
+    assert orders.zones == {}
     eng.execute("CREATE INDEX i1 ON orders USING rmi (o_custkey)")
-    zmap = eng.zone_indexes[("zt", "orders")]
-    assert "o_custkey" in zmap and len(zmap["o_custkey"].zones) > 1
+    assert "o_custkey" in orders.zones and len(orders.zones["o_custkey"].zones) > 1
     eng.execute("CREATE INDEX i2 ON orders (o_custkey)")
     eng.execute("DROP INDEX i1")
-    assert "o_custkey" in eng.zone_indexes[("zt", "orders")]  # i2 still covers
+    assert "o_custkey" in orders.zones  # i2 still covers
     eng.execute("DROP INDEX i2")
-    assert "o_custkey" not in eng.zone_indexes[("zt", "orders")]
+    assert "o_custkey" not in orders.zones
 
 
 def test_create_index_without_backing_is_metadata_only(spark):
@@ -193,7 +193,7 @@ def test_create_index_without_backing_is_metadata_only(spark):
     eng.execute("CREATE TABLE r (key INT(4) PRIMARY KEY)")
     eng.execute("INSERT INTO r VALUES (1), (2), (3)")
     eng.execute("CREATE INDEX ri ON r (key)")
-    assert eng.zone_indexes == {}
+    assert eng.catalog.record("r").zones == {}
     assert len(eng.execute("SELECT key FROM r WHERE key >= 2").collect()) == 2
 
 
@@ -369,13 +369,14 @@ def test_mutation_invalidates_zone_backing(spark):
     review finding)."""
     eng, layout = _zoned_engine(spark)
     eng.execute("CREATE INDEX i1 ON orders USING rmi (o_custkey)")
-    assert eng.zone_indexes  # index built
+    orders = eng.catalog.record("orders")
+    assert orders.zones and orders.path == str(layout)  # index built
     total = spark.read.parquet(str(layout)).count()
 
     eng.execute(
         "INSERT INTO orders VALUES (999999001, 42, \"O\", 1.0, d'1996-01-01', \"1-URGENT\")"
     )
-    assert eng.zone_indexes == {} or ("zt", "orders") not in eng.zone_indexes
+    assert orders.zones == {} and orders.path is None
     # the inserted row is visible through a range SELECT (no stale prune)
     n = eng.execute(
         "SELECT COUNT() AS n FROM orders WHERE o_custkey >= 42 AND o_custkey <= 42"
@@ -428,21 +429,74 @@ def test_drop_database_purges_zone_backing(spark):
     through the pruned-scan swap (round-6 review finding)."""
     eng, layout = _zoned_engine(spark)  # creates+uses db 'zt'
     eng.execute("CREATE INDEX i1 ON orders USING rmi (o_custkey)")
-    assert ("zt", "orders") in eng.zone_indexes
+    assert eng.catalog.record("orders").zones
     eng.catalog.create_database("other")
     eng.catalog.use("other")
     eng.execute("DROP DATABASE zt")
-    assert ("zt", "orders") not in eng.zone_indexes
-    assert ("zt", "orders") not in eng.table_paths
+    assert "zt" not in eng.catalog.databases and "zt" not in eng.catalog.indexes
     # recreated db+table: in-memory, no stale pruning, fresh results
     eng.execute("CREATE DATABASE zt")
     eng.catalog.use("zt")
     eng.execute("CREATE TABLE orders (o_custkey INT(8) PRIMARY KEY)")
+    orders = eng.catalog.record("orders")
+    assert orders.path is None and orders.zones == {}
     eng.execute("INSERT INTO orders VALUES (7)")
     rows = eng.execute(
         "SELECT o_custkey FROM orders WHERE o_custkey >= 0"
     ).collect()
     assert [r[0] for r in rows] == [7]
+
+
+def test_table_record_lives_and_dies_with_its_table(spark):
+    """A table's CHAR limits, backing path and zone map belong to its
+    catalog record: DROP TABLE takes them along, so a re-created table
+    starts from its own declaration, and two databases that each hold a
+    table ``t`` keep their own state across USE."""
+    from mutable_spark.dialect import Engine
+    from mutable_spark.plans.index_queries import _keyed_orders_layout
+
+    def rows():
+        return [tuple(r) for r in eng.execute("SELECT o_custkey, s FROM t").collect()]
+
+    eng = Engine(spark)
+    eng.execute("CREATE DATABASE za")
+    eng.execute("USE za")
+    eng.create_table_from_parquet("t", str(_keyed_orders_layout(spark, SF_DIR)))
+    eng.execute("CREATE INDEX i ON t USING rmi (o_custkey)")
+    eng.execute("CREATE DATABASE zb")
+    eng.execute("USE zb")
+    eng.execute("CREATE TABLE t (o_custkey INT(8), s CHAR(4))")
+    eng.execute("CREATE INDEX i ON t (o_custkey)")
+    eng.execute('INSERT INTO t VALUES (1, "abcdef")')
+    assert rows() == [(1, "abcd")]
+    assert eng.catalog.record("t").zones == {}
+
+    eng.execute("USE za")
+    assert "o_custkey" in eng.catalog.record("t").zones
+    assert eng.catalog.record("t").char_limits == {}
+    eng.execute("USE zb")
+    assert eng.catalog.record("t").char_limits == {"s": 4}
+
+    # re-created with a narrower CHAR: the old limit died with the table
+    eng.execute("DROP TABLE t")
+    eng.execute("CREATE TABLE t (o_custkey INT(8), s CHAR(2))")
+    eng.execute('INSERT INTO t VALUES (2, "abcdef")')
+    assert rows() == [(2, "ab")]
+
+    # the parquet-backed table re-created in memory: its path died too,
+    # so CREATE INDEX stays metadata and builds no zone map
+    eng.execute("USE za")
+    eng.execute("DROP TABLE t")
+    eng.execute("CREATE TABLE t (o_custkey INT(8), s CHAR(3))")
+    eng.execute("CREATE INDEX i ON t (o_custkey)")
+    assert eng.catalog.record("t").path is None
+    assert eng.catalog.record("t").zones == {}
+    eng.execute('INSERT INTO t VALUES (3, "abcdef")')
+    assert rows() == [(3, "abc")]
+
+    eng.execute("USE zb")
+    assert eng.catalog.record("t").char_limits == {"s": 2}
+    assert rows() == [(2, "ab")]
 
 
 # --- LIKE-prefix selectivity (VERDICT r7 item #7) --------------------------
@@ -539,7 +593,7 @@ def test_like_prefix_prunes_zone_index_files(spark):
     eng.catalog.use("zlike")
     eng.create_table_from_parquet("documents", str(layout))
     eng.execute("CREATE INDEX doc_source ON documents USING array (source)")
-    zi = eng.zone_indexes[("zlike", "documents")]["source"]
+    zi = eng.catalog.record("documents").zones["source"]
     df = eng.execute(
         """
         SELECT source, COUNT(*) AS cnt, MIN(doc_id) AS min_id

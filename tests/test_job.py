@@ -519,6 +519,8 @@ def job_env(spark):
 
 def _cases():
     out = []
+    if not JOB.exists():
+        return out
     for i, cs in KEEP.items():
         doc = yaml.safe_load((JOB / f"q{i}.yml").read_text())
         for c in cs:

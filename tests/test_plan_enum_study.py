@@ -130,6 +130,8 @@ def _assert_no_cross_product(tree, edges):
 
 def _study_cases():
     out = []
+    if not STUDY.exists():
+        return out
     for topo in TOPOLOGIES:
         doc = yaml.safe_load((STUDY / f"{topo}.yml").read_text())
         cases = doc["systems"]["mutable"]["cases"]

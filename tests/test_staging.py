@@ -143,7 +143,7 @@ def test_failed_relayout_and_import_fall_back_to_source(spark, root, tmp_path, m
         stmt = parse(f'IMPORT INTO t DSV "{dsv_file}" DELIMITER "|"')
         with monkeypatch.context() as m:
             m.setattr(pq, "write_table", no_write)
-            assert dsv.import_dsv(spark, stmt, eng.schemas[("d", "t")], {}) is boom
+            assert dsv.import_dsv(spark, stmt, eng.catalog.record("t").schema, {}) is boom
     assert _copies(root) == []
 
 
@@ -296,7 +296,7 @@ def test_import_stages_one_parquet_store(spark, root):
     for df in (first, second):
         files = df.inputFiles()
         assert files and all(f.endswith(".parquet") and stores[0] in f for f in files)
-    parsed = read_dsv(spark, orders, eng.schemas[("tpch", "Orders")], delimiter="|")
+    parsed = read_dsv(spark, orders, eng.catalog.record("Orders").schema, delimiter="|")
     assert sorted(first.collect()) == sorted(parsed.collect())
 
 

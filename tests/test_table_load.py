@@ -127,7 +127,7 @@ def test_import_submits_no_job(spark, root):
     assert len([p for p in root.iterdir() if p.name.startswith("import-")]) == 2
     warm = imported()  # served from the staged stores
     for table in ("Orders", "Lineitem"):
-        schema = cold.schemas[("tpch", table)]
+        schema = cold.catalog.record(table).schema
         parsed = read_dsv(spark, f"{data}/{table.lower()}", schema, delimiter="|")
         query = f"SELECT * FROM {table}"
         for eng in (cold, warm):
