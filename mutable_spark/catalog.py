@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import math
 import os
-import weakref
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -24,7 +23,7 @@ import pyspark.sql.types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
 from mutable_spark import staging
-from mutable_spark.session import apply_runtime_confs
+from mutable_spark.session import state
 
 TABLE_NAMES = (
     "region",
@@ -39,11 +38,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-
-#: (session id, sf_dir, table, source size and mtime_ns) → DataFrame: the
-#: logical plan is immutable, so sharing it saves ~100 ms of footer reads
-#: per query; a source rewritten in place gets a fresh frame.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 # ---------------------------------------------------------------------------
 # Size-aware AQE gate. AQE's value — runtime join re-planning, partition
@@ -66,19 +60,6 @@ _TABLE_CACHE: dict[tuple, DataFrame] = {}
 # ---------------------------------------------------------------------------
 
 _AQE_BYTES_THRESHOLD = 256 * 1024 * 1024
-#: session → sf_dir whose posture the gate last applied (avoids a glob and
-#: a py4j conf.set roundtrip per load_table call); weak keys so entries
-#: die with their session instead of colliding on a reused address.
-#: CONTRACT: confs are session-global and Spark reads them at EXECUTION
-#: time, so a session interleaving builds against differently-postured
-#: sf_dirs executes earlier-built plans under whichever posture applied
-#: last. Every harness here (driver, gate_sim, bench, oracle suite) runs
-#: one sf_dir per session; a caller mixing sizes inherits the scale-safe
-#: direction only when the LAST dir is the big one — mixed-size sessions
-#: should pin spark.sql.adaptive.enabled=true themselves.
-_AQE_APPLIED: "weakref.WeakKeyDictionary[SparkSession, str]" = (
-    weakref.WeakKeyDictionary()
-)
 
 #: shuffle width for below-threshold inputs. Same-session A/B at sf0.1
 #: (min-of-3 per arm, both sweeps): 32 → 8 partitions takes the classic
@@ -94,29 +75,33 @@ _SMALL_SHUFFLE_PARTITIONS = "8"
 def _tune_aqe(spark: SparkSession, sf_dir: str) -> None:
     """Apply the size posture for ``sf_dir``, a function of its parquet
     bytes alone; the bytes are summed only when the session last applied
-    another directory's posture."""
+    another directory's posture.
+
+    Confs are session-global and Spark reads them at execution time, so a
+    session interleaving builds over differently-postured directories
+    executes earlier-built plans under whichever posture applied last.
+    Every harness here (driver, bench, oracle suite) runs one corpus per
+    session; a caller mixing sizes inherits the scale-safe direction only
+    when the last directory is the big one, so mixed-size sessions should
+    pin ``spark.sql.adaptive.enabled=true`` themselves."""
+    rec = state(spark)
     key = sf_dir.rstrip("/")
-    try:
-        if _AQE_APPLIED.get(spark) == key:
-            return
-    except TypeError:
-        pass  # non-weakref-able session stub (tests): fall through and set
+    if rec.posture == key:
+        return
     try:
         total = sum(f.stat().st_size for f in Path(key).glob("*.parquet") if f.is_file())
     except OSError:
         total = 0
     big = not total or total >= _AQE_BYTES_THRESHOLD
     try:
-        if not hasattr(spark, "_msq_default_shuffle"):
-            spark._msq_default_shuffle = spark.conf.get(
-                "spark.sql.shuffle.partitions", "200"
-            )
+        if rec.default_shuffle is None:
+            rec.default_shuffle = spark.conf.get("spark.sql.shuffle.partitions", "200")
         spark.conf.set("spark.sql.adaptive.enabled", "true" if big else "false")
         spark.conf.set(
             "spark.sql.shuffle.partitions",
-            spark._msq_default_shuffle if big else _SMALL_SHUFFLE_PARTITIONS,
+            rec.default_shuffle if big else _SMALL_SHUFFLE_PARTITIONS,
         )
-        _AQE_APPLIED[spark] = key
+        rec.posture = key
     except Exception:
         pass
 
@@ -235,22 +220,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     - ``events.ts`` arrives as INT64 TIMESTAMP(NANOS) (Spark can't read it
       natively; `spark.sql.legacy.parquet.nanosAsLong` is set by
-      ``apply_runtime_confs``). Convert nanos → TIMESTAMP_NTZ via exact
+      ``session.state``). Convert nanos → TIMESTAMP_NTZ via exact
       integer division, matching DuckDB's ns→µs truncation.
     """
-    apply_runtime_confs(spark)
+    frames = state(spark).frames
     _tune_aqe(spark, sf_dir)
-    # applicationId (not id(spark)): a stopped session's address can be
-    # reused by a new one, which would serve dead plans from the cache
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:
-        app = id(spark)
     src = Path(sf_dir.rstrip("/")) / f"{name}.parquet"
     st = src.stat() if src.exists() else None
-    key = (app, sf_dir.rstrip("/"), name, st and (st.st_size, st.st_mtime_ns))
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
+    key = (sf_dir.rstrip("/"), name, st and st.st_size, st and st.st_mtime_ns)
+    if key in frames:
+        return frames[key]
     path = _maybe_relayout(src)
     schema = footer_schema(path)
     df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
@@ -259,7 +238,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts",
             F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
         )
-    _TABLE_CACHE[key] = df
+    frames[key] = df
     return df
 
 

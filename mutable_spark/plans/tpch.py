@@ -19,13 +19,13 @@ BigDecimal per row — measured 0.79 s → 0.66 s on Q1 at sf0.1.
 from __future__ import annotations
 
 import threading
-import weakref
 
 import pyspark.sql.functions as F
 
 from mutable_spark.catalog import load_tables
 from mutable_spark.functions import cents, split_sum, sql_cents, sql_split_sum
 from mutable_spark.registry import query
+from mutable_spark.session import state
 
 
 def TS(s: str):
@@ -74,16 +74,6 @@ _SQL_CH_C = f"({_SQL_DP_C} * (100 + {_SQL_T}))"
 # their final stage filters part/supplier-scale rows, and a 1-task
 # collapse there is exactly the driver-bottleneck this file avoids.
 
-#: session → {view name: id() of the DataFrame currently bound}.
-#: createOrReplaceTempView is a py4j round trip + catalog write (~10 ms
-#: per view), and load_table memoizes frames per (app, sf_dir, table), so
-#: re-binding the SAME frame is a no-op we can skip. Keyed WEAKLY on the
-#: session object (the `_CONFS_APPLIED` rule, session.py): temp views are
-#: session-scoped, a dead session's entry dies with it, and an address
-#: reuse cannot collide because the key is the live object itself. A
-#: different sf_dir yields a different cached frame → different id() →
-#: re-registration happens.
-_VIEWS_BOUND: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 #: held from binding the views through analysing the query, so a thread
 #: binding another sf_dir's frames cannot slip in between the two
 _BIND_LOCK = threading.Lock()
@@ -91,17 +81,14 @@ _BIND_LOCK = threading.Lock()
 
 def _q(spark, sf_dir, tables, sql):
     t = load_tables(spark, sf_dir)
+    views = state(spark).views
     with _BIND_LOCK:
-        try:
-            bound = _VIEWS_BOUND.setdefault(spark, {})
-        except TypeError:  # non-weakref-able session stub (tests)
-            bound = {}
         for tbl in tables:
             df = getattr(t, tbl)
             name = f"msq_{tbl}"
-            if bound.get(name) != id(df):
+            if views.get(name) is not df:
                 df.createOrReplaceTempView(name)
-                bound[name] = id(df)
+                views[name] = df
         return spark.sql(sql)
 
 

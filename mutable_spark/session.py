@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import decimal
 import os
-import weakref
+from dataclasses import dataclass, field
 
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
@@ -89,30 +89,46 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-#: SparkSession objects whose runtime confs are already applied — every
-#: `load_table` call funnels through `apply_runtime_confs`, and each
-#: `conf.set` is a py4j roundtrip: 10 tables × ~8 confs per query build was
-#: a measurable slice of the fixed per-query floor (VERDICT r9 item #9).
-#: Keyed on the SESSION object (weakly), not the applicationId: confs are
-#: session-scoped, so two sessions sharing a SparkContext
-#: (spark.newSession()) must each get the confs, and a WeakSet entry dies
-#: with its session (no id()-after-GC collisions). A second Python wrapper
-#: of the same JVM session merely re-applies idempotent sets.
-_CONFS_APPLIED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+@dataclass
+class SessionState:
+    """What the engine remembers about one SparkSession, kept on the
+    session object: a ``newSession()`` sibling (own confs and temp views)
+    starts cold, and the record dies with its session.
+
+    - ``posture``: the ``sf_dir`` whose size posture `catalog._tune_aqe`
+      applied; ``default_shuffle``: the session's own
+      ``shuffle.partitions``, captured before the first posture;
+    - ``frames``: ``(sf_dir, table, size, mtime_ns)`` → `load_table`'s
+      frame (its plan is immutable; a source rewritten in place gets a
+      new key);
+    - ``views``: temp view name → the frame `plans.tpch._q` bound to it,
+      so re-binding the same frame costs no round trip.
+    """
+
+    posture: str | None = None
+    default_shuffle: str | None = None
+    frames: dict[tuple, DataFrame] = field(default_factory=dict)
+    views: dict[str, DataFrame] = field(default_factory=dict)
+
+
+def state(spark: SparkSession) -> SessionState:
+    """The session's record; the first call applies `RUNTIME_CONFS` (each
+    ``conf.set`` is a py4j round trip, so it is done once per session)."""
+    st = vars(spark).get("_mutable_spark_state")
+    if st is None:
+        for k, v in RUNTIME_CONFS.items():
+            try:
+                spark.conf.set(k, v)
+            except Exception:
+                pass  # static conf on this build — session default applies
+        # setdefault is atomic: threads racing on a new session apply the
+        # same confs and share the one record stored
+        st = vars(spark).setdefault("_mutable_spark_state", SessionState())
+    return st
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    if spark in _CONFS_APPLIED:
-        return spark
-    for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this build — session default applies
-    try:
-        _CONFS_APPLIED.add(spark)
-    except TypeError:
-        pass  # non-weakref-able session stub (tests): re-apply each call
+    state(spark)
     return spark
 
 

@@ -12,8 +12,8 @@ from concurrent.futures import ThreadPoolExecutor
 from mutable_spark import registry
 from mutable_spark.catalog import load_tables
 from mutable_spark.dialect.engine import Engine
-from mutable_spark.plans import tpch
 from mutable_spark.plans.dialect_tpch import _data_dir, _engine_with_schema
+from mutable_spark.session import state
 from tests.conftest import TESTDATA
 
 registry.load_all()
@@ -64,7 +64,7 @@ def test_bind_and_analyse_are_one_step(spark, monkeypatch):
             pass  # the other thread is held off until this one has analysed
 
     monkeypatch.setattr(frame, "createOrReplaceTempView", bind_then_wait)
-    tpch._VIEWS_BOUND.pop(spark, None)
+    state(spark).views.clear()
     with ThreadPoolExecutor(2) as pool:
         small, _ = pool.map(lambda sf: q6(spark, sf), (SMALL, LARGER))
     monkeypatch.undo()

@@ -1,4 +1,5 @@
-"""Driver-side plan construction: py4j round trips per dialect statement.
+"""Driver-side plan construction: py4j round trips per dialect statement
+and per warm TPC-H build.
 
 Every py4j call is a socket round trip to the JVM. `session.get_spark`
 turns off PySpark's per-Column call-site capture (each wrapped Column
@@ -15,8 +16,11 @@ from pyspark.errors import ArithmeticException
 from pyspark.errors import utils as error_utils
 from pyspark.sql import functions as F
 
+from mutable_spark import registry
+from mutable_spark.catalog import load_tables
 from mutable_spark.dialect import Engine
 from mutable_spark.dialect.sema import SemaError
+from tests.conftest import SF_DIR
 
 _STATEMENTS = {
     "create": "CREATE TABLE r{n} (id INT(4) PRIMARY KEY, name CHAR(5), val DOUBLE)",
@@ -66,6 +70,24 @@ def test_dialect_statements_stay_within_round_trip_budget(spark, round_trips):
     assert eng.execute("SELECT * FROM r1").count() == 2
     over = {k: (c, _BUDGET[k]) for k, c in counts.items() if c > _BUDGET[k]}
     assert not over, f"round trips over budget (count, budget): {over}"
+
+
+def test_warm_load_tables_makes_no_round_trip(spark, round_trips):
+    load_tables(spark, SF_DIR)
+    before = round_trips[0]
+    load_tables(spark, SF_DIR)
+    assert round_trips[0] - before == 0
+
+
+def test_warm_tpch_build_stays_within_round_trip_budget(spark, round_trips):
+    """A warm ``tpch_q3`` build reuses the session's frames and bound
+    views: only ``spark.sql`` talks to the JVM."""
+    registry.load_all()
+    q3 = registry.QUERIES["tpch_q3"]
+    q3(spark, SF_DIR)
+    before = round_trips[0]
+    q3(spark, SF_DIR)
+    assert round_trips[0] - before <= 6  # 5
 
 
 # --- the session and error contracts ---------------------------------------

@@ -1,7 +1,8 @@
 """Runtime-conf application is SESSION-scoped (ADVICE r10): confs set via
 ``spark.conf.set`` live on the SparkSession, not the SparkContext, so a
 second session sharing the context (``spark.newSession()``) must get its
-own application — the old applicationId-keyed memo silently skipped it."""
+own application and its own table frames — memos keyed on the shared
+application skipped the confs and served the first session's frames."""
 
 from contextlib import contextmanager
 
@@ -9,7 +10,7 @@ from pyspark.sql.conf import RuntimeConfig
 
 from mutable_spark import catalog as C, registry
 from mutable_spark.catalog import load_tables
-from mutable_spark.session import RUNTIME_CONFS, apply_runtime_confs
+from mutable_spark.session import RUNTIME_CONFS, apply_runtime_confs, state
 from tests.conftest import TESTDATA
 
 # a conf that is runtime-settable and session-scoped
@@ -33,14 +34,26 @@ def test_new_session_sharing_context_gets_runtime_confs(spark):
 
 
 def test_memo_is_per_session_object(spark):
-    from mutable_spark import session as S
-
     apply_runtime_confs(spark)
-    assert spark in S._CONFS_APPLIED
+    assert "_mutable_spark_state" in vars(spark)
     sib = spark.newSession()
-    assert sib not in S._CONFS_APPLIED
+    assert "_mutable_spark_state" not in vars(sib)
     apply_runtime_confs(sib)
-    assert sib in S._CONFS_APPLIED
+    assert state(sib) is vars(sib)["_mutable_spark_state"]
+    assert state(sib) is not state(spark)
+
+
+def test_sibling_session_reads_its_own_frames(spark):
+    """A ``newSession()`` sibling shares the SparkContext but not temp
+    views, so it must get its own table frames: a frame of the first
+    session would bind `plans.tpch._q`'s views into that session."""
+    registry.load_all()
+    sf = f"{TESTDATA}/sf0.001"
+    q6 = registry.QUERIES["tpch_q6"]
+    expected = q6(spark, sf).collect()
+    sib = spark.newSession()
+    assert C.load_table(sib, sf, "lineitem").sparkSession is sib
+    assert q6(sib, sf).collect() == expected
 
 
 @contextmanager
@@ -50,11 +63,11 @@ def _big_corpus(spark, monkeypatch, sf_dir):
     try:
         with monkeypatch.context() as m:
             m.setattr(C, "_AQE_BYTES_THRESHOLD", 1)
-            C._AQE_APPLIED.pop(spark, None)
+            state(spark).posture = None
             C._tune_aqe(spark, sf_dir)
             yield
     finally:
-        C._AQE_APPLIED.pop(spark, None)
+        state(spark).posture = None
         C._tune_aqe(spark, sf_dir)
 
 
@@ -76,7 +89,7 @@ def test_size_aware_shuffle_width(spark, monkeypatch):
     with _big_corpus(spark, monkeypatch, _SF):
         assert (
             spark.conf.get("spark.sql.shuffle.partitions")
-            == spark._msq_default_shuffle
+            == state(spark).default_shuffle
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 

@@ -120,23 +120,25 @@ def test_ivf_train_stable_under_input_scramble(spark):
     grouping; the trainer's output must be bit-identical (integer sums
     are order-free, argmin is a total order, the one double division per
     centroid coordinate is correctly rounded from exact operands)."""
-    from mutable_spark.catalog import _TABLE_CACHE, load_tables
+    from mutable_spark.catalog import load_tables
     from mutable_spark.operators.similarity import sim_ivf_train
+    from mutable_spark.session import state
 
     base = sorted(tuple(r) for r in sim_ivf_train(spark, SF_DIR).collect())
 
     # scramble the cached embeddings frame the operator will load
     t = load_tables(spark, SF_DIR)
-    key = next(k for k in _TABLE_CACHE if k[1] == SF_DIR.rstrip("/") and k[2] == "embeddings")
-    saved = _TABLE_CACHE[key]
+    frames = state(spark).frames
+    key = next(k for k in frames if k[0] == SF_DIR.rstrip("/") and k[1] == "embeddings")
+    saved = frames[key]
     try:
-        _TABLE_CACHE[key] = (
+        frames[key] = (
             saved.repartition(13, F.xxhash64("vec_id"))
             .sortWithinPartitions(F.col("vec_id").desc())
         )
         scrambled = sorted(tuple(r) for r in sim_ivf_train(spark, SF_DIR).collect())
     finally:
-        _TABLE_CACHE[key] = saved
+        frames[key] = saved
     assert base == scrambled
 
 

@@ -14,6 +14,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from mutable_spark import catalog
+from mutable_spark.session import state
 from mutable_spark.sources.dsv import read_dsv
 from tests.conftest import SF_DIR, TABLES
 
@@ -30,14 +31,14 @@ def _same_rows(a, b) -> bool:
 
 
 def test_load_tables_submits_no_job(spark, root, monkeypatch):
-    monkeypatch.setattr(catalog, "_TABLE_CACHE", {})
+    monkeypatch.setattr(state(spark), "frames", {})
     before = _jobs(spark)
     first = catalog.load_tables(spark, SF_DIR)
     assert _jobs(spark) == before, "cold load_tables ran Spark jobs"
     assert [p.name for p in root.iterdir() if p.name.startswith("relayout-lineitem-")]
 
-    # a new session over the staged root: nothing cached in the process
-    monkeypatch.setattr(catalog, "_TABLE_CACHE", {})
+    # as a new session over the staged root: no frame cached
+    monkeypatch.setattr(state(spark), "frames", {})
     before = _jobs(spark)
     second = catalog.load_tables(spark, SF_DIR)
     assert _jobs(spark) == before, "warm load_tables ran Spark jobs"
@@ -92,7 +93,7 @@ def test_spark_written_footer_defers_to_inference(spark, tmp_path):
 def test_relayout_splits_rows_unchanged(spark, root, monkeypatch, name):
     # sf0.001 events has 1000 rows: lower the floor so it is split too
     monkeypatch.setattr(catalog, "_RELAYOUT_MIN_ROWS", 100)
-    monkeypatch.setattr(catalog, "_TABLE_CACHE", {})
+    monkeypatch.setattr(state(spark), "frames", {})
     src = Path(SF_DIR) / f"{name}.parquet"
     copy = catalog._maybe_relayout(src)
     parts = sorted(Path(copy).iterdir())
@@ -103,7 +104,7 @@ def test_relayout_splits_rows_unchanged(spark, root, monkeypatch, name):
 
     # the same load served from the source file itself
     monkeypatch.setattr(catalog, "_RELAYOUT_MIN_ROWS", 1 << 62)
-    monkeypatch.setattr(catalog, "_TABLE_CACHE", {})
+    monkeypatch.setattr(state(spark), "frames", {})
     direct = catalog.load_table(spark, SF_DIR, name)
     assert direct.inputFiles() == [src.resolve().as_uri()]
     assert loaded.schema == direct.schema
