@@ -37,12 +37,21 @@ from dataclasses import dataclass, field
 
 
 def parquet_row_count(path: str) -> int | None:
-    """Row count from the parquet footer — metadata, not a scan."""
-    try:
-        import pyarrow.parquet as pq
+    """Row count of a parquet file, or of a directory's ``*.parquet`` files
+    at any depth, from their footers — metadata, not a scan. ``None`` when
+    there is no file or any footer is unreadable."""
+    from pathlib import Path
 
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = Path(path)
+    files = sorted(p.glob("**/*.parquet")) if p.is_dir() else [p]
+    if not files:
+        return None
+    try:
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except (OSError, pa.ArrowException):
         return None
 
 

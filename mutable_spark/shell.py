@@ -179,17 +179,13 @@ def _register_builtin_instructions() -> None:
         eng.create_table_from_parquet(table, path)
         # footer-metadata row count — registration must not launch a scan
         # job over an arbitrarily large layout just for a message
-        from pathlib import Path as _P
-
         from mutable_spark.plans.planner import parquet_row_count
 
-        p = _P(path)
-        files = sorted(p.glob("**/*.parquet")) if p.is_dir() else [p]
-        counts = [parquet_row_count(str(f)) for f in files]
-        if not counts or any(c is None for c in counts):
+        n = parquet_row_count(path)
+        if n is None:
             # unreadable/unknown footers: say so rather than undercount
             return f"registered {table} from {path} (parquet-backed)"
-        return f"registered {table} from {path} ({sum(counts)} rows, parquet-backed)"
+        return f"registered {table} from {path} ({n} rows, parquet-backed)"
 
     SHELL_INSTRUCTIONS.setdefault("learn_spns", _learn_spns)
     SHELL_INSTRUCTIONS.setdefault("cardinalities", _cardinalities)

@@ -1,10 +1,11 @@
 """Build-once staging of derived on-disk copies: relayouts, IMPORT stores,
-format round-trip fixtures, bucketed tables and stream source directories.
-A copy lives under ``SPARK_GRAFT_RELAYOUT_DIR`` (default ``.relayout/``),
-which is safe to delete, keyed by its source files' realpath, size and
-``mtime_ns`` plus the caller's recipe. It is built in a private
-``.build-*`` directory and published by an atomic rename, so an existing
-copy is complete and a failed build leaves nothing behind."""
+format round-trip fixtures, bucketed tables, stream source directories
+and trained-label stores. A copy lives under a root directory, by default
+``SPARK_GRAFT_RELAYOUT_DIR`` (``.relayout/``), which is safe to delete,
+keyed by its source files' realpath, size and ``mtime_ns`` plus the
+caller's recipe. It is built in a private ``.build-*`` directory and
+published by an atomic rename, so an existing copy is complete and a
+failed build leaves nothing behind."""
 
 from __future__ import annotations
 
@@ -39,11 +40,13 @@ def fingerprint(sources, recipe: str) -> str:
     return h.hexdigest()[:16]
 
 
-def staged(name: str, sources, recipe: str, write) -> str:
-    """The copy ``write(tmp_path)`` builds from ``sources`` under ``recipe``;
-    ``write`` runs only when that copy does not exist yet."""
+def staged(name: str, sources, recipe: str, write, root=None) -> str:
+    """The copy ``write(tmp_path)`` builds from ``sources`` under ``recipe``
+    in ``root`` (default: the relayout dir); ``write`` runs only when that
+    copy does not exist yet."""
     fp = fingerprint(sources, recipe)
-    dest = Path(os.environ.get("SPARK_GRAFT_RELAYOUT_DIR", _DEFAULT_ROOT)) / f"{name}-{fp}"
+    root = root or os.environ.get("SPARK_GRAFT_RELAYOUT_DIR", _DEFAULT_ROOT)
+    dest = Path(root) / f"{name}-{fp}"
     with _LOCKS.setdefault(str(dest), threading.Lock()):
         if not dest.exists():
             tmp = dest.with_name(f".build-{name}-{fp}-{os.getpid()}")

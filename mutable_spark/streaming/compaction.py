@@ -123,38 +123,49 @@ def _signature_dir(store_dir: str) -> Path:
     return Path(store_dir) / "signatures"
 
 
-def extend_signature_store(
-    spark: SparkSession, staged_dir: str, store_dir: str
+def _extend_store(
+    spark: SparkSession, staged_dir: str, store: Path, derive
 ) -> int:
-    """Incremental half of compaction: sign every staged doc not yet in
-    the all-time store and append. Returns the number of newly PROCESSED
-    docs — including sub-shingle-width docs that emit no signature,
-    which go to the zero-output manifest so they are never re-read
-    (r14 advice). Idempotent — a rerun after a crash between append and
-    class emission re-diffs against the store and appends nothing. The
-    store-exists gate READS committed part files rather than keying on
-    the `_SUCCESS` marker (r14 verdict nit): duplicate signatures after
-    a marker-less partial commit would inflate LSH bucket sizes toward
-    `_MAX_BUCKET`, and the star-cap could then silently drop real
-    candidate pairs."""
-    from mutable_spark.operators.dedup import _hashed_shingle_df
-
+    """Incremental half of a doc-keyed compaction: ``derive`` the store
+    rows of every staged doc not yet processed into ``store`` and append
+    them. Returns the number of newly PROCESSED docs. A doc can emit no
+    store row — under the shingle width no signature, under k tokens no
+    gram, empty text no word count — so those go to the zero-output
+    manifest and are never re-read (r14 advice). Idempotent — a rerun
+    after a crash between append and class emission re-diffs against the
+    store and appends nothing. The seen-set gate READS committed part
+    files rather than keying on the `_SUCCESS` marker (r14 verdict nit),
+    because a re-appended row is harmful in every such store: duplicate
+    signatures inflate LSH bucket sizes toward `_MAX_BUCKET`, where the
+    star-cap can silently drop real candidate pairs; a duplicate gram
+    self-satisfies the ≥2 duplication count; a duplicate word count
+    double-counts frequency."""
     staged = spark.read.parquet(staged_dir)
-    sig_dir = _signature_dir(store_dir)
-    seen = _seen_doc_ids(spark, sig_dir)
+    seen = _seen_doc_ids(spark, store)
     if seen is not None:
         staged = staged.join(seen, "doc_id", "left_anti")
     staged = staged.localCheckpoint(eager=True)
     n_new = staged.count()
     if not n_new:
         return 0
-    new_sigs = _hashed_shingle_df(staged).localCheckpoint(eager=True)
-    if new_sigs.limit(1).count():
-        new_sigs.write.mode("append").parquet(str(sig_dir))
+    rows = derive(staged).localCheckpoint(eager=True)
+    if rows.limit(1).count():
+        rows.write.mode("append").parquet(str(store))
     _record_zero_output(
-        staged.select("doc_id"), new_sigs.select("doc_id"), sig_dir
+        staged.select("doc_id"), rows.select("doc_id"), store
     )
     return n_new
+
+
+def extend_signature_store(
+    spark: SparkSession, staged_dir: str, store_dir: str
+) -> int:
+    """`_extend_store` for the MinHash signature store."""
+    from mutable_spark.operators.dedup import _hashed_shingle_df
+
+    return _extend_store(
+        spark, staged_dir, _signature_dir(store_dir), _hashed_shingle_df
+    )
 
 
 def compact_fuzzy_classes(
@@ -235,10 +246,6 @@ def extend_vector_store(
     return n_new
 
 
-def _label_dir(store_dir: str, n: int, rounds: int) -> Path:
-    return Path(store_dir) / "labels" / f"n{n}_r{rounds}"
-
-
 def compact_embedding_classes(
     spark: SparkSession, staged_dir: str, store_dir: str
 ) -> DataFrame:
@@ -254,23 +261,21 @@ def compact_embedding_classes(
     batch operating point at every store size.
 
     r15: the compaction MAINTAINS the trained-label store beside the
-    vectors — the streaming half of the write-back path the batch
-    consumers read (`stored_retrained_labels`). Labels for the current
-    store size are trained ONCE, written under
-    ``labels/n{N}_r{rounds}``, and every same-size re-run (crash
-    replay, idempotent re-delivery) READS them instead of re-entering
-    the Lloyd chain; a grown store gets a fresh version directory, so
-    the re-train follows ingest growth exactly as before. The Lloyd
-    chain is bit-deterministic, so trained-then-stored and in-plan
-    labels are identical and the stream==batch equality is unchanged."""
+    vectors, under ``labels/`` (`dedup.trained_labels`, the write-back
+    path the batch consumers read). The store is staged by the vector
+    files' identity, so labels for the current store are trained ONCE
+    and every re-run over the same vectors (crash replay, idempotent
+    re-delivery) READS them instead of re-entering the Lloyd chain; an
+    append gets a fresh store, so the re-train follows ingest growth
+    exactly as before. The Lloyd chain is bit-deterministic, so
+    trained-then-stored and in-plan labels are identical and the
+    stream==batch equality is unchanged."""
     import pyspark.sql.functions as F
 
     from mutable_spark.operators.dedup import (
-        _RETRAIN_ROUNDS,
-        _sqrt_cells,
         connected_components,
-        retrained_cells,
         retrained_multiprobe_pairs,
+        trained_labels,
     )
 
     extend_vector_store(spark, staged_dir, store_dir)
@@ -280,17 +285,12 @@ def compact_embedding_classes(
     # reason compact_fuzzy_classes caches its signature store; without
     # it each compaction pays several full store scans that grow with
     # all-time corpus size
-    e = spark.read.parquet(str(_vector_dir(store_dir))).cache()
+    vec_dir = _vector_dir(store_dir)
+    e = spark.read.parquet(str(vec_dir)).cache()
     try:
-        n = e.count()
-        k = _sqrt_cells(n)
-        lab_dir = _label_dir(store_dir, n, _RETRAIN_ROUNDS)
-        lab = _read_store(spark, lab_dir)
-        if lab is None:
-            retrained_cells(e, k, _RETRAIN_ROUNDS).write.mode(
-                "overwrite"
-            ).parquet(str(lab_dir))
-            lab = spark.read.parquet(str(lab_dir))
+        lab, k, n = trained_labels(
+            e, [vec_dir], "vectors", str(Path(store_dir) / "labels")
+        )
         pairs = (
             retrained_multiprobe_pairs(e, labels=lab, k=k, n_rows=n)
             .select(
@@ -327,33 +327,12 @@ def _gram_dir(store_dir: str) -> Path:
 def extend_gram_store(
     spark: SparkSession, staged_dir: str, store_dir: str
 ) -> int:
-    """Incremental half of span compaction: positional k-grams for
-    every staged doc not yet in the all-time store, appended. Returns
-    the number of newly PROCESSED documents — sub-k-token docs that
-    emit no gram go to the zero-output manifest so they are never
-    re-read (r14 advice). Idempotent via the read-detect gate (see
-    module note: duplicate gram rows would self-satisfy the duplication
-    count)."""
+    """`_extend_store` for the positional k-gram store."""
     from mutable_spark.operators.dedup import positional_gram_frame
 
-    staged = spark.read.parquet(staged_dir)
-    gram_dir = _gram_dir(store_dir)
-    seen = _seen_doc_ids(spark, gram_dir)
-    if seen is not None:
-        staged = staged.join(seen, "doc_id", "left_anti")
-    staged = staged.localCheckpoint(eager=True)
-    n_new = staged.count()
-    if not n_new:
-        return 0
-    new_grams = positional_gram_frame(staged).localCheckpoint(eager=True)
-    if new_grams.limit(1).count():
-        new_grams.write.mode("append").parquet(str(gram_dir))
-    _record_zero_output(
-        staged.select("doc_id"),
-        new_grams.select("doc_id").distinct(),
-        gram_dir,
+    return _extend_store(
+        spark, staged_dir, _gram_dir(store_dir), positional_gram_frame
     )
-    return n_new
 
 
 def compact_duplicate_spans(
@@ -392,42 +371,26 @@ def _wordcount_dir(store_dir: str) -> Path:
     return Path(store_dir) / "wordcounts"
 
 
-def extend_wordcount_store(
-    spark: SparkSession, staged_dir: str, store_dir: str
-) -> int:
-    """Incremental half of BPE compaction: per-document word counts for
-    every staged doc not yet in the all-time store, appended. Returns
-    the number of newly PROCESSED documents — empty-text docs that emit
-    no count row go to the zero-output manifest so they are never
-    re-read (r14 advice). Idempotent via the read-detect gate (duplicate
-    rows would double-count frequency)."""
-    staged = spark.read.parquet(staged_dir)
-    wc_dir = _wordcount_dir(store_dir)
-    seen = _seen_doc_ids(spark, wc_dir)
-    if seen is not None:
-        staged = staged.join(seen, "doc_id", "left_anti")
-    staged = staged.localCheckpoint(eager=True)
-    n_new = staged.count()
-    if not n_new:
-        return 0
-    new_wc = (
-        staged.select(
+def _word_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, w, cnt): each document's whitespace-split word counts."""
+    return (
+        docs.select(
             "doc_id",
             F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
         )
         .filter(F.length("w") >= 1)
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
-    if new_wc.limit(1).count():
-        new_wc.write.mode("append").parquet(str(wc_dir))
-    _record_zero_output(
-        staged.select("doc_id"),
-        new_wc.select("doc_id").distinct(),
-        wc_dir,
+
+
+def extend_wordcount_store(
+    spark: SparkSession, staged_dir: str, store_dir: str
+) -> int:
+    """`_extend_store` for the per-document word-count store."""
+    return _extend_store(
+        spark, staged_dir, _wordcount_dir(store_dir), _word_counts
     )
-    return n_new
 
 
 def compact_bpe_rules(

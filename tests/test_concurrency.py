@@ -1,7 +1,8 @@
 """Several clients on one session: queries built and run from concurrent
 threads over different corpora return what they return serially, and
 leave the session's size posture as they found it. Dialect clients that
-IMPORT the same DSV export build its staged stores concurrently."""
+IMPORT the same DSV export build its staged stores concurrently, and so
+do clients that train the same corpus' labels."""
 
 from __future__ import annotations
 
@@ -12,9 +13,10 @@ from concurrent.futures import ThreadPoolExecutor
 from mutable_spark import registry
 from mutable_spark.catalog import load_tables
 from mutable_spark.dialect.engine import Engine
+from mutable_spark.operators import dedup
 from mutable_spark.plans.dialect_tpch import _data_dir, _engine_with_schema
 from mutable_spark.session import state
-from tests.conftest import TESTDATA
+from tests.conftest import SF_DIR, TESTDATA
 
 registry.load_all()
 
@@ -69,6 +71,32 @@ def test_bind_and_analyse_are_one_step(spark, monkeypatch):
         small, _ = pool.map(lambda sf: q6(spark, sf), (SMALL, LARGER))
     monkeypatch.undo()
     assert _digest(small) == serial
+
+
+def test_first_label_use_trains_once(spark, tmp_path, monkeypatch):
+    """Two clients whose first use of a corpus' labels overlaps get the
+    labels one of them trained. The barrier lets both threads into
+    training when nothing holds the second back; two trainers writing one
+    store leave doubled rows or a failed commit."""
+    e = load_tables(spark, SF_DIR).embeddings
+    serial = sorted(map(tuple, dedup.retrained_cells(e, dedup._sqrt_cells(e.count())).collect()))
+    barrier = threading.Barrier(2)
+    real_train = dedup.retrained_cells
+
+    def wait_then_train(*args, **kwargs):
+        try:
+            barrier.wait(timeout=3)
+        except threading.BrokenBarrierError:
+            pass  # the other thread is held off until this one has published
+        return real_train(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_LABEL_STORE_ROOT", str(tmp_path))
+    monkeypatch.setattr(dedup, "retrained_cells", wait_then_train)
+    with ThreadPoolExecutor(2) as pool:
+        results = list(pool.map(lambda _: dedup.stored_retrained_labels(e, SF_DIR), range(2)))
+    for lab, _, n in results:
+        assert n == e.count()
+        assert sorted(map(tuple, lab.collect())) == serial
 
 
 def test_four_clients_share_one_session(spark, root, tmp_path, monkeypatch):

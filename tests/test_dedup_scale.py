@@ -651,12 +651,9 @@ def test_label_store_amortizes_training(spark, monkeypatch):
 
     e = load_tables(spark, SF_DIR).embeddings
     lab1, k1, n1 = dedup.stored_retrained_labels(e, SF_DIR)
-    path = dedup._label_version_dir(
-        dedup._corpus_version_tag(SF_DIR, "full"), n1, dedup._RETRAIN_ROUNDS
-    )
-    assert os.path.isdir(path) and any(
-        f.startswith("part-") for f in os.listdir(path)
-    )
+    (path,) = {os.path.dirname(f.removeprefix("file://")) for f in lab1.inputFiles()}
+    assert os.path.dirname(path) == dedup._label_store_root()
+    assert any(f.startswith("part-") for f in os.listdir(path))
 
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("store hit expected: re-training is the bug")
@@ -667,6 +664,31 @@ def test_label_store_amortizes_training(spark, monkeypatch):
     a = sorted(map(tuple, lab1.collect()))
     b = sorted(map(tuple, lab2.collect()))
     assert a == b and len(a) == n1
+
+
+def test_label_store_keeps_the_trained_corpus_count(spark, tmp_path):
+    """A vector with no elements gets no label, so a store hit must take n
+    (and k = ⌊√n⌋) from what was trained, not from the label rows: four
+    vectors, one empty, train k = 2 cells into three labels."""
+    from pyspark.sql import types as T
+
+    from mutable_spark.operators import dedup
+
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.FloatType())),
+        ]
+    )
+    src = str(tmp_path / "vectors")
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]), (3, [])]
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    e = spark.read.parquet(src)
+    root = str(tmp_path / "labels")
+    cold = dedup.trained_labels(e, [src], "t", root)
+    hit = dedup.trained_labels(e, [src], "t", root)
+    assert cold[1:] == hit[1:] == (2, 4)
+    assert hit[0].count() == 3
 
 
 def test_canonical_scrub_keeps_exactly_one_copy(spark, tmp_path):

@@ -1019,7 +1019,7 @@ def test_multiprobe_tier_broadcast_assign_no_cartesian(plans, spark):
 
     from mutable_spark.catalog import load_tables
 
-    thr = DD._conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold")
+    thr = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     assert thr > 0  # the session sets a finite threshold
     big_n = thr  # n rows at >520 B/row always exceeds thr bytes
     side = load_tables(spark, SF_DIR).embeddings.select("vec_id", "embedding")

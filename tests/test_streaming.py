@@ -1688,12 +1688,11 @@ def test_stream_plus_compaction_equals_batch_embedding_classes(spark, tmp_path):
     # vectors — one version directory per store size, and the final
     # labels equal the batch re-train bit-for-bit
     from mutable_spark.operators import dedup
-    from mutable_spark.streaming.compaction import _label_dir
 
-    lab_dir = _label_dir(str(store), e.count(), dedup._RETRAIN_ROUNDS)
-    assert lab_dir.is_dir() and any(
-        f.name.startswith("part-") for f in lab_dir.iterdir()
-    )
+    versions = sorted((store / "labels").iterdir(), key=lambda p: p.stat().st_mtime_ns)
+    assert len(versions) == 2
+    lab_dir = versions[-1]
+    assert any(f.name.startswith("part-") for f in lab_dir.iterdir())
     stored = sorted(
         map(tuple, spark.read.parquet(str(lab_dir)).collect())
     )
