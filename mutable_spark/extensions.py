@@ -13,8 +13,9 @@ The Spark engine's analogue, with the same name-keyed semantics
 - **plan enumerators**: ``register_plan_enumerator(name, fn)`` with
   ``fn(aliases, edges, cards) -> tree | None`` (None = "not applicable,
   fall back to GOO", exactly how the builtin DP family degrades).
-  ``JoinPlanner(enumerator=name)`` resolves builtins first, then this
-  registry — `Catalog::register_plan_enumerator`.
+  The builtin enumerators are entries of the same table, so
+  ``JoinPlanner(enumerator=name)`` resolves every name through it —
+  `Catalog::register_plan_enumerator`.
 - **cardinality estimators**: ``register_cardinality_estimator(name,
   factory)`` with ``factory(spark, source, **kw) -> Cardinalities`` —
   `Catalog::register_cardinality_estimator`. ``source`` is whatever the
@@ -113,4 +114,35 @@ def _register_builtin_estimators() -> None:
     CARDINALITY_ESTIMATORS.setdefault("spn", spn)
 
 
+def _register_builtin_enumerators() -> None:
+    """The builtin join enumerators, as registry entries: a user
+    registration under one of these names raises unless ``replace``."""
+    from mutable_spark.plans import planner as P
+
+    builtins = {
+        "dpccp": P.dpccp_plan,
+        "dpsize": P.dpsize_plan,
+        "dpsizeopt": P.dpsizeopt_plan,
+        "dpsizesub": P.dpsizesub_plan,
+        "dpsub": P.dpsub_plan,
+        "dpsubopt": P.dpsubopt_plan,
+        "tdbasic": P.tdbasic_plan,
+        "tdmincut": P.tdmincut_plan,
+        "tdgoo": P.tdgoo_plan,
+        "ikkbz": P.ikkbz_plan,
+        "lineardp": P.linearizeddp_plan,
+        "peall": P.peall_plan,
+        # heuristic-search family (SIGMOD'23): hs-astar is exact
+        # (admissible zero heuristic); the rest trade optimality for
+        # bounded search effort
+        "hs-astar": P.hs_astar_plan,
+        "hs-weighted": P.hs_weighted_astar_plan,
+        "hs-beam": P.hs_beam_plan,
+        "hs-anytime": P.hs_anytime_plan,
+    }
+    for name, fn in builtins.items():
+        PLAN_ENUMERATORS.setdefault(name, fn)
+
+
 _register_builtin_estimators()
+_register_builtin_enumerators()

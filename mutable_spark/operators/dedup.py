@@ -48,6 +48,7 @@ import pyspark.sql.functions as F
 
 from mutable_spark.catalog import load_tables
 from mutable_spark.functions import memo_exprs
+from mutable_spark.operators.similarity import _DOT_SCALE, _sql_cos, _sql_dot
 from mutable_spark.registry import query
 
 JACCARD_THRESHOLD = 0.5
@@ -753,7 +754,14 @@ EMBEDDING_COS_THRESHOLD = 0.3
 
 @query(
     "dedup_embedding_cosine",
-    oracle=None,  # assigned below (needs similarity's _sql_cos; avoids a cycle)
+    oracle=f"""
+    SELECT vec_a, vec_b, label, cos FROM (
+        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
+               {_sql_cos('a.embedding', 'b.embedding')} AS cos
+        FROM embeddings a, embeddings b
+        WHERE a.label = b.label AND a.vec_id < b.vec_id
+    ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    """,
 )
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-dup pairs: blocked by coarse-quantizer cell,
@@ -883,24 +891,50 @@ def exact_cosine_pairs(e):
     )
 
 
-def _register_embedding_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["dedup_embedding_cosine"] = f"""
-    SELECT vec_a, vec_b, label, cos FROM (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-               {_sql_cos('a.embedding', 'b.embedding')} AS cos
-        FROM embeddings a, embeddings b
-        WHERE a.label = b.label AND a.vec_id < b.vec_id
-    ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+def _sql_semantic_dedup() -> str:
+    """The oracle recomputes the classes over the PRODUCTION re-trained
+    pair list, so it composes `_sql_retrained_assign` (defined below
+    with the multiprobe tier)."""
+    return f"""
+    WITH RECURSIVE {_sql_retrained_assign("")},
+    cand AS MATERIALIZED (
+        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM assign a JOIN assign b
+          ON a.cell = b.cell AND a.vec_id < b.vec_id
+    ),
+    pairs AS MATERIALIZED (
+        SELECT vec_a, vec_b FROM (
+            SELECT c.vec_a, c.vec_b,
+                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
+            FROM cand c
+            JOIN s ea ON ea.vec_id = c.vec_a
+            JOIN s eb ON eb.vec_id = c.vec_b
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    ),
+    edges AS (
+        SELECT vec_a AS a, vec_b AS b FROM pairs
+        UNION ALL
+        SELECT vec_b AS a, vec_a AS b FROM pairs
+    ),
+    reach(n, m) AS (
+        SELECT DISTINCT a, a FROM edges
+        UNION
+        SELECT e.b, r.m FROM reach r JOIN edges e ON e.a = r.n
+    ),
+    classes AS (SELECT n AS vec_id, MIN(m) AS class_rep FROM reach GROUP BY n),
+    dropped AS (SELECT vec_id FROM classes WHERE vec_id <> class_rep)
+    SELECT e.label, COUNT(*) AS n_vecs,
+           CAST(SUM(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_dropped,
+           CAST(COUNT(*) - SUM(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+               AS BIGINT) AS n_kept,
+           MIN(CASE WHEN d.vec_id IS NULL THEN e.vec_id END) AS min_kept
+    FROM embeddings e LEFT JOIN dropped d ON e.vec_id = d.vec_id
+    GROUP BY e.label
     """
 
 
-_register_embedding_oracle()
-
-
-@query("sim_semantic_dedup", oracle=None)  # assigned below
+@query("sim_semantic_dedup", oracle=_sql_semantic_dedup)
 def sim_semantic_dedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): within each coarse-
@@ -970,52 +1004,6 @@ def sim_semantic_dedup(spark, sf_dir):
         (F.count(F.lit(1)) - F.sum(F.coalesce(F.col("is_dropped"), F.lit(0)))).cast("long").alias("n_kept"),
         F.min(F.when(F.col("is_dropped").isNull(), F.col("vec_id"))).alias("min_kept"),
     )
-
-
-def _register_semantic_dedup_oracle():
-    """Invoked at the BOTTOM of this module: the oracle recomputes the
-    classes over the PRODUCTION re-trained pair list, so it composes
-    `_sql_retrained_assign` (defined below with the multiprobe tier)."""
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["sim_semantic_dedup"] = f"""
-    WITH RECURSIVE {_sql_retrained_assign("")},
-    cand AS MATERIALIZED (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM assign a JOIN assign b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-    ),
-    pairs AS MATERIALIZED (
-        SELECT vec_a, vec_b FROM (
-            SELECT c.vec_a, c.vec_b,
-                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
-            FROM cand c
-            JOIN s ea ON ea.vec_id = c.vec_a
-            JOIN s eb ON eb.vec_id = c.vec_b
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    ),
-    edges AS (
-        SELECT vec_a AS a, vec_b AS b FROM pairs
-        UNION ALL
-        SELECT vec_b AS a, vec_a AS b FROM pairs
-    ),
-    reach(n, m) AS (
-        SELECT DISTINCT a, a FROM edges
-        UNION
-        SELECT e.b, r.m FROM reach r JOIN edges e ON e.a = r.n
-    ),
-    classes AS (SELECT n AS vec_id, MIN(m) AS class_rep FROM reach GROUP BY n),
-    dropped AS (SELECT vec_id FROM classes WHERE vec_id <> class_rep)
-    SELECT e.label, COUNT(*) AS n_vecs,
-           CAST(SUM(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dropped,
-           CAST(COUNT(*) - SUM(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_kept,
-           MIN(CASE WHEN d.vec_id IS NULL THEN e.vec_id END) AS min_kept
-    FROM embeddings e LEFT JOIN dropped d ON e.vec_id = d.vec_id
-    GROUP BY e.label
-    """
 
 
 # --------------------------------------------------------------------------
@@ -2188,7 +2176,42 @@ def dedup_containment_certification(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-@query("dedup_blocking_certification", oracle=None)  # assigned below
+@query(
+    "dedup_blocking_certification",
+    oracle=f"""
+    WITH s AS (SELECT vec_id, label, embedding FROM embeddings
+               WHERE vec_id % {_CERT_MOD} = 0),
+    tier AS (
+        SELECT vec_a, vec_b FROM (
+            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+                   {_sql_cos('a.embedding', 'b.embedding')} AS cos
+            FROM s a, s b
+            WHERE a.label = b.label AND a.vec_id < b.vec_id
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    ),
+    ex AS (
+        SELECT vec_a, vec_b FROM (
+            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+                   {_sql_cos('a.embedding', 'b.embedding')} AS cos
+            FROM s a, s b
+            WHERE a.vec_id < b.vec_id
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    ),
+    c AS (SELECT
+        (SELECT COUNT(*) FROM ex) AS n_exact,
+        (SELECT COUNT(*) FROM tier) AS n_tier,
+        (SELECT COUNT(*) FROM tier t JOIN ex e
+           ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b) AS n_both)
+    SELECT CAST(n_exact AS BIGINT) AS n_exact,
+           CAST(n_tier AS BIGINT) AS n_tier,
+           CAST(n_both AS BIGINT) AS n_both,
+           CAST(CASE WHEN n_tier = 0 THEN 10000
+                     ELSE n_both * 10000 // n_tier END AS BIGINT) AS precision_bp,
+           CAST(CASE WHEN n_exact = 0 THEN 10000
+                     ELSE n_both * 10000 // n_exact END AS BIGINT) AS recall_bp
+    FROM c
+    """,
+)
 def dedup_blocking_certification(spark, sf_dir):
     """Blocking-recall certification for the embedding near-dup tier —
     the FOURTH tier-vs-baseline twin, completing the set (Jaccard-LSH,
@@ -2237,48 +2260,6 @@ def dedup_blocking_certification(spark, sf_dir):
         F.lit(1).alias("in_exact"),
     )
     return _certify(exact, tier, "n_tier")
-
-
-def _register_blocking_certification_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["dedup_blocking_certification"] = f"""
-    WITH s AS (SELECT vec_id, label, embedding FROM embeddings
-               WHERE vec_id % {_CERT_MOD} = 0),
-    tier AS (
-        SELECT vec_a, vec_b FROM (
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   {_sql_cos('a.embedding', 'b.embedding')} AS cos
-            FROM s a, s b
-            WHERE a.label = b.label AND a.vec_id < b.vec_id
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    ),
-    ex AS (
-        SELECT vec_a, vec_b FROM (
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   {_sql_cos('a.embedding', 'b.embedding')} AS cos
-            FROM s a, s b
-            WHERE a.vec_id < b.vec_id
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    ),
-    c AS (SELECT
-        (SELECT COUNT(*) FROM ex) AS n_exact,
-        (SELECT COUNT(*) FROM tier) AS n_tier,
-        (SELECT COUNT(*) FROM tier t JOIN ex e
-           ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b) AS n_both)
-    SELECT CAST(n_exact AS BIGINT) AS n_exact,
-           CAST(n_tier AS BIGINT) AS n_tier,
-           CAST(n_both AS BIGINT) AS n_both,
-           CAST(CASE WHEN n_tier = 0 THEN 10000
-                     ELSE n_both * 10000 // n_tier END AS BIGINT) AS precision_bp,
-           CAST(CASE WHEN n_exact = 0 THEN 10000
-                     ELSE n_both * 10000 // n_exact END AS BIGINT) AS recall_bp
-    FROM c
-    """
-
-
-_register_blocking_certification_oracle()
 
 
 #: cells per vector in the multiprobe blocking tier (FAISS multiprobe /
@@ -2364,7 +2345,52 @@ def _probe_depth(k: int) -> int:
     return min(k, max(1, int(math.ceil(math.sqrt(2 * k)))))
 
 
-@query("dedup_multiprobe_certification", oracle=None)  # assigned below
+def _sql_multiprobe_certification() -> str:
+    """Composes `_sql_retrained_assign`, defined below with the tier."""
+    return f"""
+    WITH {_sql_retrained_assign(f"WHERE vec_id % {_CERT_MOD} = 0")},
+    cand AS MATERIALIZED (
+        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM assign a JOIN assign b
+          ON a.cell = b.cell AND a.vec_id < b.vec_id
+    ),
+    tier AS (
+        SELECT vec_a, vec_b FROM (
+            SELECT c.vec_a, c.vec_b,
+                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
+            FROM cand c
+            JOIN s ea ON ea.vec_id = c.vec_a
+            JOIN s eb ON eb.vec_id = c.vec_b
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    ),
+    ex AS (
+        SELECT vec_a, vec_b FROM (
+            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+                   {_sql_cos('a.embedding', 'b.embedding')} AS cos
+            FROM s a, s b
+            WHERE a.vec_id < b.vec_id
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    ),
+    c AS (SELECT
+        (SELECT COUNT(*) FROM ex) AS n_exact,
+        (SELECT COUNT(*) FROM tier) AS n_tier,
+        (SELECT COUNT(*) FROM tier t JOIN ex e
+           ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b) AS n_both)
+    SELECT CAST(n_exact AS BIGINT) AS n_exact,
+           CAST(n_tier AS BIGINT) AS n_tier,
+           CAST(n_both AS BIGINT) AS n_both,
+           CAST(CASE WHEN n_tier = 0 THEN 10000
+                     ELSE n_both * 10000 // n_tier END AS BIGINT) AS precision_bp,
+           CAST(CASE WHEN n_exact = 0 THEN 10000
+                     ELSE n_both * 10000 // n_exact END AS BIGINT) AS recall_bp
+    FROM c
+    """
+
+
+@query(
+    "dedup_multiprobe_certification",
+    oracle=_sql_multiprobe_certification,
+)
 def dedup_multiprobe_certification(spark, sf_dir):
     """The PRODUCTION multiprobe tier, certified — re-pointed (r14) at
     the re-trained √N path the production consumers now block on:
@@ -2427,7 +2453,6 @@ def _multiprobe_assign(e, max_rk: int):
     from pyspark.sql import Window
 
     from mutable_spark.functions import vec_norm
-    from mutable_spark.operators.similarity import _DOT_SCALE
 
     scaled = F.floor(F.col("x").cast("double") * F.lit(_DOT_SCALE)).cast("long")
     csum = (
@@ -2505,8 +2530,6 @@ def _sql_assign_round(src: str, lab: str, sfx: str, max_rk) -> str:
     never reaches the Spark rank window and gets NO assignment; the
     `len(se.embedding) > 0` guard drops the same vectors from the dots
     cross-join here (which would otherwise emit NULL-score rk rows)."""
-    from mutable_spark.operators.similarity import _DOT_SCALE, _sql_dot
-
     return f"""csum{sfx} AS (
         SELECT l.cell AS cell, d,
                SUM(CAST(floor(CAST(t.embedding[d] AS DOUBLE) * {_DOT_SCALE!r})
@@ -2760,54 +2783,24 @@ def multiprobe_cosine_pairs(
     )
 
 
-def _register_multiprobe_certification_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["dedup_multiprobe_certification"] = f"""
-    WITH {_sql_retrained_assign(f"WHERE vec_id % {_CERT_MOD} = 0")},
+@query(
+    "dedup_embedding_multiprobe",
+    oracle=f"""
+    WITH {_sql_retrained_assign("")},
     cand AS MATERIALIZED (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM assign a JOIN assign b
           ON a.cell = b.cell AND a.vec_id < b.vec_id
-    ),
-    tier AS (
-        SELECT vec_a, vec_b FROM (
-            SELECT c.vec_a, c.vec_b,
-                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
-            FROM cand c
-            JOIN s ea ON ea.vec_id = c.vec_a
-            JOIN s eb ON eb.vec_id = c.vec_b
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    ),
-    ex AS (
-        SELECT vec_a, vec_b FROM (
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   {_sql_cos('a.embedding', 'b.embedding')} AS cos
-            FROM s a, s b
-            WHERE a.vec_id < b.vec_id
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    ),
-    c AS (SELECT
-        (SELECT COUNT(*) FROM ex) AS n_exact,
-        (SELECT COUNT(*) FROM tier) AS n_tier,
-        (SELECT COUNT(*) FROM tier t JOIN ex e
-           ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b) AS n_both)
-    SELECT CAST(n_exact AS BIGINT) AS n_exact,
-           CAST(n_tier AS BIGINT) AS n_tier,
-           CAST(n_both AS BIGINT) AS n_both,
-           CAST(CASE WHEN n_tier = 0 THEN 10000
-                     ELSE n_both * 10000 // n_tier END AS BIGINT) AS precision_bp,
-           CAST(CASE WHEN n_exact = 0 THEN 10000
-                     ELSE n_both * 10000 // n_exact END AS BIGINT) AS recall_bp
-    FROM c
-    """
-
-
-_register_multiprobe_certification_oracle()
-
-
-@query("dedup_embedding_multiprobe", oracle=None)  # assigned below
+    )
+    SELECT vec_a, vec_b, cos FROM (
+        SELECT c.vec_a, c.vec_b,
+               {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
+        FROM cand c
+        JOIN s ea ON ea.vec_id = c.vec_a
+        JOIN s eb ON eb.vec_id = c.vec_b
+    ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    """,
+)
 def dedup_embedding_multiprobe(spark, sf_dir):
     """Embedding near-dup pairs under the PRODUCTION re-trained √N
     multiprobe tier (r14 — `retrained_multiprobe_pairs`): same output
@@ -2836,31 +2829,48 @@ def dedup_embedding_multiprobe(spark, sf_dir):
     return retrained_multiprobe_pairs(e, labels=lab, k=k, n_rows=n)
 
 
-def _register_embedding_multiprobe_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["dedup_embedding_multiprobe"] = f"""
-    WITH {_sql_retrained_assign("")},
-    cand AS MATERIALIZED (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+@query(
+    "dedup_multiprobe_sweep",
+    oracle=f"""
+    WITH {_sql_retrained_assign(f"WHERE vec_id % {_CERT_MOD} = 0")},
+    thr AS (
+        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+               MIN(GREATEST(a.rk, b.rk)) AS p_thr
         FROM assign a JOIN assign b
           ON a.cell = b.cell AND a.vec_id < b.vec_id
+        GROUP BY a.vec_id, b.vec_id
+    ),
+    tt AS (
+        SELECT p_thr, COUNT(*) AS c FROM (
+            SELECT t.p_thr,
+                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
+            FROM thr t
+            JOIN s ea ON ea.vec_id = t.vec_a
+            JOIN s eb ON eb.vec_id = t.vec_b
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+        GROUP BY p_thr
+    ),
+    nx AS (
+        SELECT COUNT(*) AS n_exact FROM (
+            SELECT {_sql_cos('a.embedding', 'b.embedding')} AS cos
+            FROM s a, s b WHERE a.vec_id < b.vec_id
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
     )
-    SELECT vec_a, vec_b, cos FROM (
-        SELECT c.vec_a, c.vec_b,
-               {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
-        FROM cand c
-        JOIN s ea ON ea.vec_id = c.vec_a
-        JOIN s eb ON eb.vec_id = c.vec_b
-    ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    """
-
-
-_register_embedding_multiprobe_oracle()
-
-
-@query("dedup_multiprobe_sweep", oracle=None)  # assigned below
+    SELECT p, n_hits, n_exact, CAST(CASE WHEN n_exact = 0 THEN 10000
+               ELSE n_hits * 10000 // n_exact END AS BIGINT) AS recall_bp
+    FROM (
+        SELECT ps.p AS p,
+               CAST(COALESCE(SUM(tt.c), 0) AS BIGINT) AS n_hits,
+               CAST(MIN(nx.n_exact) AS BIGINT) AS n_exact
+        FROM (SELECT CAST(unnest(generate_series(1, (SELECT p FROM pp)))
+                     AS INT) AS p) ps
+        LEFT JOIN tt ON tt.p_thr <= ps.p
+        CROSS JOIN nx
+        GROUP BY ps.p
+    )
+    ORDER BY p
+    """,
+)
 def dedup_multiprobe_sweep(spark, sf_dir):
     """Multiprobe blocking recall CURVE at the PRODUCTION quantizer —
     recall@P for P ∈ 1..p(k) over the RE-TRAINED √N cells in ONE query,
@@ -2964,54 +2974,6 @@ def dedup_multiprobe_sweep(spark, sf_dir):
     )
 
 
-def _register_multiprobe_sweep_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["dedup_multiprobe_sweep"] = f"""
-    WITH {_sql_retrained_assign(f"WHERE vec_id % {_CERT_MOD} = 0")},
-    thr AS (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               MIN(GREATEST(a.rk, b.rk)) AS p_thr
-        FROM assign a JOIN assign b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        GROUP BY a.vec_id, b.vec_id
-    ),
-    tt AS (
-        SELECT p_thr, COUNT(*) AS c FROM (
-            SELECT t.p_thr,
-                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
-            FROM thr t
-            JOIN s ea ON ea.vec_id = t.vec_a
-            JOIN s eb ON eb.vec_id = t.vec_b
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-        GROUP BY p_thr
-    ),
-    nx AS (
-        SELECT COUNT(*) AS n_exact FROM (
-            SELECT {_sql_cos('a.embedding', 'b.embedding')} AS cos
-            FROM s a, s b WHERE a.vec_id < b.vec_id
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    )
-    SELECT p, n_hits, n_exact, CAST(CASE WHEN n_exact = 0 THEN 10000
-               ELSE n_hits * 10000 // n_exact END AS BIGINT) AS recall_bp
-    FROM (
-        SELECT ps.p AS p,
-               CAST(COALESCE(SUM(tt.c), 0) AS BIGINT) AS n_hits,
-               CAST(MIN(nx.n_exact) AS BIGINT) AS n_exact
-        FROM (SELECT CAST(unnest(generate_series(1, (SELECT p FROM pp)))
-                     AS INT) AS p) ps
-        LEFT JOIN tt ON tt.p_thr <= ps.p
-        CROSS JOIN nx
-        GROUP BY ps.p
-    )
-    ORDER BY p
-    """
-
-
-_register_multiprobe_sweep_oracle()
-
-
 # --- growing-cluster constant-P experiment (r15) ----------------------------
 #: three corpus sizes (16× span), each with c = ⌊√n⌋ + 3 synthetic
 #: clusters — cluster count GROWS with N, the geometry SCALE.md's
@@ -3056,7 +3018,99 @@ def _growing_cluster_corpus(spark, n: int, c: int):
     return ids.select("vec_id", emb.alias("embedding"))
 
 
-@query("sim_growing_cluster_sweep", oracle=None)  # assigned below
+def _sql_growing_cluster_sweep() -> str:
+    dim = _GC_DIM
+    parts = []
+    selects = []
+    for n in _GC_SIZES:
+        k = _sqrt_cells(n)
+        c = k + 3
+        h = f"((i % {c}) * {dim} + d)"
+        cenx = f"(({h} * {h} * 7919 + {h} * 131) % {_GC_MOD} - {_GC_MOD // 2})"
+        noise = f"((i * 1009 + d * 383) % {_GC_NOISE} - {_GC_NOISE // 2})"
+        hg = f"(g * {dim} + d)"
+        cengr = (
+            f"(({hg} * {hg} * 7919 + {hg} * 131) % {_GC_MOD}"
+            f" - {_GC_MOD // 2})"
+        )
+        parts.append(f"""gen{n} AS MATERIALIZED (
+        SELECT i AS vec_id,
+               list_transform(range(0, {dim}),
+                   d -> CAST({cenx} * 10 + {noise} AS DOUBLE) / {_GC_SCALE})
+                   AS embedding
+        FROM range({n}) t(i))""")
+        parts.append(
+            f"lab0g{n} AS (SELECT vec_id,"
+            f" CAST(vec_id % {k} AS INT) AS cell FROM gen{n})"
+        )
+        parts.append(_sql_assign_round(f"gen{n}", f"lab0g{n}", f"_g{n}r1", 1))
+        parts.append(
+            _sql_assign_round(f"gen{n}", f"assign_g{n}r1", f"_g{n}r2", 1)
+        )
+        parts.append(
+            _sql_assign_round(
+                f"gen{n}", f"assign_g{n}r2", f"_g{n}", _GC_P_MAX
+            )
+        )
+        parts.append(f"""thr{n} AS (
+        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+               MIN(GREATEST(a.rk, b.rk)) AS p_thr
+        FROM assign_g{n} a JOIN assign_g{n} b
+          ON a.cell = b.cell AND a.vec_id < b.vec_id
+        GROUP BY a.vec_id, b.vec_id)""")
+        parts.append(f"""exact{n} AS MATERIALIZED (
+        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM gen{n} a JOIN gen{n} b
+          ON a.vec_id % {c} = b.vec_id % {c} AND a.vec_id < b.vec_id
+        WHERE {_sql_cos('a.embedding', 'b.embedding')} >= {_GC_COS})""")
+        parts.append(f"""nx{n} AS (SELECT COUNT(*) AS n_exact FROM exact{n})""")
+        parts.append(f"""tt{n} AS (
+        SELECT t.p_thr, COUNT(*) AS c
+        FROM exact{n} e LEFT JOIN thr{n} t
+          ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b
+        GROUP BY t.p_thr)""")
+        parts.append(f"""cen{n} AS MATERIALIZED (
+        SELECT g, list_transform(range(0, {dim}),
+                   d -> CAST({cengr} * 10 AS DOUBLE) / {_GC_SCALE}) AS cen
+        FROM range({c}) t(g))""")
+        parts.append(f"""vmin{n} AS (
+        SELECT MIN({_sql_cos('x.embedding', 'cf.cen')}) AS v
+        FROM gen{n} x JOIN cen{n} cf ON cf.g = x.vec_id % {c})""")
+        parts.append(f"""tmax{n} AS (
+        SELECT MAX({_sql_cos('x.cen', 'y.cen')}) AS t
+        FROM cen{n} x JOIN cen{n} y ON x.g < y.g)""")
+        parts.append(f"""sep{n} AS (
+        SELECT CAST(floor(bound * 10000) AS BIGINT) AS sep_bound_bp,
+               CAST(bound < {_GC_COS} AS BIGINT) AS sep_ok
+        FROM (SELECT t * (2 * v * v - 1)
+                     + sqrt(1 - t * t) * (2 * v) * sqrt(1 - v * v)
+                     AS bound
+              FROM vmin{n}, tmax{n}))""")
+        selects.append(f"""
+        SELECT CAST({n} AS BIGINT) AS n, CAST({k} AS BIGINT) AS k,
+               CAST({c} AS BIGINT) AS c, CAST(ps.p AS BIGINT) AS p,
+               CAST(COALESCE(SUM(tt{n}.c), 0) AS BIGINT) AS n_hits,
+               CAST(MIN(nx{n}.n_exact) AS BIGINT) AS n_exact,
+               CAST(CASE WHEN MIN(nx{n}.n_exact) = 0 THEN 10000
+                    ELSE COALESCE(SUM(tt{n}.c), 0) * 10000
+                         // MIN(nx{n}.n_exact) END AS BIGINT) AS recall_bp,
+               MIN(sep{n}.sep_bound_bp) AS sep_bound_bp,
+               MIN(sep{n}.sep_ok) AS sep_ok
+        FROM (SELECT CAST(unnest(generate_series(1, {_GC_P_MAX}))
+                     AS INT) AS p) ps
+        LEFT JOIN tt{n} ON tt{n}.p_thr <= ps.p
+        CROSS JOIN nx{n}
+        CROSS JOIN sep{n}
+        GROUP BY ps.p""")
+    joined = ",\n    ".join(parts)
+    unions = " UNION ALL ".join(selects)
+    return f"""
+    WITH {joined}
+    SELECT * FROM ({unions}) ORDER BY n, p
+    """
+
+
+@query("sim_growing_cluster_sweep", oracle=_sql_growing_cluster_sweep())
 def sim_growing_cluster_sweep(spark, sf_dir):
     """MEASURE the constant-P claim (r15 — VERDICT r14 item #2):
     SCALE.md attributes the derived probe depth's growth (total
@@ -3256,104 +3310,6 @@ def _growing_cluster_centers(spark, c: int):
     )
 
 
-def _register_growing_cluster_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    dim = _GC_DIM
-    parts = []
-    selects = []
-    for n in _GC_SIZES:
-        k = _sqrt_cells(n)
-        c = k + 3
-        h = f"((i % {c}) * {dim} + d)"
-        cenx = f"(({h} * {h} * 7919 + {h} * 131) % {_GC_MOD} - {_GC_MOD // 2})"
-        noise = f"((i * 1009 + d * 383) % {_GC_NOISE} - {_GC_NOISE // 2})"
-        hg = f"(g * {dim} + d)"
-        cengr = (
-            f"(({hg} * {hg} * 7919 + {hg} * 131) % {_GC_MOD}"
-            f" - {_GC_MOD // 2})"
-        )
-        parts.append(f"""gen{n} AS MATERIALIZED (
-        SELECT i AS vec_id,
-               list_transform(range(0, {dim}),
-                   d -> CAST({cenx} * 10 + {noise} AS DOUBLE) / {_GC_SCALE})
-                   AS embedding
-        FROM range({n}) t(i))""")
-        parts.append(
-            f"lab0g{n} AS (SELECT vec_id,"
-            f" CAST(vec_id % {k} AS INT) AS cell FROM gen{n})"
-        )
-        parts.append(_sql_assign_round(f"gen{n}", f"lab0g{n}", f"_g{n}r1", 1))
-        parts.append(
-            _sql_assign_round(f"gen{n}", f"assign_g{n}r1", f"_g{n}r2", 1)
-        )
-        parts.append(
-            _sql_assign_round(
-                f"gen{n}", f"assign_g{n}r2", f"_g{n}", _GC_P_MAX
-            )
-        )
-        parts.append(f"""thr{n} AS (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               MIN(GREATEST(a.rk, b.rk)) AS p_thr
-        FROM assign_g{n} a JOIN assign_g{n} b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        GROUP BY a.vec_id, b.vec_id)""")
-        parts.append(f"""exact{n} AS MATERIALIZED (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM gen{n} a JOIN gen{n} b
-          ON a.vec_id % {c} = b.vec_id % {c} AND a.vec_id < b.vec_id
-        WHERE {_sql_cos('a.embedding', 'b.embedding')} >= {_GC_COS})""")
-        parts.append(f"""nx{n} AS (SELECT COUNT(*) AS n_exact FROM exact{n})""")
-        parts.append(f"""tt{n} AS (
-        SELECT t.p_thr, COUNT(*) AS c
-        FROM exact{n} e LEFT JOIN thr{n} t
-          ON t.vec_a = e.vec_a AND t.vec_b = e.vec_b
-        GROUP BY t.p_thr)""")
-        parts.append(f"""cen{n} AS MATERIALIZED (
-        SELECT g, list_transform(range(0, {dim}),
-                   d -> CAST({cengr} * 10 AS DOUBLE) / {_GC_SCALE}) AS cen
-        FROM range({c}) t(g))""")
-        parts.append(f"""vmin{n} AS (
-        SELECT MIN({_sql_cos('x.embedding', 'cf.cen')}) AS v
-        FROM gen{n} x JOIN cen{n} cf ON cf.g = x.vec_id % {c})""")
-        parts.append(f"""tmax{n} AS (
-        SELECT MAX({_sql_cos('x.cen', 'y.cen')}) AS t
-        FROM cen{n} x JOIN cen{n} y ON x.g < y.g)""")
-        parts.append(f"""sep{n} AS (
-        SELECT CAST(floor(bound * 10000) AS BIGINT) AS sep_bound_bp,
-               CAST(bound < {_GC_COS} AS BIGINT) AS sep_ok
-        FROM (SELECT t * (2 * v * v - 1)
-                     + sqrt(1 - t * t) * (2 * v) * sqrt(1 - v * v)
-                     AS bound
-              FROM vmin{n}, tmax{n}))""")
-        selects.append(f"""
-        SELECT CAST({n} AS BIGINT) AS n, CAST({k} AS BIGINT) AS k,
-               CAST({c} AS BIGINT) AS c, CAST(ps.p AS BIGINT) AS p,
-               CAST(COALESCE(SUM(tt{n}.c), 0) AS BIGINT) AS n_hits,
-               CAST(MIN(nx{n}.n_exact) AS BIGINT) AS n_exact,
-               CAST(CASE WHEN MIN(nx{n}.n_exact) = 0 THEN 10000
-                    ELSE COALESCE(SUM(tt{n}.c), 0) * 10000
-                         // MIN(nx{n}.n_exact) END AS BIGINT) AS recall_bp,
-               MIN(sep{n}.sep_bound_bp) AS sep_bound_bp,
-               MIN(sep{n}.sep_ok) AS sep_ok
-        FROM (SELECT CAST(unnest(generate_series(1, {_GC_P_MAX}))
-                     AS INT) AS p) ps
-        LEFT JOIN tt{n} ON tt{n}.p_thr <= ps.p
-        CROSS JOIN nx{n}
-        CROSS JOIN sep{n}
-        GROUP BY ps.p""")
-    joined = ",\n    ".join(parts)
-    unions = " UNION ALL ".join(selects)
-    ORACLES["sim_growing_cluster_sweep"] = f"""
-    WITH {joined}
-    SELECT * FROM ({unions}) ORDER BY n, p
-    """
-
-
-_register_growing_cluster_oracle()
-
-
 def refreshed_cells(e):
     """(vec_id, cell) — each vector's NEAREST derived-centroid cell, the
     rk=1 slice of the multiprobe assignment: the refreshed coarse
@@ -3525,7 +3481,15 @@ def _staged_with_labels(e, labels):
     )
 
 
-@query("sim_retrained_cells", oracle=None)  # assigned below
+#: the re-trained labeling, as `sim_retrained_cells` computes it and as
+#: `sim_label_store_roundtrip` reads it back from the label store
+_SQL_RETRAINED_CELLS = f"""
+    WITH {_sql_retrained_assign("", probe=False)}
+    SELECT vec_id, cell FROM cells
+    """
+
+
+@query("sim_retrained_cells", oracle=_SQL_RETRAINED_CELLS)
 def sim_retrained_cells(spark, sf_dir):
     """The re-trained √N coarse assignment as a registered, driver-
     checkable artifact — (vec_id, cell) after `_RETRAIN_ROUNDS` Lloyd
@@ -3548,19 +3512,7 @@ def sim_retrained_cells(spark, sf_dir):
     return retrained_cells(e, _sqrt_cells(n))
 
 
-def _register_retrained_cells_oracle():
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["sim_retrained_cells"] = f"""
-    WITH {_sql_retrained_assign("", probe=False)}
-    SELECT vec_id, cell FROM cells
-    """
-
-
-_register_retrained_cells_oracle()
-
-
-@query("sim_label_store_roundtrip", oracle=None)  # assigned below
+@query("sim_label_store_roundtrip", oracle=_SQL_RETRAINED_CELLS)
 def sim_label_store_roundtrip(spark, sf_dir):
     """The trained-label write-back store, driver-checked end to end
     (r15 — the r14 verdict's top item): train k = ⌊√N⌋ cells once,
@@ -3583,22 +3535,34 @@ def sim_label_store_roundtrip(spark, sf_dir):
     return lab.select("vec_id", "cell")
 
 
-def _register_label_store_roundtrip_oracle():
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["sim_label_store_roundtrip"] = ORACLES["sim_retrained_cells"]
-
-
-_register_label_store_roundtrip_oracle()
-
-
 #: rounds the convergence audit chains (production + one look-ahead —
 #: the extra round prices exactly what _RETRAIN_ROUNDS=2 leaves on the
 #: table)
 _CONVERGENCE_ROUNDS = 3
 
 
-@query("sim_retrain_convergence", oracle=None)  # assigned below
+def _sql_retrain_convergence() -> str:
+    labs = ["lab0"] + [f"assign_r{r}" for r in range(1, _CONVERGENCE_ROUNDS + 1)]
+    rows = ",\n    ".join(
+        f"""row_{r} AS (
+        SELECT CAST({r} AS BIGINT) AS round,
+               CAST(COUNT(*) AS BIGINT) AS n_assigned,
+               CAST(SUM(CASE WHEN c.cell <> p.cell THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_moved
+        FROM {labs[r]} c JOIN {labs[r - 1]} p ON c.vec_id = p.vec_id)"""
+        for r in range(1, _CONVERGENCE_ROUNDS + 1)
+    )
+    unions = " UNION ALL ".join(
+        f"SELECT * FROM row_{r}" for r in range(1, _CONVERGENCE_ROUNDS + 1)
+    )
+    return f"""
+    WITH {_sql_retrained_assign("", rounds=_CONVERGENCE_ROUNDS, probe=False)},
+    {rows}
+    SELECT * FROM ({unions}) ORDER BY round
+    """
+
+
+@query("sim_retrain_convergence", oracle=_sql_retrain_convergence())
 def sim_retrain_convergence(spark, sf_dir):
     """Lloyd convergence audit for the production re-train (r14): one
     row per round r = 1..`_CONVERGENCE_ROUNDS` with the number of
@@ -3661,32 +3625,6 @@ def sim_retrain_convergence(spark, sf_dir):
     return rows.orderBy("round")
 
 
-def _register_retrain_convergence_oracle():
-    from mutable_spark.registry import ORACLES
-
-    labs = ["lab0"] + [f"assign_r{r}" for r in range(1, _CONVERGENCE_ROUNDS + 1)]
-    rows = ",\n    ".join(
-        f"""row_{r} AS (
-        SELECT CAST({r} AS BIGINT) AS round,
-               CAST(COUNT(*) AS BIGINT) AS n_assigned,
-               CAST(SUM(CASE WHEN c.cell <> p.cell THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_moved
-        FROM {labs[r]} c JOIN {labs[r - 1]} p ON c.vec_id = p.vec_id)"""
-        for r in range(1, _CONVERGENCE_ROUNDS + 1)
-    )
-    unions = " UNION ALL ".join(
-        f"SELECT * FROM row_{r}" for r in range(1, _CONVERGENCE_ROUNDS + 1)
-    )
-    ORACLES["sim_retrain_convergence"] = f"""
-    WITH {_sql_retrained_assign("", rounds=_CONVERGENCE_ROUNDS, probe=False)},
-    {rows}
-    SELECT * FROM ({unions}) ORDER BY round
-    """
-
-
-_register_retrain_convergence_oracle()
-
-
 #: eval-set proxy for the semantic decontamination screen — the SAME
 #: systematic rule as `pipeline._EVAL_MOD` (applied to vec_id here);
 #: kept as a local constant because pipeline.py imports this module at
@@ -3695,7 +3633,34 @@ _register_retrain_convergence_oracle()
 _SEM_EVAL_MOD = 25
 
 
-@query("pipeline_decontaminate_semantic", oracle=None)  # assigned below
+@query(
+    "pipeline_decontaminate_semantic",
+    oracle=f"""
+    WITH {_sql_retrained_assign("")},
+    ev AS (SELECT vec_id, cell FROM assign
+           WHERE vec_id % {_SEM_EVAL_MOD} = 0),
+    tr AS (SELECT vec_id, cell FROM assign
+           WHERE vec_id % {_SEM_EVAL_MOD} <> 0),
+    cand AS (
+        SELECT DISTINCT t.vec_id AS vec_a, v.vec_id AS vec_b
+        FROM tr t JOIN ev v ON t.cell = v.cell
+    ),
+    cont AS (
+        SELECT DISTINCT vec_a AS vec_id FROM (
+            SELECT c.vec_a,
+                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
+            FROM cand c
+            JOIN s ea ON ea.vec_id = c.vec_a
+            JOIN s eb ON eb.vec_id = c.vec_b
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    )
+    SELECT e.label, CAST(COUNT(*) AS BIGINT) AS n_kept,
+           MIN(e.vec_id) AS min_id
+    FROM embeddings e LEFT JOIN cont c ON c.vec_id = e.vec_id
+    WHERE e.vec_id % {_SEM_EVAL_MOD} <> 0 AND c.vec_id IS NULL
+    GROUP BY e.label
+    """,
+)
 def pipeline_decontaminate_semantic(spark, sf_dir):
     """SEMANTIC benchmark decontamination (r14) — the embedding-tier
     counterpart of `pipeline_decontaminate_fuzzy`: drop every training
@@ -3784,41 +3749,16 @@ def pipeline_decontaminate_semantic(spark, sf_dir):
     )
 
 
-def _register_decontaminate_semantic_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["pipeline_decontaminate_semantic"] = f"""
-    WITH {_sql_retrained_assign("")},
-    ev AS (SELECT vec_id, cell FROM assign
-           WHERE vec_id % {_SEM_EVAL_MOD} = 0),
-    tr AS (SELECT vec_id, cell FROM assign
-           WHERE vec_id % {_SEM_EVAL_MOD} <> 0),
-    cand AS (
-        SELECT DISTINCT t.vec_id AS vec_a, v.vec_id AS vec_b
-        FROM tr t JOIN ev v ON t.cell = v.cell
-    ),
-    cont AS (
-        SELECT DISTINCT vec_a AS vec_id FROM (
-            SELECT c.vec_a,
-                   {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
-            FROM cand c
-            JOIN s ea ON ea.vec_id = c.vec_a
-            JOIN s eb ON eb.vec_id = c.vec_b
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    )
-    SELECT e.label, CAST(COUNT(*) AS BIGINT) AS n_kept,
-           MIN(e.vec_id) AS min_id
-    FROM embeddings e LEFT JOIN cont c ON c.vec_id = e.vec_id
-    WHERE e.vec_id % {_SEM_EVAL_MOD} <> 0 AND c.vec_id IS NULL
-    GROUP BY e.label
-    """
-
-
-_register_decontaminate_semantic_oracle()
-
-
-@query("sim_cell_reassign", oracle=None)  # assigned below
+@query(
+    "sim_cell_reassign",
+    oracle=f"""
+    WITH {_sql_multiprobe_assign("", 1)}
+    SELECT s.label AS old_cell, a.cell AS new_cell,
+           CAST(COUNT(*) AS BIGINT) AS n_vecs, MIN(s.vec_id) AS min_vec
+    FROM s JOIN assign a ON a.vec_id = s.vec_id
+    GROUP BY s.label, a.cell
+    """,
+)
 def sim_cell_reassign(spark, sf_dir):
     """Coarse-quantizer cell RE-ASSIGNMENT — the op that closes the
     drift `dedup_multiprobe_sweep` exposed: single-cell blocking over
@@ -3852,22 +3792,47 @@ def sim_cell_reassign(spark, sf_dir):
     )
 
 
-def _register_cell_reassign_oracle():
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["sim_cell_reassign"] = f"""
-    WITH {_sql_multiprobe_assign("", 1)}
-    SELECT s.label AS old_cell, a.cell AS new_cell,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs, MIN(s.vec_id) AS min_vec
-    FROM s JOIN assign a ON a.vec_id = s.vec_id
-    GROUP BY s.label, a.cell
-    """
-
-
-_register_cell_reassign_oracle()
-
-
-@query("dedup_reassign_certification", oracle=None)  # assigned below
+@query(
+    "dedup_reassign_certification",
+    oracle=f"""
+    WITH {_sql_multiprobe_assign(f"WHERE vec_id % {_CERT_MOD} = 0", 1)},
+    refr AS (
+        SELECT COUNT(*) AS n_refreshed FROM (
+            SELECT {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
+            FROM (
+                SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+                FROM assign a JOIN assign b
+                  ON a.cell = b.cell AND a.vec_id < b.vec_id
+            ) c
+            JOIN s ea ON ea.vec_id = c.vec_a
+            JOIN s eb ON eb.vec_id = c.vec_b
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    ),
+    stor AS (
+        SELECT COUNT(*) AS n_stored FROM (
+            SELECT {_sql_cos('a.embedding', 'b.embedding')} AS cos
+            FROM s a, s b
+            WHERE a.label = b.label AND a.vec_id < b.vec_id
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    ),
+    ex AS (
+        SELECT COUNT(*) AS n_exact FROM (
+            SELECT {_sql_cos('a.embedding', 'b.embedding')} AS cos
+            FROM s a, s b WHERE a.vec_id < b.vec_id
+        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
+    )
+    SELECT CAST(n_exact AS BIGINT) AS n_exact,
+           CAST(n_stored AS BIGINT) AS n_stored,
+           CAST(n_refreshed AS BIGINT) AS n_refreshed,
+           CAST(CASE WHEN n_exact = 0 THEN 10000
+                     ELSE n_stored * 10000 // n_exact END AS BIGINT)
+               AS recall_stored_bp,
+           CAST(CASE WHEN n_exact = 0 THEN 10000
+                     ELSE n_refreshed * 10000 // n_exact END AS BIGINT)
+               AS recall_refreshed_bp
+    FROM ex, stor, refr
+    """,
+)
 def dedup_reassign_certification(spark, sf_dir):
     """Certification for `sim_cell_reassign`: single-cell blocking
     recall under the STORED labels vs under the REFRESHED (nearest
@@ -3910,54 +3875,3 @@ def dedup_reassign_certification(spark, sf_dir):
             F.expr(bp.format(n="n_refreshed")).alias("recall_refreshed_bp"),
         )
     )
-
-
-def _register_reassign_certification_oracle():
-    from mutable_spark.operators.similarity import _sql_cos
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["dedup_reassign_certification"] = f"""
-    WITH {_sql_multiprobe_assign(f"WHERE vec_id % {_CERT_MOD} = 0", 1)},
-    refr AS (
-        SELECT COUNT(*) AS n_refreshed FROM (
-            SELECT {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
-            FROM (
-                SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-                FROM assign a JOIN assign b
-                  ON a.cell = b.cell AND a.vec_id < b.vec_id
-            ) c
-            JOIN s ea ON ea.vec_id = c.vec_a
-            JOIN s eb ON eb.vec_id = c.vec_b
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    ),
-    stor AS (
-        SELECT COUNT(*) AS n_stored FROM (
-            SELECT {_sql_cos('a.embedding', 'b.embedding')} AS cos
-            FROM s a, s b
-            WHERE a.label = b.label AND a.vec_id < b.vec_id
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    ),
-    ex AS (
-        SELECT COUNT(*) AS n_exact FROM (
-            SELECT {_sql_cos('a.embedding', 'b.embedding')} AS cos
-            FROM s a, s b WHERE a.vec_id < b.vec_id
-        ) WHERE cos >= {EMBEDDING_COS_THRESHOLD}
-    )
-    SELECT CAST(n_exact AS BIGINT) AS n_exact,
-           CAST(n_stored AS BIGINT) AS n_stored,
-           CAST(n_refreshed AS BIGINT) AS n_refreshed,
-           CAST(CASE WHEN n_exact = 0 THEN 10000
-                     ELSE n_stored * 10000 // n_exact END AS BIGINT)
-               AS recall_stored_bp,
-           CAST(CASE WHEN n_exact = 0 THEN 10000
-                     ELSE n_refreshed * 10000 // n_exact END AS BIGINT)
-               AS recall_refreshed_bp
-    FROM ex, stor, refr
-    """
-
-
-_register_reassign_certification_oracle()
-
-# sim_semantic_dedup's oracle composes the multiprobe fragment defined in
-# this section, so its registration runs here, at the bottom of the module
-_register_semantic_dedup_oracle()

@@ -362,7 +362,35 @@ def multimodal_audio_chunks(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-@query("multimodal_binary_extract", oracle=None)  # assigned below
+def _sql_binary_extract() -> str:
+    from mutable_spark.sources.binary import _BIN_MOD
+
+    # mean_byte / first_byte are computed from the UTF-8 BLOB bytes of
+    # encode(text) — hex(blob) sliced two hex digits per byte — matching
+    # the Spark side's byte arithmetic over the payload exactly, so the
+    # contract survives non-ASCII corpora (ADVICE r14: the previous
+    # codepoint/strlen arithmetic was equal only for ASCII text).
+    blob_hex = "hex(encode(text))"
+    nb = "octet_length(encode(text))"
+    byte_at = f"('0x' || substring({blob_hex}, 1 + 2*i, 2))::BIGINT"
+    return f"""
+    SELECT doc_id,
+           CAST(1 AS BIGINT) AS magic_ok,
+           CAST({nb} AS BIGINT) AS n_bytes,
+           CASE WHEN {nb} = 0 THEN 0.0
+                ELSE CAST(list_sum(list_transform(range(0, {nb}),
+                         i -> {byte_at})) AS DOUBLE) / {nb}
+           END AS mean_byte,
+           CAST(CASE WHEN {nb} = 0 THEN -1
+                     ELSE ('0x' || substring({blob_hex}, 1, 2))::BIGINT
+                END AS BIGINT) AS first_byte,
+           md5(text) AS payload_md5
+    FROM documents
+    WHERE doc_id % {_BIN_MOD} = 0 AND text IS NOT NULL
+    """
+
+
+@query("multimodal_binary_extract", oracle=_sql_binary_extract)
 def multimodal_binary_extract(spark, sf_dir):
     """Decode+featurize fed by the REAL object-store surface (r14,
     VERDICT r13 item #5 — the binary source made load-bearing): the
@@ -440,38 +468,6 @@ def multimodal_binary_extract(spark, sf_dir):
         "first_byte",
         F.md5("payload").alias("payload_md5"),
     )
-
-
-def _register_binary_extract_oracle():
-    from mutable_spark.registry import ORACLES
-    from mutable_spark.sources.binary import _BIN_MOD
-
-    # mean_byte / first_byte are computed from the UTF-8 BLOB bytes of
-    # encode(text) — hex(blob) sliced two hex digits per byte — matching
-    # the Spark side's byte arithmetic over the payload exactly, so the
-    # contract survives non-ASCII corpora (ADVICE r14: the previous
-    # codepoint/strlen arithmetic was equal only for ASCII text).
-    blob_hex = "hex(encode(text))"
-    nb = "octet_length(encode(text))"
-    byte_at = f"('0x' || substring({blob_hex}, 1 + 2*i, 2))::BIGINT"
-    ORACLES["multimodal_binary_extract"] = f"""
-    SELECT doc_id,
-           CAST(1 AS BIGINT) AS magic_ok,
-           CAST({nb} AS BIGINT) AS n_bytes,
-           CASE WHEN {nb} = 0 THEN 0.0
-                ELSE CAST(list_sum(list_transform(range(0, {nb}),
-                         i -> {byte_at})) AS DOUBLE) / {nb}
-           END AS mean_byte,
-           CAST(CASE WHEN {nb} = 0 THEN -1
-                     ELSE ('0x' || substring({blob_hex}, 1, 2))::BIGINT
-                END AS BIGINT) AS first_byte,
-           md5(text) AS payload_md5
-    FROM documents
-    WHERE doc_id % {_BIN_MOD} = 0 AND text IS NOT NULL
-    """
-
-
-_register_binary_extract_oracle()
 
 
 # --------------------------------------------------------------------------

@@ -24,7 +24,9 @@ from mutable_spark.catalog import load_tables
 from mutable_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _NORMALIZE_SQL,
+    _SQL_HASHED_SHINGLES,
     _SQL_PAIRS,
+    _SQL_PAIRS_HASHED,
     _hashed_shingle_df,
     _normalize,
     _shingle_df,
@@ -292,7 +294,10 @@ _SQL_DECONTAM_FUZZY = rf"""
 """
 
 
-@query("pipeline_decontaminate_fuzzy", oracle=None)  # assigned below
+@query(
+    "pipeline_decontaminate_fuzzy",
+    oracle=_SQL_DECONTAM_FUZZY.format(shingles=_SQL_HASHED_SHINGLES),
+)
 def pipeline_decontaminate_fuzzy(spark, sf_dir):
     """Fuzzy benchmark decontamination — the paraphrase tier
     ``pipeline_decontaminate`` defers to: drop every training document
@@ -379,18 +384,6 @@ def fuzzy_contaminated_ids(d, is_eval):
     return (
         D._verify_pairs(cand, g).select(F.col("doc_a").alias("doc_id")).distinct()
     )
-
-
-def _register_fuzzy_oracle():
-    from mutable_spark.operators.dedup import _SQL_HASHED_SHINGLES
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["pipeline_decontaminate_fuzzy"] = _SQL_DECONTAM_FUZZY.format(
-        shingles=_SQL_HASHED_SHINGLES
-    )
-
-
-_register_fuzzy_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -806,7 +799,10 @@ _SQL_CONTAM_STATS = rf"""
 """
 
 
-@query("pipeline_contamination_stats", oracle=None)  # assigned below
+@query(
+    "pipeline_contamination_stats",
+    oracle=_SQL_CONTAM_STATS.format(shingles=_SQL_HASHED_SHINGLES),
+)
 def pipeline_contamination_stats(spark, sf_dir):
     """Contamination-rate report: for every eval-set document, the share
     of its distinct word-3-gram shingles that appear anywhere in the
@@ -855,18 +851,6 @@ def pipeline_contamination_stats(spark, sf_dir):
     )
 
 
-def _register_contam_stats_oracle():
-    from mutable_spark.operators.dedup import _SQL_HASHED_SHINGLES
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["pipeline_contamination_stats"] = _SQL_CONTAM_STATS.format(
-        shingles=_SQL_HASHED_SHINGLES
-    )
-
-
-_register_contam_stats_oracle()
-
-
 # --------------------------------------------------------------------------
 _SQL_KEEP_BEST = """
     WITH RECURSIVE pairs AS MATERIALIZED (
@@ -897,7 +881,10 @@ _SQL_KEEP_BEST = """
 """
 
 
-@query("pipeline_dedup_keep_best", oracle=None)  # assigned below
+@query(
+    "pipeline_dedup_keep_best",
+    oracle=_SQL_KEEP_BEST.format(pairs=_SQL_PAIRS_HASHED, quality=_SQL_QUALITY),
+)
 def pipeline_dedup_keep_best(spark, sf_dir):
     """Quality-aware duplicate resolution — the keep POLICY layer on top
     of duplicate detection: within every near-dup class, keep the
@@ -935,18 +922,6 @@ def pipeline_dedup_keep_best(spark, sf_dir):
         F.max(F.when(F.col("rn") == 1, F.col("doc_id"))).alias("keep_id"),
         F.max(F.when(F.col("rn") == 1, F.col("qual"))).alias("keep_quality"),
     )
-
-
-def _register_keep_best_oracle():
-    from mutable_spark.operators.dedup import _SQL_PAIRS_HASHED
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["pipeline_dedup_keep_best"] = _SQL_KEEP_BEST.format(
-        pairs=_SQL_PAIRS_HASHED, quality=_SQL_QUALITY
-    )
-
-
-_register_keep_best_oracle()
 
 
 _TOKEN_BUDGET = 800
@@ -1032,16 +1007,12 @@ def token_budget_frame(d, budget: int):
 _BPE_BUDGET = 4000
 
 
-def _register_bpe_budget_oracle():
-    from mutable_spark.operators.text import _bpe_round_fragments
-    from mutable_spark.registry import ORACLES
-
-    joined = ",\n    ".join(_bpe_round_fragments())
-    from mutable_spark.operators.text import _BPE_ROUNDS
+def _sql_bpe_budget_sample() -> str:
+    from mutable_spark.operators.text import _BPE_ROUNDS, _sql_bpe_rounds
 
     final = _BPE_ROUNDS + 1
-    ORACLES["pipeline_bpe_budget_sample"] = rf"""
-    WITH {joined},
+    return rf"""
+    WITH {_sql_bpe_rounds()},
     wt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_sym
            FROM s_{final} GROUP BY w),
     dw AS (SELECT doc_id, source, tok AS w
@@ -1064,7 +1035,7 @@ def _register_bpe_budget_oracle():
     """.replace("{q}", _SQL_QUALITY)
 
 
-@query("pipeline_bpe_budget_sample", oracle=None)  # assigned below
+@query("pipeline_bpe_budget_sample", oracle=_sql_bpe_budget_sample)
 def pipeline_bpe_budget_sample(spark, sf_dir):
     """Token-budget sampling measured in TRAINED-TOKENIZER tokens — the
     composition that makes `text_bpe_encode` load-bearing in the
@@ -1114,9 +1085,6 @@ def pipeline_bpe_budget_sample(spark, sf_dir):
         .filter(F.col("cum_tok") <= _BPE_BUDGET)
         .select("doc_id", "source", "n_tok", "cum_tok")
     )
-
-
-_register_bpe_budget_oracle()
 
 
 @query(
@@ -1639,7 +1607,35 @@ def pipeline_dedup_stats(spark, sf_dir):
 
 @query(
     "pipeline_split_leakage_safe",
-    oracle=None,  # assigned below (needs dedup._SQL_PAIRS_HASHED)
+    oracle=rf"""
+    WITH RECURSIVE pairs AS MATERIALIZED (
+        SELECT doc_a, doc_b FROM ({_SQL_PAIRS_HASHED})
+    ),
+    edges AS (
+        SELECT doc_a AS a, doc_b AS b FROM pairs
+        UNION ALL
+        SELECT doc_b AS a, doc_a AS b FROM pairs
+    ),
+    reach(n, m) AS (
+        SELECT DISTINCT a, a FROM edges
+        UNION
+        SELECT e.b, r.m FROM reach r JOIN edges e ON e.a = r.n
+    ),
+    classes AS (SELECT n AS doc_id, MIN(m) AS class_rep FROM reach GROUP BY n),
+    withc AS (
+        SELECT d.doc_id, COALESCE(c.class_rep, d.doc_id) AS class_rep
+        FROM documents d LEFT JOIN classes c ON d.doc_id = c.doc_id
+    )
+    SELECT CASE WHEN {_sql_hash52('class_rep')}
+                     < {_TRAIN_FRAC} * 4503599627370496.0
+                THEN 'train' ELSE 'test' END AS split,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT(DISTINCT class_rep) AS BIGINT) AS n_classes,
+           MIN(doc_id) AS min_id,
+           MAX(doc_id) AS max_id
+    FROM withc
+    GROUP BY 1
+    """,
 )
 def pipeline_split_leakage_safe(spark, sf_dir):
     """Leakage-safe train/test split: the stable-hash decision of
@@ -1692,44 +1688,6 @@ def pipeline_split_leakage_safe(spark, sf_dir):
         F.min("doc_id").alias("min_id"),
         F.max("doc_id").alias("max_id"),
     )
-
-
-def _register_leakage_safe_oracle():
-    from mutable_spark.operators.dedup import _SQL_PAIRS_HASHED
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["pipeline_split_leakage_safe"] = rf"""
-    WITH RECURSIVE pairs AS MATERIALIZED (
-        SELECT doc_a, doc_b FROM ({_SQL_PAIRS_HASHED})
-    ),
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    reach(n, m) AS (
-        SELECT DISTINCT a, a FROM edges
-        UNION
-        SELECT e.b, r.m FROM reach r JOIN edges e ON e.a = r.n
-    ),
-    classes AS (SELECT n AS doc_id, MIN(m) AS class_rep FROM reach GROUP BY n),
-    withc AS (
-        SELECT d.doc_id, COALESCE(c.class_rep, d.doc_id) AS class_rep
-        FROM documents d LEFT JOIN classes c ON d.doc_id = c.doc_id
-    )
-    SELECT CASE WHEN {_sql_hash52('class_rep')}
-                     < {_TRAIN_FRAC} * 4503599627370496.0
-                THEN 'train' ELSE 'test' END AS split,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT class_rep) AS BIGINT) AS n_classes,
-           MIN(doc_id) AS min_id,
-           MAX(doc_id) AS max_id
-    FROM withc
-    GROUP BY 1
-    """
-
-
-_register_leakage_safe_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -2259,10 +2217,7 @@ def _sql_dsir_features() -> str:
               FROM documents)"""
 
 
-def _register_dsir_oracle():
-    from mutable_spark.registry import ORACLES
-
-    ORACLES["pipeline_dsir_select"] = rf"""
+_SQL_DSIR_SELECT = rf"""
     WITH tok AS MATERIALIZED (
         SELECT doc_id, source, lang, is_target,
                h % {_DSIR_BUCKETS} AS b
@@ -2305,7 +2260,7 @@ def _register_dsir_oracle():
     """
 
 
-@query("pipeline_dsir_select", oracle=None)  # assigned below
+@query("pipeline_dsir_select", oracle=_SQL_DSIR_SELECT)
 def pipeline_dsir_select(spark, sf_dir):
     """DSIR-style data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): resample the raw pool
@@ -2462,18 +2417,13 @@ def _dsir_scored(tok_base, buckets: int):
     )
 
 
-_register_dsir_oracle()
-
-
 #: bucket counts the sweep prices (the shipped operating point is
 #: `_DSIR_BUCKETS` = 4096 — the paper-scale feature space; the sweep
 #: registers what coarser folds cost in score resolution)
 _DSIR_SWEEP_BUCKETS = (64, 1024, 4096)
 
 
-def _register_dsir_sweep_oracle():
-    from mutable_spark.registry import ORACLES
-
+def _sql_dsir_sweep() -> str:
     u = _sql_hash52("'dsir:' || CAST(doc_id AS VARCHAR)")
     blocks, rows = [], []
     for b in _DSIR_SWEEP_BUCKETS:
@@ -2508,7 +2458,7 @@ def _register_dsir_sweep_oracle():
              (SELECT MAX(score) AS mx FROM scored{b}) m
     )""")
         rows.append(f"SELECT * FROM summ{b}")
-    ORACLES["pipeline_dsir_sweep"] = rf"""
+    return rf"""
     WITH tok AS MATERIALIZED (
         SELECT doc_id, is_target, h FROM ({_sql_dsir_features()})
     ),
@@ -2520,7 +2470,7 @@ def _register_dsir_sweep_oracle():
     """
 
 
-@query("pipeline_dsir_sweep", oracle=None)  # assigned below
+@query("pipeline_dsir_sweep", oracle=_sql_dsir_sweep())
 def pipeline_dsir_sweep(spark, sf_dir):
     """The `_DSIR_BUCKETS` knob, priced (the house sweep discipline:
     operating points are measured, not asserted): one row per bucket
@@ -2563,9 +2513,6 @@ def pipeline_dsir_sweep(spark, sf_dir):
             )
         )
     return reduce(lambda a, b: a.unionAll(b), out)
-
-
-_register_dsir_sweep_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -2727,14 +2674,12 @@ def _unimax_alloc_frame(s):
 
 
 # --------------------------------------------------------------------------
-def _register_pack_bpe_oracle():
-    from mutable_spark.operators.text import _BPE_ROUNDS, _bpe_round_fragments
-    from mutable_spark.registry import ORACLES
+def _sql_pack_bpe() -> str:
+    from mutable_spark.operators.text import _BPE_ROUNDS, _sql_bpe_rounds
 
-    joined = ",\n    ".join(_bpe_round_fragments())
     final = _BPE_ROUNDS + 1
-    ORACLES["pipeline_pack_bpe"] = rf"""
-    WITH {joined},
+    return rf"""
+    WITH {_sql_bpe_rounds()},
     wt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_sym
            FROM s_{final} GROUP BY w),
     dw AS (SELECT doc_id, tok AS w
@@ -2764,7 +2709,7 @@ def _register_pack_bpe_oracle():
     """
 
 
-@query("pipeline_pack_bpe", oracle=None)  # assigned below
+@query("pipeline_pack_bpe", oracle=_sql_pack_bpe)
 def pipeline_pack_bpe(spark, sf_dir):
     """Sequence packing measured in TRAINED-TOKENIZER tokens — the
     layout a real pretraining dataloader cuts (`pipeline_pack_sequences`
@@ -2804,6 +2749,3 @@ def pipeline_pack_bpe(spark, sf_dir):
         (_hash52(F.col("doc_id")) % _PACK_SHARDS).alias("shard"),
     )
     return _pack_layout(t)
-
-
-_register_pack_bpe_oracle()

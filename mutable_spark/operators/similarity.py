@@ -798,7 +798,69 @@ def sim_ann_recall(spark, sf_dir):
 _LSH_BANDS = (2, 4, 8)
 
 
-@query("sim_lsh_band_sweep", oracle=None)  # assigned below
+def _sql_lsh_band_sweep() -> str:
+    parts = []
+    # Two-branch CASE with NO ELSE: an all-NULL-element vector has a
+    # NULL plane dot in both engines, and the NULL must PROPAGATE into
+    # the chunk sum so the band-equality predicate drops the vector —
+    # exactly what Spark's `(dot > 0).cast(int)` bit does. An `ELSE 0`
+    # would hand it an all-zero signature and admit it as an oracle-only
+    # candidate whenever a query band value is 0 (ADVICE r14, extended
+    # to the all-NULL case the ragged fixture exercises).
+    bits = [
+        f"(CASE WHEN {_sql_plane_dot(p)} > 0 THEN 1"
+        f" WHEN {_sql_plane_dot(p)} <= 0 THEN 0 END)"
+        for p in range(_N_PLANES)
+    ]
+    for b in _LSH_BANDS:
+        nch = _N_PLANES // b
+        chunks = [
+            "("
+            + " + ".join(f"{bits[b * c + i]} * {1 << i}" for i in range(b))
+            + ")"
+            for c in range(nch)
+        ]
+        ors = " OR ".join(
+            f"s.chunks[{i + 1}] = q.qchunks[{i + 1}]" for i in range(nch)
+        )
+        parts.append(f"""sig_{b} AS MATERIALIZED (
+        SELECT vec_id, embedding, [{", ".join(chunks)}] AS chunks
+        FROM embeddings WHERE len(embedding) > 0),
+    q_{b} AS (SELECT vec_id AS qid, embedding AS qv, chunks AS qchunks
+              FROM sig_{b} WHERE vec_id = (SELECT MIN(vec_id) FROM sig_{b})),
+    cand_{b} AS (
+        SELECT s.vec_id, s.embedding, q.qv FROM sig_{b} s, q_{b} q
+        WHERE s.vec_id <> q.qid AND ({ors})
+    ),
+    top_{b} AS (
+        SELECT vec_id FROM (
+            SELECT vec_id, {_sql_cos('embedding', 'qv')} AS cos
+            FROM cand_{b}
+        ) ORDER BY cos DESC, vec_id LIMIT 10
+    ),
+    row_{b} AS (
+        SELECT CAST({b} AS BIGINT) AS bits_per_band,
+               (SELECT COUNT(*) FROM cand_{b}) AS n_cand,
+               (SELECT COUNT(*) FROM top_{b} t JOIN ex e
+                  ON t.vec_id = e.vec_id) AS n_hits)""")
+    unions = " UNION ALL ".join(f"SELECT * FROM row_{b}" for b in _LSH_BANDS)
+    joined_parts = ",\n    ".join(parts)
+    return f"""
+    WITH ex AS MATERIALIZED ({_SQL_EXACT_TOPK}),
+    nx AS (SELECT COUNT(*) AS n_exact FROM ex),
+    {joined_parts}
+    SELECT bits_per_band, CAST(n_cand AS BIGINT) AS n_cand,
+           CAST(n_hits AS BIGINT) AS n_hits,
+           CAST(n_exact AS BIGINT) AS n_exact,
+           CAST(CASE WHEN n_exact = 0 THEN 10000
+                     ELSE n_hits * 10000 // n_exact END AS BIGINT)
+               AS recall_bp
+    FROM ({unions}), nx
+    ORDER BY bits_per_band
+    """
+
+
+@query("sim_lsh_band_sweep", oracle=_sql_lsh_band_sweep())
 def sim_lsh_band_sweep(spark, sf_dir):
     """Band-shape sweep for the hyperplane-LSH tier (r14, VERDICT r13
     item #7 — the multiprobe treatment applied to the tier
@@ -924,73 +986,6 @@ def sim_lsh_band_sweep(spark, sf_dir):
         )
         .orderBy("bits_per_band")
     )
-
-
-def _register_lsh_band_sweep_oracle():
-    from mutable_spark.registry import ORACLES
-
-    parts = []
-    # Two-branch CASE with NO ELSE: an all-NULL-element vector has a
-    # NULL plane dot in both engines, and the NULL must PROPAGATE into
-    # the chunk sum so the band-equality predicate drops the vector —
-    # exactly what Spark's `(dot > 0).cast(int)` bit does. An `ELSE 0`
-    # would hand it an all-zero signature and admit it as an oracle-only
-    # candidate whenever a query band value is 0 (ADVICE r14, extended
-    # to the all-NULL case the ragged fixture exercises).
-    bits = [
-        f"(CASE WHEN {_sql_plane_dot(p)} > 0 THEN 1"
-        f" WHEN {_sql_plane_dot(p)} <= 0 THEN 0 END)"
-        for p in range(_N_PLANES)
-    ]
-    for b in _LSH_BANDS:
-        nch = _N_PLANES // b
-        chunks = [
-            "("
-            + " + ".join(f"{bits[b * c + i]} * {1 << i}" for i in range(b))
-            + ")"
-            for c in range(nch)
-        ]
-        ors = " OR ".join(
-            f"s.chunks[{i + 1}] = q.qchunks[{i + 1}]" for i in range(nch)
-        )
-        parts.append(f"""sig_{b} AS MATERIALIZED (
-        SELECT vec_id, embedding, [{", ".join(chunks)}] AS chunks
-        FROM embeddings WHERE len(embedding) > 0),
-    q_{b} AS (SELECT vec_id AS qid, embedding AS qv, chunks AS qchunks
-              FROM sig_{b} WHERE vec_id = (SELECT MIN(vec_id) FROM sig_{b})),
-    cand_{b} AS (
-        SELECT s.vec_id, s.embedding, q.qv FROM sig_{b} s, q_{b} q
-        WHERE s.vec_id <> q.qid AND ({ors})
-    ),
-    top_{b} AS (
-        SELECT vec_id FROM (
-            SELECT vec_id, {_sql_cos('embedding', 'qv')} AS cos
-            FROM cand_{b}
-        ) ORDER BY cos DESC, vec_id LIMIT 10
-    ),
-    row_{b} AS (
-        SELECT CAST({b} AS BIGINT) AS bits_per_band,
-               (SELECT COUNT(*) FROM cand_{b}) AS n_cand,
-               (SELECT COUNT(*) FROM top_{b} t JOIN ex e
-                  ON t.vec_id = e.vec_id) AS n_hits)""")
-    unions = " UNION ALL ".join(f"SELECT * FROM row_{b}" for b in _LSH_BANDS)
-    joined_parts = ",\n    ".join(parts)
-    ORACLES["sim_lsh_band_sweep"] = f"""
-    WITH ex AS MATERIALIZED ({_SQL_EXACT_TOPK}),
-    nx AS (SELECT COUNT(*) AS n_exact FROM ex),
-    {joined_parts}
-    SELECT bits_per_band, CAST(n_cand AS BIGINT) AS n_cand,
-           CAST(n_hits AS BIGINT) AS n_hits,
-           CAST(n_exact AS BIGINT) AS n_exact,
-           CAST(CASE WHEN n_exact = 0 THEN 10000
-                     ELSE n_hits * 10000 // n_exact END AS BIGINT)
-               AS recall_bp
-    FROM ({unions}), nx
-    ORDER BY bits_per_band
-    """
-
-
-_register_lsh_band_sweep_oracle()
 
 
 def quantize_frame(e):

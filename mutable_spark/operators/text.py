@@ -846,7 +846,19 @@ def bpe_pair_counts_frame(d):
 _BPE_ROUNDS = 3
 
 
-@query("text_bpe_train", oracle=None)  # assigned below
+def _sql_bpe_train() -> str:
+    unions = " UNION ALL ".join(
+        f"SELECT CAST({r} AS BIGINT) AS round, a AS sym_a, b AS sym_b,"
+        f" cnt AS pair_count FROM best_{r}"
+        for r in range(1, _BPE_ROUNDS + 1)
+    )
+    return f"""
+    WITH {_sql_bpe_rounds()}
+    SELECT * FROM ({unions}) ORDER BY round
+    """
+
+
+@query("text_bpe_train", oracle=_sql_bpe_train)
 def text_bpe_train(spark, sf_dir):
     """Distributed BPE tokenizer TRAINING, multi-round (r14) — the
     iterative completion of `text_bpe_pairs` (which registers the
@@ -1112,7 +1124,20 @@ _BPE_BATCH_POOL = 64
 _BPE_BATCH_ROUNDS = 2
 
 
-@query("text_bpe_train_batched", oracle=None)  # assigned below
+def _sql_bpe_train_batched() -> str:
+    joined = ",\n    ".join(_bpe_batched_fragments())
+    unions = " UNION ALL ".join(
+        f"SELECT CAST({r} AS BIGINT) AS round, sel, sym AS sym_a,"
+        f" nxt AS sym_b, cnt AS pair_count FROM rules_{r}"
+        for r in range(1, _BPE_BATCH_ROUNDS + 1)
+    )
+    return f"""
+    WITH {joined}
+    SELECT * FROM ({unions}) ORDER BY round, sel
+    """
+
+
+@query("text_bpe_train_batched", oracle=_sql_bpe_train_batched)
 def text_bpe_train_batched(spark, sf_dir):
     """BATCHED BPE training (r15): per driver round-trip, collect the
     top-``_BPE_BATCH_POOL`` pair counts ONCE, greedily accept up to
@@ -1357,25 +1382,25 @@ def _bpe_batched_fragments():
     return parts
 
 
-def _register_bpe_batched_oracle():
-    from mutable_spark.registry import ORACLES
-
-    joined = ",\n    ".join(_bpe_batched_fragments())
-    unions = " UNION ALL ".join(
-        f"SELECT CAST({r} AS BIGINT) AS round, sel, sym AS sym_a,"
-        f" nxt AS sym_b, cnt AS pair_count FROM rules_{r}"
-        for r in range(1, _BPE_BATCH_ROUNDS + 1)
+def _sql_bpe_sweep() -> str:
+    sweep_pts = " UNION ALL ".join(
+        f"SELECT CAST({r} AS BIGINT) AS round,"
+        f" CAST(SUM(freq) AS BIGINT) AS n_tokens FROM s_{r + 1}"
+        for r in range(0, _BPE_ROUNDS + 1)
     )
-    ORACLES["text_bpe_train_batched"] = f"""
-    WITH {joined}
-    SELECT * FROM ({unions}) ORDER BY round, sel
+    return f"""
+    WITH {_sql_bpe_rounds()},
+    pts AS ({sweep_pts}),
+    base AS (SELECT n_tokens AS n0 FROM pts WHERE round = 0)
+    SELECT round, n_tokens,
+           (10000 * n_tokens) // (SELECT CASE WHEN n0 = 0 THEN 1
+                                              ELSE n0 END FROM base)
+               AS compression_bp
+    FROM pts ORDER BY round
     """
 
 
-_register_bpe_batched_oracle()
-
-
-@query("text_bpe_sweep", oracle=None)  # assigned below
+@query("text_bpe_sweep", oracle=_sql_bpe_sweep)
 def text_bpe_sweep(spark, sf_dir):
     """Price the ``_BPE_ROUNDS`` knob (r14) — the sweep instrument for
     the BPE trainer, following the repo's rule that no operating-point
@@ -1407,11 +1432,31 @@ def text_bpe_sweep(spark, sf_dir):
     )
 
 
-# (oracle assigned in _register_bpe_oracles, after the shared round
-# fragments are defined)
+def _sql_bpe_fertility() -> str:
+    return rf"""
+    WITH {_sql_bpe_rounds()},
+    wt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_sym
+           FROM s_{_BPE_ROUNDS + 1} GROUP BY w),
+    dw AS (SELECT doc_id, lang, tok AS w
+           FROM (SELECT doc_id, lang,
+                        unnest(string_split_regex(trim(text), '\s+')) AS tok
+                 FROM documents)
+           WHERE length(tok) >= 1),
+    per_doc AS (SELECT doc_id, lang,
+                       CAST(COUNT(*) AS BIGINT) AS n_ws,
+                       CAST(SUM(n_sym) AS BIGINT) AS n_bpe
+                FROM dw JOIN wt USING (w) GROUP BY doc_id, lang)
+    SELECT lang,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_ws) AS BIGINT) AS n_ws_tokens,
+           CAST(SUM(n_bpe) AS BIGINT) AS n_bpe_tokens,
+           (10000 * CAST(SUM(n_bpe) AS BIGINT))
+               // CAST(SUM(n_ws) AS BIGINT) AS fertility_bp
+    FROM per_doc GROUP BY lang
+    """
 
 
-@query("text_bpe_fertility", oracle=None)  # assigned below
+@query("text_bpe_fertility", oracle=_sql_bpe_fertility)
 def text_bpe_fertility(spark, sf_dir):
     """Tokenizer FERTILITY by language (r14) — BPE tokens per
     whitespace word, the per-language fairness metric tokenizer teams
@@ -1460,7 +1505,24 @@ def text_bpe_fertility(spark, sf_dir):
     )
 
 
-@query("text_bpe_encode", oracle=None)  # assigned below
+def _sql_bpe_encode() -> str:
+    return rf"""
+    WITH {_sql_bpe_rounds()},
+    wt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_sym
+           FROM s_{_BPE_ROUNDS + 1} GROUP BY w),
+    dw AS (SELECT doc_id, tok AS w
+           FROM (SELECT doc_id,
+                        unnest(string_split_regex(trim(text), '\s+')) AS tok
+                 FROM documents)
+           WHERE length(tok) >= 1)
+    SELECT doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_ws_tokens,
+           CAST(SUM(n_sym) AS BIGINT) AS n_bpe_tokens
+    FROM dw JOIN wt USING (w) GROUP BY doc_id
+    """
+
+
+@query("text_bpe_encode", oracle=_sql_bpe_encode)
 def text_bpe_encode(spark, sf_dir):
     """ENCODE the corpus with the trained BPE tokenizer (r14) — the
     consumer that makes `text_bpe_train` load-bearing: train the
@@ -1500,11 +1562,11 @@ def text_bpe_encode(spark, sf_dir):
     )
 
 
-def _bpe_round_fragments():
-    """The chained per-round oracle CTE blocks shared by
-    `text_bpe_train` and `text_bpe_encode`: vocabulary + initial
-    symbolization, then per round (pair counts p_r, argmax best_r,
-    match runs m_r, kept even offsets k_r, rebuilt s_{r+1})."""
+def _sql_bpe_rounds() -> str:
+    """The chained per-round oracle CTE blocks, as one WITH-fragment,
+    shared by every BPE oracle here and in pipeline.py: vocabulary +
+    initial symbolization, then per round (pair counts p_r, argmax
+    best_r, match runs m_r, kept even offsets k_r, rebuilt s_{r+1})."""
     parts = [
         r"""w AS MATERIALIZED (
         SELECT tok AS w, CAST(COUNT(*) AS BIGINT) AS freq
@@ -1551,76 +1613,7 @@ def _bpe_round_fragments():
             LEFT JOIN k_{r} k ON k.w = p.w AND k.pos = p.pos
             LEFT JOIN k_{r} g ON g.w = p.w AND g.pos = p.pos - 1
             WHERE g.pos IS NULL))""")
-    return parts
-
-
-def _register_bpe_oracles():
-    from mutable_spark.registry import ORACLES
-
-    joined = ",\n    ".join(_bpe_round_fragments())
-    unions = " UNION ALL ".join(
-        f"SELECT CAST({r} AS BIGINT) AS round, a AS sym_a, b AS sym_b,"
-        f" cnt AS pair_count FROM best_{r}"
-        for r in range(1, _BPE_ROUNDS + 1)
-    )
-    ORACLES["text_bpe_train"] = f"""
-    WITH {joined}
-    SELECT * FROM ({unions}) ORDER BY round
-    """
-    final = _BPE_ROUNDS + 1
-    ORACLES["text_bpe_encode"] = rf"""
-    WITH {joined},
-    wt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_sym
-           FROM s_{final} GROUP BY w),
-    dw AS (SELECT doc_id, tok AS w
-           FROM (SELECT doc_id,
-                        unnest(string_split_regex(trim(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE length(tok) >= 1)
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_ws_tokens,
-           CAST(SUM(n_sym) AS BIGINT) AS n_bpe_tokens
-    FROM dw JOIN wt USING (w) GROUP BY doc_id
-    """
-    ORACLES["text_bpe_fertility"] = rf"""
-    WITH {{joined}},
-    wt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_sym
-           FROM s_{{final}} GROUP BY w),
-    dw AS (SELECT doc_id, lang, tok AS w
-           FROM (SELECT doc_id, lang,
-                        unnest(string_split_regex(trim(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE length(tok) >= 1),
-    per_doc AS (SELECT doc_id, lang,
-                       CAST(COUNT(*) AS BIGINT) AS n_ws,
-                       CAST(SUM(n_sym) AS BIGINT) AS n_bpe
-                FROM dw JOIN wt USING (w) GROUP BY doc_id, lang)
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_ws) AS BIGINT) AS n_ws_tokens,
-           CAST(SUM(n_bpe) AS BIGINT) AS n_bpe_tokens,
-           (10000 * CAST(SUM(n_bpe) AS BIGINT))
-               // CAST(SUM(n_ws) AS BIGINT) AS fertility_bp
-    FROM per_doc GROUP BY lang
-    """.replace("{joined}", joined).replace("{final}", str(final))
-    sweep_pts = " UNION ALL ".join(
-        f"SELECT CAST({r} AS BIGINT) AS round,"
-        f" CAST(SUM(freq) AS BIGINT) AS n_tokens FROM s_{r + 1}"
-        for r in range(0, _BPE_ROUNDS + 1)
-    )
-    ORACLES["text_bpe_sweep"] = f"""
-    WITH {joined},
-    pts AS ({sweep_pts}),
-    base AS (SELECT n_tokens AS n0 FROM pts WHERE round = 0)
-    SELECT round, n_tokens,
-           (10000 * n_tokens) // (SELECT CASE WHEN n0 = 0 THEN 1
-                                              ELSE n0 END FROM base)
-               AS compression_bp
-    FROM pts ORDER BY round
-    """
-
-
-_register_bpe_oracles()
+    return ",\n    ".join(parts)
 
 
 # --------------------------------------------------------------------------

@@ -1137,39 +1137,15 @@ class JoinPlanner:
         and small enough for exact DP; greedy (GOO, left-deep) otherwise —
         the same exact-with-greedy-fallback pairing the reference's
         enumerator registry offers (`PlanEnumerator.cpp:725-738`)."""
-        eff = self._effective(aliases, alias_table)
-        exact = {
-            "dpccp": dpccp_plan,
-            "dpsize": dpsize_plan,
-            "dpsizeopt": dpsizeopt_plan,
-            "dpsizesub": dpsizesub_plan,
-            "dpsub": dpsub_plan,
-            "dpsubopt": dpsubopt_plan,
-            "tdbasic": tdbasic_plan,
-            "tdmincut": tdmincut_plan,
-            "tdgoo": tdgoo_plan,
-            "ikkbz": ikkbz_plan,
-            "lineardp": linearizeddp_plan,
-            "peall": peall_plan,
-            # heuristic-search family (SIGMOD'23): hs-astar is exact
-            # (admissible zero heuristic); the rest trade optimality for
-            # bounded search effort
-            "hs-astar": hs_astar_plan,
-            "hs-weighted": hs_weighted_astar_plan,
-            "hs-beam": hs_beam_plan,
-            "hs-anytime": hs_anytime_plan,
-        }
-        # user-registered enumerators (the reference's
-        # Catalog::register_plan_enumerator surface) resolve after the
-        # builtins; same contract — return None to fall back to GOO
+        # one name-keyed table holds the builtins and user registrations
+        # alike (the reference's Catalog::register_plan_enumerator); an
+        # enumerator returns None to fall back to GOO
         from mutable_spark.extensions import PLAN_ENUMERATORS
 
-        exact = {**PLAN_ENUMERATORS, **exact}
-        if (
-            self.enumerator in exact
-            and 1 < len(aliases) <= self.max_dp_relations
-        ):
-            tree = exact[self.enumerator](aliases, edges, eff)
+        eff = self._effective(aliases, alias_table)
+        exact = PLAN_ENUMERATORS.get(self.enumerator)
+        if exact is not None and 1 < len(aliases) <= self.max_dp_relations:
+            tree = exact(aliases, edges, eff)
             if tree is not None:
                 return tree
         order = goo_order(aliases, edges, eff)

@@ -16,20 +16,32 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+# oracles given as functions, resolved to strings by `load_all`
+_DEFERRED_ORACLES: dict[str, Callable[[], str]] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(
+    name: str, oracle: str | Callable[[], str] | None = None
+) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name``; ``oracle`` is equivalent DuckDB SQL.
 
-    Pass ``oracle=None`` only for genuinely non-SQL-expressible operators
-    (probabilistic LSH candidate generation, iterative algorithms); the driver
-    then records a weaker rows-only check.
+    ``oracle`` is the SQL string, or a zero-argument function returning
+    it when the SQL composes helpers defined further down the module or
+    in another operator module; `load_all` calls each such function
+    once, after every module is imported, so ``ORACLES`` only ever holds
+    strings. This is the only way an oracle is registered.
+
+    ``oracle=None`` means the query has no oracle: pass it only for
+    genuinely non-SQL-expressible operators (probabilistic sketches);
+    the driver then records a weaker rows-only check.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         assert name not in QUERIES, f"duplicate query name {name!r}"
         QUERIES[name] = fn
-        if oracle is not None:
+        if callable(oracle):
+            _DEFERRED_ORACLES[name] = oracle
+        elif oracle is not None:
             ORACLES[name] = oracle
         return fn
 
@@ -448,9 +460,10 @@ def _reorder_by_priority() -> None:
 
 
 def load_all() -> None:
-    """Import every module that registers queries (idempotent), then order
-    the registry so the driver's 50-query sample covers every operator
-    family (see _SAMPLE_PRIORITY)."""
+    """Import every module that registers queries (idempotent), resolve
+    the oracles registered as functions, then order the registry so the
+    driver's 50-query sample covers every operator family (see
+    _SAMPLE_PRIORITY)."""
     import mutable_spark.plans.queries  # noqa: F401
     import mutable_spark.plans.tpch  # noqa: F401
     import mutable_spark.plans.dialect_queries  # noqa: F401
@@ -473,4 +486,7 @@ def load_all() -> None:
     import mutable_spark.sources.csv  # noqa: F401
     import mutable_spark.sources.binary  # noqa: F401
 
+    for name, sql in _DEFERRED_ORACLES.items():
+        ORACLES[name] = sql()
+    _DEFERRED_ORACLES.clear()
     _reorder_by_priority()

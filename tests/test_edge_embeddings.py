@@ -177,8 +177,10 @@ _RAGGED_VECS = [
 _RAGGED_OPS = [
     "sim_retrained_cells",
     # r15: the write-back store roundtrip must preserve ragged-corpus
-    # labels bit-exactly (empty / all-NULL vectors keep their init cell
-    # through every Lloyd round in both engines)
+    # labels bit-exactly in both engines: an empty vector gets no label
+    # row at all, and an all-NULL vector scores NULL against every
+    # centroid, so each Lloyd round's cell tiebreak moves it to the
+    # lowest-numbered cell that has a centroid
     "sim_label_store_roundtrip",
     "sim_retrain_convergence",
     "pipeline_decontaminate_semantic",

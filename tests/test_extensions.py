@@ -42,9 +42,35 @@ def test_register_plan_enumerator_reaches_the_planner():
     t2 = p2.plan(["a", "b", "c"], {frozenset("ab"), frozenset("bc")})
     assert isinstance(t2, tuple)  # a plan still comes out
 
-    # builtins shadow user names; duplicates raise without replace
+    # duplicates raise without replace
     with pytest.raises(ValueError):
         E.register_plan_enumerator("test-rightdeep", rightdeep)
+
+
+def test_builtin_enumerator_names_are_registry_entries():
+    """A builtin enumerator is an entry of the same table: registering
+    its name raises without ``replace``, and with it the user's
+    function is the one the planner calls (no builtin shadows it)."""
+    builtin = E.PLAN_ENUMERATORS["dpccp"]
+    calls = []
+
+    def mine(aliases, edges, cards):
+        calls.append(list(aliases))
+        return None
+
+    with pytest.raises(ValueError):
+        E.register_plan_enumerator("dpccp", mine)
+    assert E.PLAN_ENUMERATORS["dpccp"] is builtin
+    cards = Cardinalities(base={"a": 10, "b": 20, "c": 30})
+    E.register_plan_enumerator("dpccp", mine, replace=True)
+    try:
+        tree = JoinPlanner(cards, enumerator="dpccp").plan(
+            ["a", "b", "c"], {frozenset("ab"), frozenset("bc")}
+        )
+    finally:
+        E.register_plan_enumerator("dpccp", builtin, replace=True)
+    assert calls == [["a", "b", "c"]]
+    assert isinstance(tree, tuple)  # None fell back to GOO
 
 
 def test_builtin_estimators_registered():

@@ -35,6 +35,10 @@ def test_registry_contract():
     o = entrymod.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) >= 20
+    # the rows-only set is pinned: a query that loses its oracle fails
+    # here instead of degrading to a row-count check in compare()
+    assert set(q) - set(o) == {"op_approx_sketches"}
+    assert all(isinstance(sql, str) and sql.strip() for sql in o.values())
 
 
 def test_harness_flags_hugeint_family_mismatch():
