@@ -1045,7 +1045,7 @@ def pipeline_bpe_budget_sample(spark, sf_dir):
     best-first contract as `pipeline_token_budget_sample` (quality
     DESC, doc_id tiebreak, per-source running-sum prefix under
     ``_BPE_BUDGET``), with n_tok from the 3-round trained tokenizer via
-    the shared `_bpe_merge_rounds` symbolization. Documents with no
+    the shared encode join (`text._bpe_encode_by`). Documents with no
     valid token never enter (they carry zero budget either way).
 
     Scale shape: the encode join (vocab-side ShuffledHashJoin — the
@@ -1057,18 +1057,11 @@ def pipeline_bpe_budget_sample(spark, sf_dir):
     r13 advice contract)."""
     from pyspark.sql import Window
 
-    from mutable_spark.operators.text import _bpe_merge_rounds, _toks
+    from mutable_spark.operators.text import _bpe_encode_by
 
     d = load_tables(spark, sf_dir).documents
-    _, syms = _bpe_merge_rounds(d)
-    wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
-    dw = d.select(
-        "doc_id", "source", F.explode(_toks()).alias("w")
-    ).filter(F.length("w") >= 1)
-    ntok = (
-        dw.join(wt.hint("shuffle_hash"), "w")
-        .groupBy("doc_id", "source")
-        .agg(F.sum("n_sym").alias("n_tok"))
+    ntok = _bpe_encode_by(d, "doc_id", "source").agg(
+        F.sum("n_sym").alias("n_tok")
     )
     # the quality frame is one NARROW row per document — small at test
     # SF (Catalyst broadcasts it) but corpus-sized at deployment, so
@@ -2716,7 +2709,7 @@ def pipeline_pack_bpe(spark, sf_dir):
     packs whitespace words; the model consumes BPE tokens, and the two
     counts diverge per document because long words compress less). Each
     document's token count comes from the shared 3-round trained
-    tokenizer (`_bpe_merge_rounds` symbolization — the
+    tokenizer (the shared encode join `text._bpe_encode_by` — the
     `pipeline_bpe_budget_sample` composition), then the
     concatenate-and-chunk layout (`_pack_layout`, shared VERBATIM with
     the whitespace op) fixes the (shard, sequence, offset) every
@@ -2730,18 +2723,11 @@ def pipeline_pack_bpe(spark, sf_dir):
     feeding the running-sum window — identical to the whitespace
     packing plan; all layout arithmetic is exact integer div/mod, so
     the oracle matches bit-for-bit."""
-    from mutable_spark.operators.text import _bpe_merge_rounds, _toks
+    from mutable_spark.operators.text import _bpe_encode_by
 
     d = load_tables(spark, sf_dir).documents
-    _, syms = _bpe_merge_rounds(d)
-    wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
-    dw = d.select("doc_id", F.explode(_toks()).alias("w")).filter(
-        F.length("w") >= 1
-    )
-    ntok = (
-        dw.join(wt.hint("shuffle_hash"), "w")
-        .groupBy("doc_id")
-        .agg(F.sum("n_sym").cast("long").alias("n_tok"))
+    ntok = _bpe_encode_by(d, "doc_id").agg(
+        F.sum("n_sym").cast("long").alias("n_tok")
     )
     t = ntok.select(
         "doc_id",

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
+from pyspark.sql import Window
 
 from mutable_spark.catalog import load_tables
 from mutable_spark.functions import vec_cosine, vec_cosine_pre, vec_norm
@@ -541,63 +542,13 @@ def sim_ivf_train(spark, sf_dir):
     map-side). k and dims bound the broadcast; N only flows through
     linear scans — the standard distributed Lloyd round. The interpreted
     per-row HOF fold over 64-dim arrays is deliberately avoided (see the
-    `sim_ann_lsh` docstring measurements)."""
-    S = int(_DOT_SCALE)
-    e = load_tables(spark, sf_dir).embeddings
-    # cached: every Lloyd consumer (init join, per-round distance and
-    # update joins, final rollup) re-ran the scan + posexplode otherwise
-    # — measured 18 parquet scans in the uncached plan (the r10
-    # one-pass-then-iterate fix, same as `_pq_fit`)
-    ex = e.select(
-        "vec_id", F.posexplode("embedding").alias("d", "xr")
-    ).select(
-        "vec_id", (F.col("d") + 1).alias("d"), F.col("xr").cast("double").alias("x")
-    ).cache()
+    `sim_ann_lsh` docstring measurements).
 
-    from pyspark.sql import Window
-
-    init = (
-        e.orderBy("vec_id")
-        .limit(_KM_K)
-        .select(
-            "vec_id",
-            (F.row_number().over(Window.orderBy("vec_id")) - 1)
-            .cast("int")
-            .alias("cluster"),
-        )
+    The rounds are `_pq_fit`'s with ONE subspace of all 64 dims (every
+    row has s = 0); this builder adds only the per-cluster rollup."""
+    _, cent, assign = _pq_fit(
+        load_tables(spark, sf_dir).embeddings, subdim=_DIM
     )
-    cent = init.join(ex, "vec_id").select(
-        "cluster", "d", F.col("x").alias("c")
-    )
-
-    assign = None
-    for it in range(_KM_ITERS):
-        term = F.floor((F.col("x") - F.col("c")) * (F.col("x") - F.col("c")) * F.lit(S)).cast(
-            "long"
-        )
-        pair = (
-            ex.join(F.broadcast(cent), "d")
-            .groupBy("vec_id", "cluster")
-            .agg(F.sum(term).alias("dist"))
-        )
-        assign = (
-            pair.groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cluster")).alias("m"))
-            .select("vec_id", F.col("m.cluster").alias("cluster"))
-        )
-        if it == _KM_ITERS - 1:
-            break
-        cent = (
-            assign.join(ex, "vec_id")
-            .groupBy("cluster", "d")
-            .agg(
-                (
-                    F.sum(F.floor(F.col("x") * F.lit(S)).cast("long")).cast("double")
-                    / (F.count(F.lit(1)) * F.lit(float(S)))
-                ).alias("c")
-            )
-        )
-
     c_dim1 = cent.filter(F.col("d") == 1).select("cluster", F.col("c").alias("c_dim1"))
     return (
         assign.groupBy("cluster")
@@ -661,8 +612,6 @@ def sim_knn_join(spark, sf_dir):
         F.col("embedding").alias("qv"),
         vec_norm(F.col("embedding")).alias("qn"),
     )
-    from pyspark.sql import Window
-
     scored = (
         e.select("vec_id", "embedding", vec_norm(F.col("embedding")).alias("cn"))
         .crossJoin(F.broadcast(q))
@@ -1241,8 +1190,6 @@ def sim_hard_negatives(spark, sf_dir):
         F.col("embedding").alias("qv"),
         vec_norm(F.col("embedding")).alias("qn"),
     )
-    from pyspark.sql import Window
-
     scored = (
         e.select(
             "vec_id", "label", "embedding",
@@ -1460,7 +1407,7 @@ def sim_embedding_covariance(spark, sf_dir):
 # Neighbor Search", TPAMI 2011). M=8 subspaces x 8 dims, k=8 codes per
 # subspace -> a 64-dim float32 vector becomes 8 x 3 bits of code.
 
-_PQ_M, _PQ_SUBK = 8, 8  # subspaces x codes-per-subspace
+_PQ_M = 8  # subspaces; each trains a _KM_K-code codebook
 _PQ_SUBDIM = _DIM // _PQ_M
 
 
@@ -1484,7 +1431,7 @@ def _sql_pq_chain() -> str:
     init AS (
         SELECT vec_id,
                CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster
-        FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {_PQ_SUBK})
+        FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {_KM_K})
     ),
     c0 AS (SELECT e.s, i.cluster, e.d, e.x AS c
            FROM init i JOIN ex e USING (vec_id)),
@@ -1569,11 +1516,20 @@ def sim_pq_train(spark, sf_dir):
     )
 
 
-def _pq_fit(e):
-    """(ex, cent, assign) — the PQ training core shared by
-    ``sim_pq_train`` (encoding) and ``sim_pq_recall`` (ADC serving):
-    ex = the (vec_id, d, s, x) posexploded scan, cent = the
-    round-1-refined per-subspace codebooks, assign = the final
+def _l2_term(a: str, b: str):
+    """floor((a − b)² · 2^40) as LONG: the per-dimension scaled-integer
+    squared distance every Lloyd round and PQ query step sums (integer
+    sums are order-free — see `sim_ivf_train`)."""
+    diff = F.col(a) - F.col(b)
+    return F.floor(diff * diff * F.lit(int(_DOT_SCALE))).cast("long")
+
+
+def _pq_fit(e, subdim: int = _PQ_SUBDIM):
+    """(ex, cent, assign) — the one fixed-round Lloyd trainer, over
+    subspaces of ``subdim`` dims: the PQ codebooks at the default,
+    `sim_ivf_train`'s coarse quantizer at ``subdim=_DIM`` (one
+    subspace). ex = the (vec_id, d, s, x) posexploded scan, cent = the
+    round-1-refined (s, cluster, d, c) centroids, assign = the final
     (vec_id, s, cluster, dist) code assignment.
 
     ``ex`` is CACHED: the training rounds + init + the consumers read
@@ -1587,15 +1543,13 @@ def _pq_fit(e):
         .select(
             "vec_id",
             (F.col("d0") + 1).alias("d"),
-            F.expr(f"cast(d0 div {_PQ_SUBDIM} as int)").alias("s"),
+            F.expr(f"cast(d0 div {subdim} as int)").alias("s"),
             F.col("xr").cast("double").alias("x"),
         )
     ).cache()
-    from pyspark.sql import Window
-
     init = (
         e.orderBy("vec_id")
-        .limit(_PQ_SUBK)
+        .limit(_KM_K)
         .select(
             "vec_id",
             (F.row_number().over(Window.orderBy("vec_id")) - 1)
@@ -1608,13 +1562,10 @@ def _pq_fit(e):
     )
     assign = None
     for it in range(_KM_ITERS):
-        term = F.floor(
-            (F.col("x") - F.col("c")) * (F.col("x") - F.col("c")) * F.lit(S)
-        ).cast("long")
         pair = (
             ex.join(F.broadcast(cent), ["s", "d"])
             .groupBy("vec_id", "s", "cluster")
-            .agg(F.sum(term).alias("dist"))
+            .agg(F.sum(_l2_term("x", "c")).alias("dist"))
         )
         assign = (
             pair.groupBy("vec_id", "s")
@@ -1637,6 +1588,79 @@ def _pq_fit(e):
             )
         )
     return ex, cent, assign
+
+
+def _pq_query(ex, cent, qid):
+    """(qx, dq) for the query vector ``qid``: its (s, d, qx) sub-vector
+    rows and the M·k ADC table (s, cluster, qdist) — each code
+    centroid's scaled-integer distance to the query's sub-vector."""
+    qx = ex.filter(F.col("vec_id") == qid).select(
+        "s", "d", F.col("x").alias("qx")
+    )
+    dq = (
+        cent.join(F.broadcast(qx), ["s", "d"])
+        .groupBy("s", "cluster")
+        .agg(F.sum(_l2_term("qx", "c")).alias("qdist"))
+    )
+    return qx, dq
+
+
+def _adc_dist(codes, dq, *keys):
+    """(vec_id, *keys, adc_dist): each coded vector's asymmetric
+    distance, the sum of M lookups of its codes in the broadcast ADC
+    table."""
+    return (
+        codes.join(F.broadcast(dq), ["s", "cluster"])
+        .groupBy("vec_id", *keys)
+        .agg(F.sum("qdist").alias("adc_dist"))
+    )
+
+
+def _exact_dist(ex, qx, name: str):
+    """(vec_id, ``name``): the exact scaled-integer L2 distance from the
+    query to every vector whose rows ``ex`` holds."""
+    return (
+        ex.join(F.broadcast(qx), ["s", "d"])
+        .groupBy("vec_id")
+        .agg(F.sum(_l2_term("x", "qx")).alias(name))
+    )
+
+
+def _exact_top10(ex, qx, qid):
+    """(vec_id, hit = 1) of the exact full-scan top-10 with the query
+    excluded — the recall harness every PQ evaluation compares
+    against."""
+    return (
+        _exact_dist(ex.filter(F.col("vec_id") != qid), qx, "dist")
+        .orderBy("dist", "vec_id")
+        .limit(10)
+        .select("vec_id", F.lit(1).cast("long").alias("hit"))
+    )
+
+
+def _pq_rerank(ex, qx, qid, shortlist):
+    """The served top-10 of a two-stage search — (rnk, vec_id, dist_q,
+    hit): exact L2 over the ``shortlist`` members only, hit = 1 when the
+    served vector is in the exact full-scan top-10."""
+    served = (
+        _exact_dist(ex.join(shortlist, "vec_id"), qx, "dist_q")
+        .orderBy("dist_q", "vec_id")
+        .limit(10)
+        .select(
+            F.row_number()
+            .over(Window.orderBy("dist_q", "vec_id"))
+            .cast("long")
+            .alias("rnk"),
+            "vec_id",
+            "dist_q",
+        )
+    )
+    return served.join(_exact_top10(ex, qx, qid), "vec_id", "left").select(
+        "rnk",
+        "vec_id",
+        "dist_q",
+        F.coalesce("hit", F.lit(0).cast("long")).alias("hit"),
+    )
 
 
 def _sql_pq_recall() -> str:
@@ -1714,48 +1738,16 @@ def sim_pq_recall(spark, sf_dir):
     `sim_quantized_rerank`) and sweeps M·k against this exact
     evaluation before committing a codebook."""
     e = load_tables(spark, sf_dir).embeddings
-    S = int(_DOT_SCALE)
     ex, cent, assign = _pq_fit(e)
     qid = e.agg(F.min("vec_id")).collect()[0][0]
-    qx = ex.filter(F.col("vec_id") == qid).select(
-        "s", "d", F.col("x").alias("qx")
-    )
-    dq = (
-        cent.join(F.broadcast(qx), ["s", "d"])
-        .groupBy("s", "cluster")
-        .agg(
-            F.sum(
-                F.floor(
-                    (F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c")) * F.lit(S)
-                ).cast("long")
-            ).alias("qdist")
-        )
-    )
+    qx, dq = _pq_query(ex, cent, qid)
     adc_top = (
-        assign.filter(F.col("vec_id") != qid)
-        .join(F.broadcast(dq), ["s", "cluster"])
-        .groupBy("vec_id")
-        .agg(F.sum("qdist").alias("adc_dist"))
+        _adc_dist(assign.filter(F.col("vec_id") != qid), dq)
         .orderBy("adc_dist", "vec_id")
         .limit(10)
         .select("vec_id")
     )
-    exact_top = (
-        ex.filter(F.col("vec_id") != qid)
-        .join(F.broadcast(qx), ["s", "d"])
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                F.floor(
-                    (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) * F.lit(S)
-                ).cast("long")
-            ).alias("dist")
-        )
-        .orderBy("dist", "vec_id")
-        .limit(10)
-        .select("vec_id")
-    )
-    hits = exact_top.join(adc_top, "vec_id", "left_semi")
+    hits = _exact_top10(ex, qx, qid).join(adc_top, "vec_id", "left_semi")
     return hits.agg(F.count(F.lit(1)).alias("n_hits")).select(
         F.lit(10).cast("long").alias("k"),
         "n_hits",
@@ -1855,70 +1847,16 @@ def sim_pq_search(spark, sf_dir):
     tie-breaks — total orders end to end, so rank, distance, and hit
     all value-hash against the DuckDB twin."""
     e = load_tables(spark, sf_dir).embeddings
-    S = int(_DOT_SCALE)
     ex, cent, assign = _pq_fit(e)
     qid = e.agg(F.min("vec_id")).collect()[0][0]
-    qx = ex.filter(F.col("vec_id") == qid).select(
-        "s", "d", F.col("x").alias("qx")
-    )
-    dq = (
-        cent.join(F.broadcast(qx), ["s", "d"])
-        .groupBy("s", "cluster")
-        .agg(
-            F.sum(
-                F.floor(
-                    (F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c")) * F.lit(S)
-                ).cast("long")
-            ).alias("qdist")
-        )
-    )
+    qx, dq = _pq_query(ex, cent, qid)
     shortlist = (
-        assign.filter(F.col("vec_id") != qid)
-        .join(F.broadcast(dq), ["s", "cluster"])
-        .groupBy("vec_id")
-        .agg(F.sum("qdist").alias("adc_dist"))
+        _adc_dist(assign.filter(F.col("vec_id") != qid), dq)
         .orderBy("adc_dist", "vec_id")
         .limit(_PQ_SHORTLIST)
         .select("vec_id")
     )
-    exact_term = F.sum(
-        F.floor(
-            (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) * F.lit(S)
-        ).cast("long")
-    )
-    served = (
-        ex.join(shortlist, "vec_id")
-        .join(F.broadcast(qx), ["s", "d"])
-        .groupBy("vec_id")
-        .agg(exact_term.alias("dist_q"))
-        .orderBy("dist_q", "vec_id")
-        .limit(10)
-    )
-    from pyspark.sql import Window
-
-    served = served.select(
-        F.row_number()
-        .over(Window.orderBy("dist_q", "vec_id"))
-        .cast("long")
-        .alias("rnk"),
-        "vec_id",
-        "dist_q",
-    )
-    exact_top = (
-        ex.filter(F.col("vec_id") != qid)
-        .join(F.broadcast(qx), ["s", "d"])
-        .groupBy("vec_id")
-        .agg(exact_term.alias("dist"))
-        .orderBy("dist", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(1).cast("long").alias("hit"))
-    )
-    return served.join(exact_top, "vec_id", "left").select(
-        "rnk",
-        "vec_id",
-        "dist_q",
-        F.coalesce("hit", F.lit(0).cast("long")).alias("hit"),
-    )
+    return _pq_rerank(ex, qx, qid, shortlist)
 
 
 # --------------------------------------------------------------------------
@@ -1983,8 +1921,6 @@ def sim_matryoshka_recall(spark, sf_dir):
     sorts), then a per-query partial agg. Norms are hoisted per side
     (`vec_cosine_pre`); the prefix slice happens once per row, not per
     pair, on the corpus side and once per query on the broadcast side."""
-    from pyspark.sql import Window
-
     e = load_tables(spark, sf_dir).embeddings
     q = e.filter(F.col("vec_id") % _KNN_QMOD == 0).select(
         F.col("vec_id").alias("query_id"),
@@ -2124,8 +2060,6 @@ def sim_matryoshka_search(spark, sf_dir):
     cosine DESC, vec_id tiebreak; NULL cosines — zero-norm vectors —
     sort last in both engines), so rank, cosine, and hit all
     value-hash against the DuckDB twin."""
-    from pyspark.sql import Window
-
     e = load_tables(spark, sf_dir).embeddings
     qid = e.agg(F.min("vec_id")).collect()[0][0]
     q = e.filter(F.col("vec_id") == qid).select(
@@ -2324,7 +2258,6 @@ def sim_ivfpq_search(spark, sf_dir):
     every distance is a scaled-long with (dist, vec_id) tiebreaks, so
     rank/distance/hit all value-hash against the DuckDB twin."""
     e = load_tables(spark, sf_dir).embeddings
-    S = int(_DOT_SCALE)
     ex, cent, assign = _pq_fit(e)
     qdf = (
         e.orderBy("vec_id")
@@ -2337,67 +2270,14 @@ def sim_ivfpq_search(spark, sf_dir):
         .filter(F.col("vec_id") != F.lit(int(qid)))
         .select("vec_id")
     )
-    qx = ex.filter(F.col("vec_id") == qid).select(
-        "s", "d", F.col("x").alias("qx")
-    )
-    dq = (
-        cent.join(F.broadcast(qx), ["s", "d"])
-        .groupBy("s", "cluster")
-        .agg(
-            F.sum(
-                F.floor(
-                    (F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c")) * F.lit(S)
-                ).cast("long")
-            ).alias("qdist")
-        )
-    )
+    qx, dq = _pq_query(ex, cent, qid)
     shortlist = (
-        assign.join(cand, "vec_id", "left_semi")
-        .join(F.broadcast(dq), ["s", "cluster"])
-        .groupBy("vec_id")
-        .agg(F.sum("qdist").alias("adc_dist"))
+        _adc_dist(assign.join(cand, "vec_id", "left_semi"), dq)
         .orderBy("adc_dist", "vec_id")
         .limit(_IVFPQ_SHORTLIST)
         .select("vec_id")
     )
-    exact_term = F.sum(
-        F.floor(
-            (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) * F.lit(S)
-        ).cast("long")
-    )
-    served = (
-        ex.join(shortlist, "vec_id")
-        .join(F.broadcast(qx), ["s", "d"])
-        .groupBy("vec_id")
-        .agg(exact_term.alias("dist_q"))
-        .orderBy("dist_q", "vec_id")
-        .limit(10)
-    )
-    from pyspark.sql import Window
-
-    served = served.select(
-        F.row_number()
-        .over(Window.orderBy("dist_q", "vec_id"))
-        .cast("long")
-        .alias("rnk"),
-        "vec_id",
-        "dist_q",
-    )
-    exact_top = (
-        ex.filter(F.col("vec_id") != qid)
-        .join(F.broadcast(qx), ["s", "d"])
-        .groupBy("vec_id")
-        .agg(exact_term.alias("dist"))
-        .orderBy("dist", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(1).alias("one"))
-    )
-    return served.join(exact_top, "vec_id", "left").select(
-        "rnk",
-        "vec_id",
-        "dist_q",
-        F.coalesce(F.col("one"), F.lit(0)).cast("long").alias("hit"),
-    )
+    return _pq_rerank(ex, qx, qid, shortlist)
 
 
 # --------------------------------------------------------------------------
@@ -2534,7 +2414,6 @@ def sim_ivfpq_nprobe_sweep(spark, sf_dir):
     recall harness's exact top-10 (production sweeps run it on a held
     -out query sample, not per query)."""
     e = load_tables(spark, sf_dir).embeddings
-    S = int(_DOT_SCALE)
     ex, cent, assign = _pq_fit(e)
     qdf = (
         e.orderBy("vec_id")
@@ -2548,33 +2427,13 @@ def sim_ivfpq_nprobe_sweep(spark, sf_dir):
         "label int, lrank int",
     )
     tiers = local_frame(spark, [(n,) for n in _NPROBE_SWEEP], "nprobe int")
-    qx = ex.filter(F.col("vec_id") == qid).select(
-        "s", "d", F.col("x").alias("qx")
-    )
-    dq = (
-        cent.join(F.broadcast(qx), ["s", "d"])
-        .groupBy("s", "cluster")
-        .agg(
-            F.sum(
-                F.floor(
-                    (F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c")) * F.lit(S)
-                ).cast("long")
-            ).alias("qdist")
-        )
-    )
+    qx, dq = _pq_query(ex, cent, qid)
     cand = (
         e.filter(F.col("vec_id") != F.lit(int(qid)))
         .join(lrank, "label")
         .select("vec_id", "lrank")
     )
-    adc = (
-        assign.join(cand, "vec_id")
-        .join(F.broadcast(dq), ["s", "cluster"])
-        .groupBy("vec_id", "lrank")
-        .agg(F.sum("qdist").alias("adc_dist"))
-    )
-    from pyspark.sql import Window
-
+    adc = _adc_dist(assign.join(cand, "vec_id"), dq, "lrank")
     member = adc.join(tiers, F.col("lrank") <= F.col("nprobe"))
     w_adc = Window.partitionBy("nprobe").orderBy("adc_dist", "vec_id")
     # cached: TWO consumers (the rerank's distinct id set + the served
@@ -2590,17 +2449,7 @@ def sim_ivfpq_nprobe_sweep(spark, sf_dir):
         .cache()
     )
     need = sl.select("vec_id").distinct()
-    exact_term = F.sum(
-        F.floor(
-            (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) * F.lit(S)
-        ).cast("long")
-    )
-    rerank = (
-        ex.join(F.broadcast(need), "vec_id")
-        .join(F.broadcast(qx), ["s", "d"])
-        .groupBy("vec_id")
-        .agg(exact_term.alias("dist_q"))
-    )
+    rerank = _exact_dist(ex.join(F.broadcast(need), "vec_id"), qx, "dist_q")
     w_srv = Window.partitionBy("nprobe").orderBy("dist_q", "vec_id")
     served = (
         sl.join(rerank, "vec_id")
@@ -2608,16 +2457,8 @@ def sim_ivfpq_nprobe_sweep(spark, sf_dir):
         .withColumn("rnk", F.row_number().over(w_srv))
         .filter(F.col("rnk") <= 10)
     )
-    exact_top = (
-        ex.filter(F.col("vec_id") != qid)
-        .join(F.broadcast(qx), ["s", "d"])
-        .groupBy("vec_id")
-        .agg(exact_term.alias("dist"))
-        .orderBy("dist", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(1).alias("one"))
-    )
-    hits = F.sum(F.coalesce(F.col("one"), F.lit(0))).cast("long")
+    exact_top = _exact_top10(ex, qx, qid)
+    hits = F.sum(F.coalesce("hit", F.lit(0))).cast("long")
     return (
         served.join(exact_top, "vec_id", "left")
         .groupBy("nprobe")

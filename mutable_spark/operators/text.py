@@ -19,7 +19,12 @@ bit-identical.
 
 from __future__ import annotations
 
+import functools
+import heapq
+import operator
+
 import pyspark.sql.functions as F
+from pyspark.sql import Window
 
 from mutable_spark.catalog import load_tables
 from mutable_spark.registry import query
@@ -909,13 +914,40 @@ def _bpe_merge_rounds(d, curve=None):
     after round 0 (the character baseline) and each merge round — one
     extra 1-row SUM(freq) aggregate per entry, off by default so the
     train/encode consumers pay nothing (`text_bpe_sweep` opts in)."""
-    words = (
+    return bpe_rounds_from_vocab(_bpe_words(d), curve)
+
+
+def _bpe_words(d):
+    """The (w, freq) distinct-word vocabulary of ``d`` that both BPE
+    trainers learn over."""
+    return (
         d.select(F.explode(_toks()).alias("w"))
         .filter(F.length("w") >= 1)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    return bpe_rounds_from_vocab(words, curve)
+
+
+def _bpe_encode_by(d, *keys):
+    """The trained-tokenizer encode join every BPE consumer aggregates:
+    ``d``'s word stream ⋈ the final symbolization's per-word symbol
+    count n_sym, grouped by ``keys`` — count(*) is whitespace words,
+    sum(n_sym) BPE tokens. Because BPE encode applies rules in learned
+    order, a corpus word's encoding IS its final training symbolization.
+
+    Shuffle-hash with the VOCAB side as build: without the hint,
+    Catalyst (statless checkpointed syms from the distributed arm vs a
+    stats-bearing parquet lineage) broadcasts the exploded DOCUMENT WORD
+    STREAM — the fact side, catastrophic at corpus scale. Vocab is the
+    smaller side but a web-scale corpus's distinct-word set is itself
+    too big to pin as a broadcast, so key-partitioned shuffle hash is
+    the shape that survives 100 TB (plan-pinned in test_plan_shape.py)."""
+    _, syms = _bpe_merge_rounds(d)
+    wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
+    dw = d.select(*keys, F.explode(_toks()).alias("w")).filter(
+        F.length("w") >= 1
+    )
+    return dw.join(wt.hint("shuffle_hash"), "w").groupBy(*keys)
 
 
 #: driver-local fast-path gate for the BPE merge loop — the components
@@ -933,8 +965,8 @@ def _bpe_merge_rounds(d, curve=None):
 #: merge — pinned equal by
 #: tests/test_dedup_scale.py::test_bpe_local_fast_path_equals_distributed.
 #: Sized 100k (r16, was 1M — the r15 advice item): the driver cost is
-#: words × avg-word-length tuples through non-Arrow createDataFrame in
-#: `_bpe_syms_df`, so the gate bounds DRIVER work at ~1M tuples, not
+#: words × avg-word-length symbol tuples built into the final
+#: symbolization frame, so the gate bounds DRIVER work at ~1M tuples, not
 #: tens of millions; 100k distinct words still covers every registered
 #: corpus by orders of magnitude, and the bound also caps the one
 #: discarded limit(MAX+1) collect an above-gate vocabulary pays before
@@ -993,49 +1025,64 @@ def _bpe_local_pair_counts(syms):
     return counts
 
 
-def _bpe_syms_df(spark, syms):
-    """The final local symbolization as the frame the distributed loop
-    returns: (w, freq, pos, sym) with the distributed dtypes."""
-    rows = [
-        (w, f, i, sym) for w, f, s in syms for i, sym in enumerate(s)
-    ]
-    return spark.createDataFrame(
-        rows, "w string, freq long, pos int, sym string"
-    )
+def _bpe_pick(r, pool, batch):
+    """Round ``r``'s accepted rules [(r, sel, a, b, cnt)]: a greedy scan
+    of the ordered (a, b, cnt) ``pool`` keeping up to ``batch`` pairs
+    that share no symbol with an earlier pick (batch 1 = the argmax)."""
+    chosen: list[tuple] = []
+    used: set[str] = set()
+    for a, b, cnt in pool:
+        if len(chosen) == batch:
+            break
+        if a in used or b in used:
+            continue
+        chosen.append((r, len(chosen) + 1, a, b, int(cnt)))
+        used.update((a, b))
+    return chosen
 
 
-def _bpe_local_loop(vocab, curve):
-    """Pure-Python replica of the sequential merge-round loop."""
+def _bpe_local_loop(vocab, rounds, batch, pool, curve):
+    """Pure-Python replica of the distributed merge-round loop."""
     syms = [(w, f, list(w)) for w, f in vocab]
     if curve is not None:
         curve.append((0, sum(f * len(s) for _, f, s in syms)))
-    out_rows = []
-    for r in range(1, _BPE_ROUNDS + 1):
+    out_rows: list[tuple] = []
+    for r in range(1, rounds + 1):
         counts = _bpe_local_pair_counts(syms)
-        if not counts:
+        top = heapq.nsmallest(
+            pool, counts.items(), key=lambda kv: (-kv[1], kv[0])
+        )
+        chosen = _bpe_pick(r, ((a, b, c) for (a, b), c in top), batch)
+        if not chosen:
             break
-        a, b = min(counts, key=lambda p: (-counts[p], p))
-        out_rows.append((r, a, b, int(counts[(a, b)])))
-        ms = {(a, b)}
+        out_rows += chosen
+        ms = {(a, b) for _, _, a, b, _ in chosen}
         syms = [(w, f, _bpe_local_merge(s, ms)) for w, f, s in syms]
         if curve is not None:
             curve.append((r, sum(f * len(s) for _, f, s in syms)))
     return out_rows, syms
 
 
-def bpe_rounds_from_vocab(words, curve=None):
-    """The merge-round loop over a prepared (w, freq) VOCABULARY frame —
-    split out so the streaming compaction (`compact_bpe_rules`) can
-    train over a re-aggregated word-count store with the literal batch
-    loop (stream==batch by construction). See `_bpe_merge_rounds`.
-    Vocabularies at or under `_BPE_LOCAL_MAX_WORDS` take the driver-
-    local fast path (bit-identical rules and symbolization)."""
-    from pyspark.sql import Window
-
+def _bpe_rounds(words, rounds, batch, pool, curve=None):
+    """The one BPE merge-round loop over a prepared (w, freq) VOCABULARY
+    frame, for both trainers' (rounds, batch, pool) shapes: per round,
+    the top-``pool`` pair counts (count DESC, then (a, b)), up to
+    ``batch`` symbol-disjoint rules accepted from them (`_bpe_pick`),
+    and ONE run-parity merge pass applying them all. Returns (rules,
+    syms): [(round, sel, sym_a, sym_b, pair_count)] and the final
+    (w, freq, pos, sym) symbolization frame; ``curve`` as in
+    `_bpe_merge_rounds`. Vocabularies at or under `_BPE_LOCAL_MAX_WORDS`
+    take the driver-local fast path (bit-identical rules and
+    symbolization)."""
+    spark = words.sparkSession
     vocab = _bpe_local_vocab(words)
     if vocab is not None:
-        out_rows, syms_l = _bpe_local_loop(vocab, curve)
-        return out_rows, _bpe_syms_df(words.sparkSession, syms_l)
+        out_rows, syms_l = _bpe_local_loop(vocab, rounds, batch, pool, curve)
+        return out_rows, local_frame(
+            spark,
+            [(w, f, i, sym) for w, f, s in syms_l for i, sym in enumerate(s)],
+            "w string, freq long, pos int, sym string",
+        )
 
     def _track(r, frame):
         if curve is not None:
@@ -1053,23 +1100,29 @@ def bpe_rounds_from_vocab(words, curve=None):
     ).localCheckpoint(eager=False)
     _track(0, syms)
     wnd = Window.partitionBy("w").orderBy("pos")
-    out_rows = []
-    for r in range(1, _BPE_ROUNDS + 1):
+    out_rows: list[tuple] = []
+    for r in range(1, rounds + 1):
         withn = syms.withColumn("nxt", F.lead("sym").over(wnd))
         pairs = withn.filter(F.col("nxt").isNotNull())
-        best = (
+        top = (
             pairs.groupBy("sym", "nxt")
             .agg(F.sum("freq").alias("cnt"))
             .orderBy(F.col("cnt").desc(), "sym", "nxt")
-            .limit(1)
-            .collect()  # 1 row: the round's argmax merge rule
+            .limit(pool)
+            .collect()  # bounded: the fixed-size candidate pool
         )
-        if not best:
+        chosen = _bpe_pick(r, top, batch)
+        if not chosen:
             break
-        a, b, cnt = best[0].sym, best[0].nxt, int(best[0].cnt)
-        out_rows.append((r, a, b, cnt))
+        out_rows += chosen
         match = pairs.filter(
-            (F.col("sym") == a) & (F.col("nxt") == b)
+            functools.reduce(
+                operator.or_,
+                [
+                    (F.col("sym") == a) & (F.col("nxt") == b)
+                    for _, _, a, b, _ in chosen
+                ],
+            )
         ).select("w", "pos")
         runs = match.withColumn(
             "run", F.col("pos") - F.row_number().over(wnd)
@@ -1094,9 +1147,7 @@ def bpe_rounds_from_vocab(words, curve=None):
                 "w",
                 "freq",
                 "pos",
-                F.when(
-                    F.col("is_merge") == 1, F.concat("sym", "nxt")
-                )
+                F.when(F.col("is_merge") == 1, F.concat("sym", "nxt"))
                 .otherwise(F.col("sym"))
                 .alias("sym"),
             )
@@ -1109,6 +1160,17 @@ def bpe_rounds_from_vocab(words, curve=None):
         ).localCheckpoint(eager=False)
         _track(r, syms)
     return out_rows, syms
+
+
+def bpe_rounds_from_vocab(words, curve=None):
+    """The sequential trainer's loop — ``_BPE_ROUNDS`` rounds of one
+    argmax rule each — over a prepared (w, freq) vocabulary frame, split
+    out so the streaming compaction (`compact_bpe_rules`) can train over
+    a re-aggregated word-count store with the literal batch loop
+    (stream==batch by construction). Returns
+    ([(round, sym_a, sym_b, pair_count)], syms); see `_bpe_rounds`."""
+    rules, syms = _bpe_rounds(words, _BPE_ROUNDS, 1, 1, curve)
+    return [(r, a, b, cnt) for r, _, a, b, cnt in rules], syms
 
 
 # --------------------------------------------------------------------------
@@ -1170,13 +1232,7 @@ def text_bpe_train_batched(spark, sf_dir):
     SAME greedy-disjoint selection as ``_BPE_BATCH`` dependent 1-row
     CTEs per round, so every accepted rule is hash-checked."""
     d = load_tables(spark, sf_dir).documents
-    words = (
-        d.select(F.explode(_toks()).alias("w"))
-        .filter(F.length("w") >= 1)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    rules, _ = bpe_batched_rounds_from_vocab(words)
+    rules, _ = bpe_batched_rounds_from_vocab(_bpe_words(d))
     return local_frame(
         spark,
         rules,
@@ -1184,126 +1240,12 @@ def text_bpe_train_batched(spark, sf_dir):
     )
 
 
-def _bpe_local_batched_loop(vocab):
-    """Pure-Python replica of the batched merge-round loop: per round,
-    the top-`_BPE_BATCH_POOL` pool ordered (count DESC, (a, b)), the
-    greedy symbol-disjoint selection of up to `_BPE_BATCH` rules, one
-    multi-rule run-parity pass."""
-    syms = [(w, f, list(w)) for w, f in vocab]
-    out_rows: list[tuple] = []
-    for r in range(1, _BPE_BATCH_ROUNDS + 1):
-        counts = _bpe_local_pair_counts(syms)
-        pool = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[
-            :_BPE_BATCH_POOL
-        ]
-        chosen: list[tuple] = []
-        used: set[str] = set()
-        for (a, b), cnt in pool:
-            if len(chosen) == _BPE_BATCH:
-                break
-            if a in used or b in used:
-                continue
-            chosen.append((a, b, int(cnt)))
-            used.update((a, b))
-        if not chosen:
-            break
-        for sel, (a, b, cnt) in enumerate(chosen, start=1):
-            out_rows.append((r, sel, a, b, cnt))
-        ms = {(a, b) for a, b, _ in chosen}
-        syms = [(w, f, _bpe_local_merge(s, ms)) for w, f, s in syms]
-    return out_rows, syms
-
-
 def bpe_batched_rounds_from_vocab(words):
-    """The batched merge-round loop over a prepared (w, freq) vocabulary
-    frame. Returns (rules, syms) with rules =
-    [(round, sel, sym_a, sym_b, pair_count)] and syms the final
-    symbolization frame (same contract as `bpe_rounds_from_vocab`).
-    Takes the same `_BPE_LOCAL_MAX_WORDS` driver-local fast path."""
-    from pyspark.sql import Window
-
-    spark = words.sparkSession
-    vocab = _bpe_local_vocab(words)
-    if vocab is not None:
-        out_rows, syms_l = _bpe_local_batched_loop(vocab)
-        return out_rows, _bpe_syms_df(spark, syms_l)
-    syms = words.select(
-        "w",
-        "freq",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("w")),
-                lambda i: F.col("w").substr(i, F.lit(1)),
-            )
-        ).alias("pos", "sym"),
-    ).localCheckpoint(eager=False)
-    wnd = Window.partitionBy("w").orderBy("pos")
-    out_rows: list[tuple] = []
-    for r in range(1, _BPE_BATCH_ROUNDS + 1):
-        withn = syms.withColumn("nxt", F.lead("sym").over(wnd))
-        pairs = withn.filter(F.col("nxt").isNotNull())
-        pool = (
-            pairs.groupBy("sym", "nxt")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), "sym", "nxt")
-            .limit(_BPE_BATCH_POOL)
-            .collect()  # bounded: the fixed 64-row candidate pool
-        )
-        chosen: list[tuple] = []
-        used: set[str] = set()
-        for row in pool:
-            if len(chosen) == _BPE_BATCH:
-                break
-            if row.sym in used or row.nxt in used:
-                continue
-            chosen.append((row.sym, row.nxt, int(row.cnt)))
-            used.update((row.sym, row.nxt))
-        if not chosen:
-            break
-        for sel, (a, b, cnt) in enumerate(chosen, start=1):
-            out_rows.append((r, sel, a, b, cnt))
-        rules_df = local_frame(
-            spark, [(a, b) for a, b, _ in chosen], "ra string, rb string"
-        )
-        match = pairs.join(
-            F.broadcast(rules_df),
-            (F.col("sym") == F.col("ra")) & (F.col("nxt") == F.col("rb")),
-        ).select("w", "pos")
-        runs = match.withColumn(
-            "run", F.col("pos") - F.row_number().over(wnd)
-        )
-        kept = (
-            runs.withColumn(
-                "off",
-                F.col("pos")
-                - F.min("pos").over(Window.partitionBy("w", "run")),
-            )
-            .filter(F.col("off") % 2 == 0)
-            .select("w", "pos", F.lit(1).alias("is_merge"))
-        )
-        consumed = kept.select(
-            "w", (F.col("pos") + 1).alias("pos"), F.lit(1).alias("gone")
-        )
-        rebuilt = (
-            withn.join(kept, ["w", "pos"], "left")
-            .join(consumed, ["w", "pos"], "left")
-            .filter(F.col("gone").isNull())
-            .select(
-                "w",
-                "freq",
-                "pos",
-                F.when(F.col("is_merge") == 1, F.concat("sym", "nxt"))
-                .otherwise(F.col("sym"))
-                .alias("sym"),
-            )
-        )
-        syms = rebuilt.select(
-            "w",
-            "freq",
-            (F.row_number().over(wnd) - 1).alias("pos"),
-            "sym",
-        ).localCheckpoint(eager=False)
-    return out_rows, syms
+    """The batched trainer's loop — `_bpe_rounds` at
+    (``_BPE_BATCH_ROUNDS``, ``_BPE_BATCH``, ``_BPE_BATCH_POOL``) — over a
+    prepared (w, freq) vocabulary frame. Returns (rules, syms) with
+    rules = [(round, sel, sym_a, sym_b, pair_count)]."""
+    return _bpe_rounds(words, _BPE_BATCH_ROUNDS, _BPE_BATCH, _BPE_BATCH_POOL)
 
 
 def _bpe_batched_fragments():
@@ -1473,18 +1415,9 @@ def text_bpe_fertility(spark, sf_dir):
     only the encode join (the `text_bpe_encode` plan contract: vocab
     side ShuffledHashJoin, plan-pinned there)."""
     d = load_tables(spark, sf_dir).documents
-    _, syms = _bpe_merge_rounds(d)
-    wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
-    dw = d.select(
-        "doc_id", "lang", F.explode(_toks()).alias("w")
-    ).filter(F.length("w") >= 1)
-    per_doc = (
-        dw.join(wt.hint("shuffle_hash"), "w")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_ws"),
-            F.sum("n_sym").alias("n_bpe"),
-        )
+    per_doc = _bpe_encode_by(d, "doc_id", "lang").agg(
+        F.count(F.lit(1)).alias("n_ws"),
+        F.sum("n_sym").alias("n_bpe"),
     )
     return (
         per_doc.groupBy("lang")
@@ -1535,8 +1468,9 @@ def text_bpe_encode(spark, sf_dir):
 
     Because BPE encoding applies merge rules in learned order, a
     corpus word's encoding IS its final training-loop symbolization —
-    so the encode path reuses `_bpe_merge_rounds`' final syms frame
-    directly: symbols-per-word is one vocabulary-sized groupBy, and the
+    so the encode path (`_bpe_encode_by`, shared by every BPE consumer)
+    reuses `_bpe_merge_rounds`' final syms frame directly:
+    symbols-per-word is one vocabulary-sized groupBy, and the
     per-document count is one (doc word stream ⋈ vocab) join + one
     doc-keyed partial agg. Corpus size enters ONLY the last join/agg
     (linear, key-partitioned); all merge arithmetic stays on the
@@ -1544,19 +1478,7 @@ def text_bpe_encode(spark, sf_dir):
     `text_bpe_train` and joins the final symbolization back to the
     document word stream — counts hash-checked end to end."""
     d = load_tables(spark, sf_dir).documents
-    _, syms = _bpe_merge_rounds(d)
-    wt = syms.groupBy("w").agg(F.count(F.lit(1)).alias("n_sym"))
-    dw = d.select("doc_id", F.explode(_toks()).alias("w")).filter(
-        F.length("w") >= 1
-    )
-    # shuffle-hash with the VOCAB side as build: without the hint,
-    # Catalyst (statless checkpointed syms vs a stats-bearing parquet
-    # lineage) broadcasts the exploded DOCUMENT WORD STREAM — the fact
-    # side, catastrophic at corpus scale. Vocab is the smaller side but
-    # a web-scale corpus's distinct-word set is itself too big to pin
-    # as a broadcast, so key-partitioned shuffle hash is the shape that
-    # survives 100 TB (plan-pinned in test_plan_shape.py).
-    return dw.join(wt.hint("shuffle_hash"), "w").groupBy("doc_id").agg(
+    return _bpe_encode_by(d, "doc_id").agg(
         F.count(F.lit(1)).alias("n_ws_tokens"),
         F.sum("n_sym").alias("n_bpe_tokens"),
     )
@@ -1677,8 +1599,6 @@ def text_tfidf_terms(spark, sf_dir):
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")).cache()
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    from pyspark.sql import Window
-
     scored = (
         tf.join(dfreq, "tok")
         .crossJoin(n)

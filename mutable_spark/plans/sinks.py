@@ -20,16 +20,19 @@ widens FLOAT columns to 64-bit on collect, the formatter is dtype-aware:
 ``print_result`` reads the DataFrame schema and applies the FLOAT format
 to FloatType columns.
 
-``to_local_iterator`` is the scale-safe callback path: it streams
-partitions to the driver one at a time instead of materializing the whole
-result (`collect`), which is what you want when the result itself is big.
+``print_result`` and ``callback_result`` are the scale-safe paths: they
+stream partitions to the driver one at a time (`toLocalIterator`) instead
+of materializing the whole result (`collect`), which is what you want when
+the result itself is big. ``callback_result`` is also the embeddable API
+surface (`m::execute_query` with a caller consumer,
+`src/mutable.cpp:322-383`).
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import sys
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import IO
 
 import math
@@ -85,9 +88,3 @@ def noop_result(df: DataFrame) -> int:
     reference's version: `count()` prunes every column and aggregates
     partially per partition — no result materialization at all."""
     return df.count()
-
-
-def iter_result(df: DataFrame) -> Iterator[Row]:
-    """The embeddable API surface (`m::execute_query` with a caller
-    consumer, `src/mutable.cpp:322-383`)."""
-    return df.toLocalIterator()

@@ -28,23 +28,27 @@ def test_register_plan_enumerator_reaches_the_planner():
         return tree
 
     E.register_plan_enumerator("test-rightdeep", rightdeep, replace=True)
-    cards = Cardinalities(base={"a": 10, "b": 20, "c": 30})
-    p = JoinPlanner(cards, enumerator="test-rightdeep")
-    tree = p.plan(["a", "b", "c"], {frozenset("ab"), frozenset("bc")})
-    assert tree == ("a", ("b", "c"))
-    assert calls  # the registered component really ran
+    try:
+        cards = Cardinalities(base={"a": 10, "b": 20, "c": 30})
+        p = JoinPlanner(cards, enumerator="test-rightdeep")
+        tree = p.plan(["a", "b", "c"], {frozenset("ab"), frozenset("bc")})
+        assert tree == ("a", ("b", "c"))
+        assert calls  # the registered component really ran
 
-    # None -> GOO fallback (left-deep order comes back)
-    E.register_plan_enumerator(
-        "test-none", lambda a, e, c: None, replace=True
-    )
-    p2 = JoinPlanner(cards, enumerator="test-none")
-    t2 = p2.plan(["a", "b", "c"], {frozenset("ab"), frozenset("bc")})
-    assert isinstance(t2, tuple)  # a plan still comes out
+        # None -> GOO fallback (left-deep order comes back)
+        E.register_plan_enumerator(
+            "test-none", lambda a, e, c: None, replace=True
+        )
+        p2 = JoinPlanner(cards, enumerator="test-none")
+        t2 = p2.plan(["a", "b", "c"], {frozenset("ab"), frozenset("bc")})
+        assert isinstance(t2, tuple)  # a plan still comes out
 
-    # duplicates raise without replace
-    with pytest.raises(ValueError):
-        E.register_plan_enumerator("test-rightdeep", rightdeep)
+        # duplicates raise without replace
+        with pytest.raises(ValueError):
+            E.register_plan_enumerator("test-rightdeep", rightdeep)
+    finally:
+        E.PLAN_ENUMERATORS.pop("test-rightdeep", None)
+        E.PLAN_ENUMERATORS.pop("test-none", None)
 
 
 def test_builtin_enumerator_names_are_registry_entries():

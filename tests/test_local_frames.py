@@ -113,11 +113,10 @@ def test_local_frame_round_trips_like_create_dataframe(spark):
 
 
 #: (file under mutable_spark/, enclosing function) pairs allowed to call
-#: `createDataFrame` directly: the helper itself, and two join inputs
+#: `createDataFrame` directly: the helper itself, and one join input
 #: whose join strategy the plan-shape tests pin.
 _ALLOWED = {
     ("session.py", "local_frame"),
-    ("operators/text.py", "_bpe_syms_df"),
     ("operators/dedup.py", "connected_components"),
 }
 

@@ -1138,13 +1138,13 @@ def test_bpe_encode_shuffle_hash_vocab_build(plans):
     assert "BroadcastHashJoin" not in p, p
     assert "ShuffledHashJoin" in p and "BuildRight" in p
     assert "CartesianProduct" not in p
-    # r15 opt: 3 exchanges with the ≤1M-word driver-local trainer (the
-    # vocab build side is a driver-built Python-RDD frame — `Scan
-    # ExistingRDD`, from `_bpe_syms_df` — so its shuffle onto w no
-    # longer reuses the training loop's window partitioning — that
-    # exchange carries only the gated vocabulary, bounded by the fast
-    # path's own contract; the doc-stream exchange and the doc_id
-    # rollup are unchanged)
+    # r15 opt: 3 exchanges with the driver-local trainer (the vocab
+    # build side is a driver-built `LocalTableScan`, the final
+    # symbolization `_bpe_rounds` hands to `session.local_frame` — so
+    # its shuffle onto w no longer reuses the training loop's window
+    # partitioning — that exchange carries only the gated vocabulary,
+    # bounded by the fast path's own contract; the doc-stream exchange
+    # and the doc_id rollup are unchanged)
     assert len(re.findall(r"\(\d+\) Exchange\b", p)) == 3, p
 
 

@@ -142,6 +142,35 @@ def test_ivf_train_stable_under_input_scramble(spark):
     assert base == scrambled
 
 
+def test_ivfpq_search_stable_under_input_scramble(spark):
+    """The PQ serving steps — the ADC table, the shortlist ADC sums, the
+    exact rerank and the exact top-10 — sum scaled longs and rank on
+    (dist, vec_id) total orders, so scrambling the embeddings' partition
+    layout and row order must leave the served rows bit-identical."""
+    from mutable_spark.catalog import load_tables
+    from mutable_spark.operators.similarity import sim_ivfpq_search
+    from mutable_spark.session import state
+
+    base = sorted(tuple(r) for r in sim_ivfpq_search(spark, SF_DIR).collect())
+
+    load_tables(spark, SF_DIR)
+    frames = state(spark).frames
+    key = next(k for k in frames if k[0] == SF_DIR.rstrip("/") and k[1] == "embeddings")
+    saved = frames[key]
+    try:
+        frames[key] = (
+            saved.repartition(13, F.xxhash64("vec_id"))
+            .sortWithinPartitions(F.col("vec_id").desc())
+        )
+        scrambled = sorted(
+            tuple(r) for r in sim_ivfpq_search(spark, SF_DIR).collect()
+        )
+    finally:
+        frames[key] = saved
+    assert len(base) == 10
+    assert base == scrambled
+
+
 def test_quantized_rerank_full_recall(spark):
     """The int8 coarse stage's top-50 shortlist captures the entire exact
     top-10 on the test corpus (recall@10 = 1.0): the quantization error
