@@ -89,9 +89,11 @@ class Source:
     table: str | None = None
 
 
-#: grouped-sort outputs the estimator bounds at or below this many rows
-#: plan a single-partition sort (no range exchange, no sampling job)
-_TINY_SORT_ROWS = 4096
+#: a grouped ORDER BY whose group count the catalog's row bounds cap at
+#: or below this many rows sorts in one partition: no range exchange and
+#: no boundary-sampling job. One task sorting 150k groups beat the range
+#: sort on 4 cores; at 600k groups it lost (SCALE.md)
+_ONE_PARTITION_SORT_ROWS = 2**18
 
 #: comparison ops SpnTableModel understands (plans/spn.py leaf likelihoods)
 _SPN_OPS = {"<", "<=", ">", ">=", "="}
@@ -190,7 +192,9 @@ def _spn_filter_dict(conjuncts: list[A.Node]) -> dict:
 
 
 class Compiler:
-    def __init__(self, tables: dict[str, DataFrame], planner=None, zone_indexes=None):
+    def __init__(
+        self, tables: dict[str, DataFrame], planner=None, zone_indexes=None, row_bounds=None
+    ):
         self.tables = tables
         #: {table: {column: ZoneIndex}} for parquet-backed tables with a
         #: CREATE INDEX — the scan path swaps Filter∘Scan for a
@@ -198,6 +202,9 @@ class Compiler:
         #: over an indexed column (reference physical optimizer:
         #: `src/backend/WasmOperator.hpp:397-405` IndexScan replacement)
         self.zone_indexes: dict[str, dict[str, object]] = zone_indexes or {}
+        #: {table: upper bound on its row count, or None} — what the
+        #: grouped-sort gate (`_groups_fit_one_partition`) multiplies
+        self.row_bounds: dict[str, int | None] = row_bounds or {}
         #: optional JoinPlanner (plans/planner.py): GOO join ordering from
         #: injected/footer cardinalities + broadcast decisions — the
         #: reference's plan-enumerator/estimator surface (SURVEY §4.1)
@@ -309,14 +316,14 @@ class Compiler:
         else:
             df = df.select(*out_cols)
         if sort_cols:
-            if stmt.limit is None and self._grouped_sort_is_tiny(stmt, sources):
-                # estimator-driven sort strategy: a global ORDER BY plans
-                # a rangepartitioning Exchange whose RangePartitioner runs
-                # a separate boundary-SAMPLING job — pure overhead when
-                # the sort input is a grouped aggregate the estimator
-                # bounds at a few thousand rows. SinglePartition satisfies
-                # OrderedDistribution outright, so coalesce(1) below the
-                # sort removes both the exchange and the sampling job.
+            if stmt.limit is None and self._groups_fit_one_partition(stmt):
+                # a global ORDER BY plans a rangepartitioning Exchange
+                # whose RangePartitioner runs a separate boundary-SAMPLING
+                # job — pure overhead when the sort input is a grouped
+                # aggregate the row bounds keep small. SinglePartition
+                # satisfies OrderedDistribution outright, so coalesce(1)
+                # below the sort removes both the exchange and the
+                # sampling job, as the reference sorts on one node.
                 # LIMIT queries skip this (sort+limit already plans
                 # TakeOrderedAndProject, SURVEY §2.7).
                 df = df.coalesce(1)
@@ -330,69 +337,38 @@ class Compiler:
         return df
 
     # ------------------------------------------------------------------
-    def _grouped_sort_is_tiny(self, stmt: A.SelectStmt, sources) -> bool:
-        """Estimator gate for the single-partition sort strategy: True
-        when every GROUP BY key is a plain designator on a source whose
-        attached SPN model bounds the distinct-count PRODUCT at or below
-        ``_TINY_SORT_ROWS`` (``SpnTableModel.estimate_distinct`` — the
-        reference's `Spn::estimate_number_distinct_values`, `Spn.cpp:946`,
-        surfaced as a physical-sort decision instead of a join-order
-        input). The product over keys is an upper bound on the aggregate's
-        output rows, so the gate can only be conservative: any
-        non-designator key, unresolvable source, or missing model keeps
-        the scale-safe range sort.
-
-        Sample-coverage guard: ``estimate_distinct`` reports the distinct
-        count OF THE SAMPLE — for a table larger than ``SAMPLE_CAP`` a
-        long-tailed key can hide arbitrarily many unseen values, so a
-        bounded sample can NEVER bound the group count and the gate
-        trusts only models that saw every row (n_rows ≤ SAMPLE_CAP).
-        That is the honest scope of the optimization: dim-scale tables
-        and shell sessions, never a sampled fact table."""
-        models = getattr(self.planner, "spn_models", None) if self.planner else None
-        if not models or not stmt.group_by:
+    def _groups_fit_one_partition(self, stmt: A.SelectStmt) -> bool:
+        """Gate for the single-partition sort: True when GROUP BY's group
+        count is at most ``_ONE_PARTITION_SORT_ROWS``. Every group key is
+        a function of the rows of the sources its designators name, so
+        the product of those sources' row bounds caps the group count;
+        the bounds come from the catalog, so the gate runs no Spark job.
+        A source of unknown bound (a FROM-subquery, a frame Catalyst
+        cannot bound) keeps the scale-safe range sort. Sema admits no
+        nested query in a group key, so the designators are all a key
+        reads."""
+        if not stmt.group_by:
             return False
-        from mutable_spark.plans.spn import SAMPLE_CAP
-        alias_table = {
-            s.alias: r.name
-            for s, r in zip(sources, stmt.from_)
-            if r.name is not None
-        }
-        est = 1
-        for g in stmt.group_by:
-            e = g.expr
-            if not isinstance(e, A.Designator):
-                return False
-            owners = [
-                s
-                for s in sources
-                if e.table in (None, s.alias) and e.attr in s.attrs
-            ]
-            if len(owners) != 1:
-                return False
-            m = models.get(owners[0].alias)
-            if m is None:
-                m = models.get(alias_table.get(owners[0].alias))
-            if m is None:
-                return False
-            if getattr(m, "n_rows", SAMPLE_CAP + 1) > SAMPLE_CAP:
-                return False  # sampled model: distincts are not bounded
-            try:
-                est *= int(m.estimate_distinct(e.attr))
-            except (KeyError, ValueError, TypeError):
-                return False
-            if est > _TINY_SORT_ROWS:
-                return False
-        return True
+        owners = set().union(*(self._sources_of(g.expr) for g in stmt.group_by))
+        bound = 1
+        for s in self.sources:
+            if s.alias in owners:
+                rows = self.row_bounds.get(s.table)
+                if rows is None:
+                    return False
+                bound *= rows
+        return bound <= _ONE_PARTITION_SORT_ROWS
+
+    def _sub(self) -> "Compiler":
+        """A compiler for a nested query, over the same catalog state."""
+        return Compiler(self.tables, self.planner, self.zone_indexes, self.row_bounds)
 
     # ------------------------------------------------------------------
     def _bind_sources(self, stmt: A.SelectStmt) -> list[Source]:
         sources: list[Source] = []
         for ref in stmt.from_:
             if ref.subquery is not None:
-                sub = Compiler(
-                    self.tables, self.planner, self.zone_indexes
-                ).compile_select(ref.subquery)
+                sub = self._sub().compile_select(ref.subquery)
                 alias = ref.alias
                 base = sub
             else:
@@ -794,7 +770,7 @@ class Compiler:
                 limit=inner.limit,
                 offset=inner.offset,
             )
-            sub = Compiler(self.tables, self.planner, self.zone_indexes).compile_select(sub_stmt)
+            sub = self._sub().compile_select(sub_stmt)
             self.subq_map.append((qe, name, dict(sub.dtypes)[name]))
             # enforce scalar (≤1 row) semantics at runtime: probe at most 2
             # rows, then raise if a second exists — otherwise
@@ -827,7 +803,7 @@ class Compiler:
             where=remaining,
             group_by=[A.GroupItem(d, alias=f"{name}_k{j}") for j, (d, _) in enumerate(corr)],
         )
-        sub = Compiler(self.tables, self.planner, self.zone_indexes).compile_select(sub_stmt)
+        sub = self._sub().compile_select(sub_stmt)
         cond = None
         for j, (_, outer_d) in enumerate(corr):
             oc, _t = self._resolve(outer_d)

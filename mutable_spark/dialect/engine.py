@@ -14,8 +14,9 @@ the CHECK probe) become JVM local relations through
 
 The engine's catalog (`Catalog`, db → name → `Table`) is the reference's
 `Schema.hpp:869` Database of `Schema.hpp:387` Tables: each `Table` owns
-its rows, declared schema, CHAR limits, backing parquet path and
-file-zone indexes, so dropping a table or database drops all of them.
+its rows, declared schema, CHAR limits, backing parquet path, file-zone
+indexes and row-count bound, so dropping a table or database drops all
+of them.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from mutable_spark.dialect import ast_nodes as A
 from mutable_spark.dialect.compiler import Compiler
 from mutable_spark.dialect.parser import parse
 from mutable_spark.dialect.sema import SemaError
+from mutable_spark.plans.planner import parquet_row_count
 from mutable_spark.session import DecimalRangeError, local_frame
 from mutable_spark.sources.dsv import import_dsv, truncate_chars
 
@@ -104,22 +106,33 @@ class Table:
     index. ``zones`` maps a column to that index; the compiler's scan
     path prunes with it (the reference's physical optimizer replaces
     Filter∘Scan with IndexScan the same way,
-    `src/backend/WasmOperator.hpp:397-405`)."""
+    `src/backend/WasmOperator.hpp:397-405`). ``rows`` is an upper bound
+    on the row count, kept on the driver by every statement that writes
+    the table (``None`` when unknown); the compiler sizes a grouped
+    ORDER BY's sort from it without a Spark job."""
 
     df: DataFrame
     schema: T.StructType
     char_limits: dict[str, int] = field(default_factory=dict)
     path: str | None = None
     zones: dict[str, object] = field(default_factory=dict)
+    rows: int | None = None
 
-    def write(self, df: DataFrame) -> None:
-        """Replace the rows. They no longer equal the backing parquet
-        files, so the path and the file-zone indexes go with them and the
-        pruned-scan swap can never serve stale data (the CREATE INDEX
-        metadata stays, as the reference keeps the index object)."""
+    def write(self, df: DataFrame, rows: int | None) -> None:
+        """Replace the rows with ``df``, at most ``rows`` of them. They no
+        longer equal the backing parquet files, so the path and the
+        file-zone indexes go with them and the pruned-scan swap can never
+        serve stale data (the CREATE INDEX metadata stays, as the
+        reference keeps the index object)."""
         self.df = df
+        self.rows = rows
         self.path = None
         self.zones = {}
+
+    def grow(self, df: DataFrame, added: int | None) -> None:
+        """Append ``df``, which holds at most ``added`` rows."""
+        rows = None if self.rows is None or added is None else self.rows + added
+        self.write(self.df.unionByName(df), rows)
 
 
 @dataclass
@@ -207,29 +220,37 @@ class Engine:
         self.catalog = Catalog()
 
     # -- bulk registration of existing DataFrames (testdata interop) -----
-    def register(self, name: str, df: DataFrame) -> None:
+    def register(self, name: str, df: DataFrame, rows: int | None = None) -> None:
+        """Add ``df`` as table ``name``. Its row bound is ``rows`` when
+        given, else the analyzed plan's ``maxRows`` when Catalyst defines
+        one (a local relation, a LIMIT), else unknown."""
         if self.catalog.current is None:
             self.catalog.create_database("default")
             self.catalog.use("default")
-        self.catalog.create_table(name, Table(df, df.schema))
+        if rows is None:
+            bound = df._jdf.queryExecution().analyzed().maxRows()
+            rows = bound.get() if bound.isDefined() else None
+        self.catalog.create_table(name, Table(df, df.schema, rows=rows))
 
     def create_table_from_parquet(self, name: str, path: str) -> None:
         """Register a table served directly from a parquet directory — the
         engine's analogue of a reference table whose Store lives in files.
         Recording the backing path is what lets ``CREATE INDEX`` build a
         real file-zone index over the layout (see ``_execute_create_index``)
-        and the compiler prune the scan through it."""
-        self.register(name, self.spark.read.parquet(path))
+        and the compiler prune the scan through it; the row bound comes
+        from the footers."""
+        self.register(name, self.spark.read.parquet(path), parquet_row_count(path))
         self.catalog.record(name).path = path
 
     def _compiler(self) -> Compiler:
-        """A SELECT compiler over the current database's tables and the
-        file-zone indexes of its parquet-backed ones."""
+        """A SELECT compiler over the current database's tables, the
+        file-zone indexes of its parquet-backed ones and their row bounds."""
         db = self.catalog._db()
         return Compiler(
             {name: t.df for name, t in db.items()},
             self.planner,
             zone_indexes={name: t.zones for name, t in db.items()},
+            row_bounds={name: t.rows for name, t in db.items()},
         )
 
     def execute(self, text: str) -> DataFrame | None:
@@ -255,7 +276,7 @@ class Engine:
                 if c.type_name in ("CHAR", "VARCHAR") and c.params
             }
             df = local_frame(self.spark, [], schema)
-            self.catalog.create_table(stmt.name, Table(df, schema, limits))
+            self.catalog.create_table(stmt.name, Table(df, schema, limits, rows=0))
             return None
         if isinstance(stmt, A.DropStmt):
             self._execute_drop(stmt)
@@ -282,15 +303,14 @@ class Engine:
                     f"value {e.value} out of range for attribute "
                     f"{e.field.name!r} of type {e.field.dataType.simpleString()}"
                 ) from None
-            t.write(t.df.unionByName(truncate_chars(new, t.char_limits)))
+            t.grow(truncate_chars(new, t.char_limits), len(rows))
             return None
         if isinstance(stmt, A.ImportDSVStmt):
             t = self.catalog.record(stmt.table)
             # IMPORT-to-store: parse DSV once, serve queries from the
             # engine's columnar layout — the reference's IMPORT semantics
             # (`src/mutable.cpp:263-292` copies into the Store).
-            imported = import_dsv(self.spark, stmt, t.schema, t.char_limits)
-            t.write(t.df.unionByName(imported))
+            t.grow(*import_dsv(self.spark, stmt, t.schema, t.char_limits))
             return None
         if isinstance(stmt, A.UpdateStmt):
             return self._execute_update(stmt)
@@ -352,14 +372,14 @@ class Engine:
 
         t = self.catalog.record(stmt.table)
         if stmt.where is None:
-            t.write(t.df.limit(0))
+            t.write(t.df.limit(0), 0)
             return None
         self._reject_aggregates(stmt.where, "WHERE clause")
         out = self._compile_row_exprs(stmt.table, [("__pred", stmt.where)])
         if not isinstance(out.schema["__pred"].dataType, T.BooleanType):
             raise SemaError("WHERE clause must be of type BOOL")
         # DELETE removes rows where the predicate is TRUE; NULL keeps
-        t.write(out.filter(~F.coalesce(F.col("__pred"), F.lit(False))).drop("__pred"))
+        t.write(out.filter(~F.coalesce(F.col("__pred"), F.lit(False))).drop("__pred"), t.rows)
         return None
 
     def _execute_update(self, stmt: A.UpdateStmt) -> None:
@@ -411,7 +431,7 @@ class Engine:
                 new_cols.append(F.when(pred, v).otherwise(F.col(c)).alias(c))
             else:
                 new_cols.append(F.col(c))
-        t.write(out.select(*new_cols))
+        t.write(out.select(*new_cols), t.rows)
         return None
 
     # -- DDL sema + execution (`Sema.cpp:1431-1788` Drop*/CreateIndex) ----

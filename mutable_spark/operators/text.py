@@ -895,13 +895,13 @@ def text_bpe_train(spark, sf_dir):
     pattern) with the argmax as 1-row CTEs, so the learned rules are
     hash-checked end to end."""
     d = load_tables(spark, sf_dir).documents
-    rules, _ = _bpe_merge_rounds(d)
+    rules, _ = _bpe_merge_rounds(d, symbols=False)
     return local_frame(
         spark, rules, "round long, sym_a string, sym_b string, pair_count long"
     )
 
 
-def _bpe_merge_rounds(d, curve=None):
+def _bpe_merge_rounds(d, curve=None, symbols=True):
     """Shared BPE training loop: ``_BPE_ROUNDS`` of (corpus-wide argmax
     rule → greedy run-parity merge → rebuild) over the distinct-word
     vocabulary frame of ``d``. Returns (rules, syms): the learned merge
@@ -913,8 +913,9 @@ def _bpe_merge_rounds(d, curve=None):
     ``curve`` is a list, it additionally receives (round, n_tokens)
     after round 0 (the character baseline) and each merge round — one
     extra 1-row SUM(freq) aggregate per entry, off by default so the
-    train/encode consumers pay nothing (`text_bpe_sweep` opts in)."""
-    return bpe_rounds_from_vocab(_bpe_words(d), curve)
+    train/encode consumers pay nothing (`text_bpe_sweep` opts in).
+    ``symbols`` as in `_bpe_rounds`."""
+    return bpe_rounds_from_vocab(_bpe_words(d), curve, symbols)
 
 
 def _bpe_words(d):
@@ -1063,7 +1064,7 @@ def _bpe_local_loop(vocab, rounds, batch, pool, curve):
     return out_rows, syms
 
 
-def _bpe_rounds(words, rounds, batch, pool, curve=None):
+def _bpe_rounds(words, rounds, batch, pool, curve=None, symbols=True):
     """The one BPE merge-round loop over a prepared (w, freq) VOCABULARY
     frame, for both trainers' (rounds, batch, pool) shapes: per round,
     the top-``pool`` pair counts (count DESC, then (a, b)), up to
@@ -1073,11 +1074,15 @@ def _bpe_rounds(words, rounds, batch, pool, curve=None):
     (w, freq, pos, sym) symbolization frame; ``curve`` as in
     `_bpe_merge_rounds`. Vocabularies at or under `_BPE_LOCAL_MAX_WORDS`
     take the driver-local fast path (bit-identical rules and
-    symbolization)."""
+    symbolization). A caller that ships only the rules passes
+    ``symbols=False`` and gets None for syms: the local arm then skips
+    turning every (word, pos) symbol into a frame row."""
     spark = words.sparkSession
     vocab = _bpe_local_vocab(words)
     if vocab is not None:
         out_rows, syms_l = _bpe_local_loop(vocab, rounds, batch, pool, curve)
+        if not symbols:
+            return out_rows, None
         return out_rows, local_frame(
             spark,
             [(w, f, i, sym) for w, f, s in syms_l for i, sym in enumerate(s)],
@@ -1159,17 +1164,17 @@ def _bpe_rounds(words, rounds, batch, pool, curve=None):
             "sym",
         ).localCheckpoint(eager=False)
         _track(r, syms)
-    return out_rows, syms
+    return out_rows, syms if symbols else None
 
 
-def bpe_rounds_from_vocab(words, curve=None):
+def bpe_rounds_from_vocab(words, curve=None, symbols=True):
     """The sequential trainer's loop — ``_BPE_ROUNDS`` rounds of one
     argmax rule each — over a prepared (w, freq) vocabulary frame, split
     out so the streaming compaction (`compact_bpe_rules`) can train over
     a re-aggregated word-count store with the literal batch loop
     (stream==batch by construction). Returns
     ([(round, sym_a, sym_b, pair_count)], syms); see `_bpe_rounds`."""
-    rules, syms = _bpe_rounds(words, _BPE_ROUNDS, 1, 1, curve)
+    rules, syms = _bpe_rounds(words, _BPE_ROUNDS, 1, 1, curve, symbols)
     return [(r, a, b, cnt) for r, _, a, b, cnt in rules], syms
 
 
@@ -1232,7 +1237,7 @@ def text_bpe_train_batched(spark, sf_dir):
     SAME greedy-disjoint selection as ``_BPE_BATCH`` dependent 1-row
     CTEs per round, so every accepted rule is hash-checked."""
     d = load_tables(spark, sf_dir).documents
-    rules, _ = bpe_batched_rounds_from_vocab(_bpe_words(d))
+    rules, _ = bpe_batched_rounds_from_vocab(_bpe_words(d), symbols=False)
     return local_frame(
         spark,
         rules,
@@ -1240,12 +1245,12 @@ def text_bpe_train_batched(spark, sf_dir):
     )
 
 
-def bpe_batched_rounds_from_vocab(words):
+def bpe_batched_rounds_from_vocab(words, symbols=True):
     """The batched trainer's loop — `_bpe_rounds` at
     (``_BPE_BATCH_ROUNDS``, ``_BPE_BATCH``, ``_BPE_BATCH_POOL``) — over a
     prepared (w, freq) vocabulary frame. Returns (rules, syms) with
     rules = [(round, sel, sym_a, sym_b, pair_count)]."""
-    return _bpe_rounds(words, _BPE_BATCH_ROUNDS, _BPE_BATCH, _BPE_BATCH_POOL)
+    return _bpe_rounds(words, _BPE_BATCH_ROUNDS, _BPE_BATCH, _BPE_BATCH_POOL, symbols=symbols)
 
 
 def _bpe_batched_fragments():
@@ -1362,7 +1367,7 @@ def text_bpe_sweep(spark, sf_dir):
     the same chained round fragments, one SUM per s_r CTE."""
     curve = []
     d = load_tables(spark, sf_dir).documents
-    _bpe_merge_rounds(d, curve=curve)
+    _bpe_merge_rounds(d, curve=curve, symbols=False)
     # a merge-less round leaves the symbolization (and the oracle's
     # s_{r+1} CTE) unchanged — pad to the oracle's fixed row count
     while len(curve) < _BPE_ROUNDS + 1:

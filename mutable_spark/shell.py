@@ -177,11 +177,9 @@ def _register_builtin_instructions() -> None:
             return None
         table, path = parts[0], parts[1].strip()
         eng.create_table_from_parquet(table, path)
-        # footer-metadata row count — registration must not launch a scan
-        # job over an arbitrarily large layout just for a message
-        from mutable_spark.plans.planner import parquet_row_count
-
-        n = parquet_row_count(path)
+        # the footer row count registration read — no scan job over an
+        # arbitrarily large layout just for a message
+        n = eng.catalog.record(table).rows
         if n is None:
             # unreadable/unknown footers: say so rather than undercount
             return f"registered {table} from {path} (parquet-backed)"
@@ -251,9 +249,12 @@ def main(argv: list[str] | None = None) -> int:
                 table_backing_path,
             )
 
+            from mutable_spark.plans.planner import parquet_row_count
+
             for t in TABLE_NAMES:
                 if t not in eng.catalog._db():
-                    eng.register(t, load_table(spark, sf_dir, t))
+                    rows = parquet_row_count(f"{sf_dir.rstrip('/')}/{t}.parquet")
+                    eng.register(t, load_table(spark, sf_dir, t), rows)
                     # parquet-backed registration: CREATE INDEX on a loaded
                     # table builds a real file-zone index over the layout
                     eng.catalog.record(t).path = table_backing_path(spark, sf_dir, t)

@@ -43,6 +43,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from mutable_spark import staging
+from mutable_spark.plans.planner import parquet_row_count
 
 if TYPE_CHECKING:  # the dialect's engine imports this module
     from mutable_spark.dialect import ast_nodes as A
@@ -179,14 +180,15 @@ def _arrow_parse(
 
 def import_dsv(
     spark: SparkSession, stmt: A.ImportDSVStmt, schema: T.StructType, limits: dict[str, int]
-) -> DataFrame:
+) -> tuple[DataFrame, int | None]:
     """The rows of the IMPORT ``stmt``, CHAR(n) ``limits`` applied, served
-    from a parquet store staged once per (source files, options). HAS HEADER
-    and SKIP HEADER both consume each file's first line (with an explicit
-    schema the header names are ignored, matching the reference where the
-    declared table schema always wins). The store is a layout choice, never
-    a correctness layer: when it cannot be built the CSV-backed frame is
-    returned."""
+    from a parquet store staged once per (source files, options), and their
+    count read from the store's footers. HAS HEADER and SKIP HEADER both
+    consume each file's first line (with an explicit schema the header names
+    are ignored, matching the reference where the declared table schema
+    always wins). The store is a layout choice, never a correctness layer:
+    when it cannot be built the CSV-backed frame is returned, with the count
+    ``None`` (counting it would take a Spark job)."""
 
     def parsed_by_spark() -> DataFrame:
         df = read_dsv(
@@ -204,7 +206,7 @@ def import_dsv(
     # the files Spark reads: it skips names starting with "_" or "."
     files = [f for f in staging.source_files([stmt.path]) if not f.name.startswith(("_", "."))]
     if not files:
-        return parsed_by_spark()
+        return parsed_by_spark(), None
 
     def write(tmp: str) -> None:
         size = sum(f.stat().st_size for f in files)
@@ -225,5 +227,5 @@ def import_dsv(
     try:
         dest = staging.staged(f"import-{Path(stmt.path).name}", files, recipe, write)
     except Exception:
-        return parsed_by_spark()
-    return spark.read.schema(schema).parquet(dest)
+        return parsed_by_spark(), None
+    return spark.read.schema(schema).parquet(dest), parquet_row_count(dest)

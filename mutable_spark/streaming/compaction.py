@@ -410,7 +410,7 @@ def compact_bpe_rules(
         .groupBy("w")
         .agg(F.sum("cnt").alias("freq"))
     )
-    rules, _ = bpe_rounds_from_vocab(words)
+    rules, _ = bpe_rounds_from_vocab(words, symbols=False)
     return local_frame(
         spark, rules, "round long, sym_a string, sym_b string, pair_count long"
     )

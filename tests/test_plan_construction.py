@@ -6,7 +6,10 @@ turns off PySpark's per-Column call-site capture (each wrapped Column
 method and `F.col` otherwise adds ~6 calls), and the compiler binds a
 source with one `toDF`. The budgets pin the counts of a warm statement on
 a small table: the measured count plus 25%. With call-site capture on,
-UPDATE, DELETE and SELECT cost over three times their budget."""
+UPDATE, DELETE and SELECT cost over three times their budget.
+
+A grouped ORDER BY over tables whose row bounds are small sorts in one
+partition; the Spark jobs of those reads are pinned here too."""
 
 from __future__ import annotations
 
@@ -19,8 +22,12 @@ from pyspark.sql import functions as F
 from mutable_spark import registry
 from mutable_spark.catalog import load_tables
 from mutable_spark.dialect import Engine
+from mutable_spark.dialect.compiler import _ONE_PARTITION_SORT_ROWS
 from mutable_spark.dialect.sema import SemaError
+from mutable_spark.plans.dialect_tpch import _BENCH_DIR, _data_dir, _engine_with_schema
+from perfbench.workloads import _READS
 from tests.conftest import SF_DIR
+from tests.test_table_load import _jobs
 
 _STATEMENTS = {
     "create": "CREATE TABLE r{n} (id INT(4) PRIMARY KEY, name CHAR(5), val DOUBLE)",
@@ -36,7 +43,7 @@ _BUDGET = {
     "insert": 63,  # 51
     "update": 120,  # 96
     "delete": 82,  # 66
-    "select": 82,  # 66
+    "select": 82,  # 67
 }
 
 
@@ -88,6 +95,78 @@ def test_warm_tpch_build_stays_within_round_trip_budget(spark, round_trips):
     before = round_trips[0]
     q3(spark, SF_DIR)
     assert round_trips[0] - before <= 6  # 5
+
+
+# --- grouped ORDER BY: one partition under small row bounds ------------------
+#: the two reads of the DML benchmark workload and TPC-H Q1's script
+_SORTED_READS = {
+    "dml_join": _READS[0].format(date="d'1998-06-01'"),
+    "dml_lineitem": _READS[1].format(date="d'1998-06-01'"),
+    "script_q1": (_BENCH_DIR / "q1.sql").read_text().split(";")[1],
+}
+#: the table whose row bound sizes each read's sort
+_GROUPED_TABLE = {"dml_join": "Orders", "dml_lineitem": "Lineitem", "script_q1": "Lineitem"}
+#: Spark jobs of one read, with AQE on and off. The range sort cost two
+#: more with AQE on (5, 4, 4) and one more with it off (3, 2, 2): the
+#: boundary-sampling job and the stage behind its exchange
+_JOBS = {
+    ("dml_join", True): 3,
+    ("dml_lineitem", True): 2,
+    ("script_q1", True): 2,
+    ("dml_join", False): 2,
+    ("dml_lineitem", False): 1,
+    ("script_q1", False): 1,
+}
+
+
+@pytest.fixture(scope="module")
+def imported(spark):
+    """Orders and Lineitem IMPORTed from the sf0.001 DSV export: the
+    Arrow-parsed stores give exact row bounds (1,500 and 6,000)."""
+    data = _data_dir(spark, SF_DIR)
+    eng = _engine_with_schema(spark)
+    for table in ("Orders", "Lineitem"):
+        eng.execute(f'IMPORT INTO {table} DSV "{data}/{table.lower()}" DELIMITER "|"')
+    return eng
+
+
+@pytest.fixture(params=[True, False], ids=["aqe_on", "aqe_off"])
+def aqe(spark, request):
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(request.param).lower())
+    yield request.param
+    spark.conf.set(key, old)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("read", list(_SORTED_READS))
+def test_small_grouped_sort_runs_in_one_partition(spark, imported, aqe, read):
+    imported.execute(_SORTED_READS[read]).collect()  # warm
+    df = imported.execute(_SORTED_READS[read])  # a fresh plan reuses no shuffle
+    before = _jobs(spark)
+    rows = [tuple(r) for r in df.collect()]
+    jobs = _jobs(spark) - before
+    assert "rangepartitioning" not in _plan(df)
+    assert jobs <= _JOBS[read, aqe], f"{jobs} jobs, budget {_JOBS[read, aqe]}"
+    keys = [r[: 2 if read != "dml_join" else 1] for r in rows]
+    assert len(keys) > 1 and keys == sorted(keys)
+
+
+@pytest.mark.parametrize("rows", [_ONE_PARTITION_SORT_ROWS + 1, None], ids=["over", "unknown"])
+def test_large_or_unknown_bound_keeps_the_range_sort(imported, monkeypatch, rows):
+    for read, table in _GROUPED_TABLE.items():
+        with monkeypatch.context() as m:
+            m.setattr(imported.catalog.record(table), "rows", rows)
+            assert "rangepartitioning" in _plan(imported.execute(_SORTED_READS[read]))
+
+
+def test_limit_keeps_the_top_k_sort(imported):
+    df = imported.execute(_SORTED_READS["script_q1"] + " LIMIT 3")
+    assert "TakeOrderedAndProject" in _plan(df)
 
 
 # --- the session and error contracts ---------------------------------------

@@ -6,28 +6,26 @@ estimates (SpnEstimator wired in)."""
 from __future__ import annotations
 
 from mutable_spark.dialect import Engine
+from mutable_spark.dialect.compiler import _ONE_PARTITION_SORT_ROWS
+from mutable_spark.session import local_frame
 from mutable_spark.shell import learn_spns
 
 
 def _engine(spark) -> Engine:
+    """Tables over driver rows: their local relations give Catalyst a
+    ``maxRows``, so each table's row bound is its exact size."""
     eng = Engine(spark)
     eng.execute("CREATE DATABASE spnshell")
     eng.execute("USE spnshell")
     eng.register(
         "r",
-        spark.createDataFrame(
-            [(i, float(i % 7)) for i in range(200)], "key int, val double"
-        ),
+        local_frame(spark, [(i, float(i % 7)) for i in range(200)], "key int, val double"),
     )
     eng.register(
         "s",
-        spark.createDataFrame(
-            [(i % 50, i) for i in range(1000)], "rkey int, sval int"
-        ),
+        local_frame(spark, [(i % 50, i) for i in range(1000)], "rkey int, sval int"),
     )
-    eng.register(
-        "names", spark.createDataFrame([("a",), ("b",)], "label string")
-    )
+    eng.register("names", local_frame(spark, [("a",), ("b",)], "label string"))
     return eng
 
 
@@ -80,48 +78,48 @@ def test_plan_and_cardinalities_commands(spark, tmp_path):
     assert "BroadcastHashJoin" in ptext or "broadcast" in ptext.lower()
 
 
-def test_estimator_driven_sort_strategy(spark):
-    """r12: a grouped ORDER BY whose group-key distinct product the
-    learned SPN bounds below _TINY_SORT_ROWS plans a single-partition
-    sort — no rangepartitioning exchange, no boundary-sampling job.
-    Without models (no planner) the scale-safe range sort stays, and a
+def _plan(eng, q: str) -> str:
+    return eng.execute(q)._jdf.queryExecution().executedPlan().toString()
+
+
+def test_row_bound_sort_strategy(spark):
+    """A grouped ORDER BY whose group count the tables' row bounds cap at
+    ``_ONE_PARTITION_SORT_ROWS`` sorts in one partition: no
+    rangepartitioning exchange, no boundary-sampling job. A bound over
+    the cap, or an unknown one, keeps the scale-safe range sort, and a
     LIMIT query keeps TakeOrderedAndProject either way."""
     eng = _engine(spark)
+    r = eng.catalog.record("r")
+    assert r.rows == 200
     q = "SELECT val, COUNT(*) AS n FROM r GROUP BY val ORDER BY val"
 
-    # no planner yet: range sort
-    p0 = eng.execute(q)._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in p0
-
-    learn_spns(eng)  # r.val has 7 distinct values -> tiny
     df = eng.execute(q)
     p1 = df._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in p1
-    assert "Coalesce 1" in p1 or "Coalesce(1)" in p1 or "coalesce" in p1.lower()
-    # values unchanged and ordered
-    vals = [r.val for r in df.collect()]
+    assert "Coalesce 1" in p1
+    vals = [row.val for row in df.collect()]
     assert vals == sorted(vals) and len(vals) == 7
 
-    # a SAMPLED model (n_rows > SAMPLE_CAP) keeps the range sort — a
-    # bounded sample cannot bound a long-tailed key's distinct count
-    from mutable_spark.plans.spn import SAMPLE_CAP
+    # an expression key over a bounded table is bounded by that table
+    p2 = _plan(eng, "SELECT key % 3 AS k, COUNT(*) AS n FROM r GROUP BY key % 3 AS k ORDER BY k")
+    assert "rangepartitioning" not in p2
 
-    real_n = eng.spn_models["r"].n_rows
-    eng.spn_models["r"].n_rows = SAMPLE_CAP + 1
-    p_sampled = eng.execute(q)._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in p_sampled
-    eng.spn_models["r"].n_rows = real_n
+    # a key over two tables: the product of both bounds (200 × 1000)
+    join = "SELECT val, sval, COUNT(*) AS n FROM r, s WHERE r.key = s.rkey GROUP BY val, sval ORDER BY val, sval"
+    assert "rangepartitioning" not in _plan(eng, join)
+    eng.catalog.record("s").rows = _ONE_PARTITION_SORT_ROWS // 200 + 1
+    assert "rangepartitioning" in _plan(eng, join)
 
-    # a non-designator group key keeps the range sort (gate is conservative)
-    p2 = (
-        eng.execute("SELECT key % 3 AS k, COUNT(*) AS n FROM r GROUP BY key % 3 AS k ORDER BY k")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "rangepartitioning" in p2
+    # over the cap, or unknown: range sort
+    for rows in (_ONE_PARTITION_SORT_ROWS + 1, None):
+        r.rows = rows
+        assert "rangepartitioning" in _plan(eng, q)
+    r.rows = 200
+
+    # a FROM-subquery source has no bound
+    sub = "SELECT val, COUNT(*) AS n FROM (SELECT val FROM r) AS t GROUP BY val ORDER BY val"
+    assert "rangepartitioning" in _plan(eng, sub)
 
     # LIMIT keeps the top-k sink, never a 1-partition global sort
-    p3 = (
-        eng.execute("SELECT val, COUNT(*) AS n FROM r GROUP BY val ORDER BY val LIMIT 3")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    p3 = _plan(eng, "SELECT val, COUNT(*) AS n FROM r GROUP BY val ORDER BY val LIMIT 3")
     assert "TakeOrderedAndProject" in p3

@@ -127,7 +127,7 @@ def test_failed_relayout_and_import_fall_back_to_source(spark, root, tmp_path, m
     assert _copies(root) == []
 
     # an IMPORT whose store write fails, on either parse path: the
-    # CSV-backed frame comes back
+    # CSV-backed frame comes back, with no row count
     from mutable_spark.dialect.engine import Engine
 
     eng = Engine(spark)
@@ -143,7 +143,8 @@ def test_failed_relayout_and_import_fall_back_to_source(spark, root, tmp_path, m
         stmt = parse(f'IMPORT INTO t DSV "{dsv_file}" DELIMITER "|"')
         with monkeypatch.context() as m:
             m.setattr(pq, "write_table", no_write)
-            assert dsv.import_dsv(spark, stmt, eng.catalog.record("t").schema, {}) is boom
+            df, rows = dsv.import_dsv(spark, stmt, eng.catalog.record("t").schema, {})
+            assert df is boom and rows is None
     assert _copies(root) == []
 
 
